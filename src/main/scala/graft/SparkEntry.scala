@@ -51,7 +51,7 @@ object SparkEntry {
 
     // S1: parquet scan with filename glob (ref atenciones_urgencia.py:4-11)
     "q_s1_scan_glob" -> ((s, dir) => {
-      s.read.option("pathGlobFilter", "lineitem*.parquet").parquet(dir)
+      Tables.parquet(s, dir, Map("pathGlobFilter" -> "lineitem*.parquet"))
         .agg(count(lit(1)).as("n_rows"), Exact.dsum(col("l_quantity")).as("sum_qty"))
     }),
 
@@ -75,11 +75,11 @@ object SparkEntry {
 
     "q_dpp_dayslice" -> ((s, dir) => {
       val (factsPath, daysPath) = Tables.eventsByDay(s, dir)
-      val facts = s.read.parquet(factsPath)
+      val facts = Tables.parquet(s, factsPath)
       // 1-day-in-30 slice: rare enough that the pruned scan touches ~3%
       // of the partitions — the regime where DPP's fixed cost (dim
       // subquery + broadcast) is actually bought back by bytes not read
-      val dim = s.read.parquet(daysPath).filter(pmod(col("day"), lit(30)) === 3)
+      val dim = Tables.parquet(s, daysPath).filter(pmod(col("day"), lit(30)) === 3)
       facts.join(dim, "day")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), Exact.dsum(col("value")).as("sum_value"))

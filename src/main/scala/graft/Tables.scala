@@ -18,7 +18,85 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  // ------------------------------------------------------ parquet reads
+
+  /** `spark.read.options(options).parquet(path)`, with the parquet
+    * schema inferred once per file set instead of once per read.
+    *
+    * Inference (`ParquetFileFormat.inferSchema` → mergeSchemasInParallel)
+    * launches a one-task footer-reading job on EVERY read, and at
+    * contract sizes that job is most of a plain query's construction:
+    * all 11 construction jobs of a traced perfbench analytics pass
+    * (12 queries) were inference. The first read of a file set
+    * infers and caches the schema; later reads hand it back through
+    * `.schema(...)`, which Spark takes instead of inferring. The plans
+    * are identical: `HadoopFsRelation` makes the schema nullable on
+    * both paths, and a partitioned input's partition columns keep the
+    * types the first inference gave them.
+    *
+    * The cache holds schemas only — no data — and is keyed by what
+    * inference depends on, so a changed input is inferred again:
+    *  - the listed data files (path|size|mtime of each, recursively,
+    *    the fingerprint [[eventsByDay]] names its cache by): a rewrite
+    *    or an added file re-infers;
+    *  - the reader options (e.g. `pathGlobFilter`, `mergeSchema`);
+    *  - the session confs that change the parquet→Spark type mapping
+    *    (`inferenceConfs`).
+    * A path that lists nothing (a missing path) bypasses the cache, so
+    * Spark reports it exactly as before. */
+  def parquet(spark: SparkSession, path: String,
+              options: Map[String, String] = Map.empty): DataFrame = {
+    val reader = spark.read.options(options)
+    fileSetSignature(spark, path) match {
+      case None => reader.parquet(path)
+      case Some(sig) =>
+        val key = (path, options, inferenceConfs.map(spark.conf.getOption))
+        Option(schemas.get(key)) match {
+          case Some((`sig`, schema)) => reader.schema(schema).parquet(path)
+          case _ =>
+            val df = reader.parquet(path)
+            schemas.put(key, sig -> df.schema)
+            df
+        }
+    }
+  }
+
+  /** Session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    // partition column types of a partitioned directory
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  /** (path, options, conf values) → (file-set signature, schema). One
+    * entry per read site, replaced when its files change. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Map[String, String], Seq[Option[String]]), (String, StructType)]()
+
+  /** SHA-256 over `path|size|mtime` of every file under `path` (a file,
+    * a directory or a glob), in path order; None when nothing matches. */
+  private def fileSetSignature(spark: SparkSession, path: String): Option[String] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.toString).flatMap(files)
+      else Seq(st)
+    Option(fs.globStatus(p)).filter(_.nonEmpty).map { roots =>
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      roots.toSeq.sortBy(_.getPath.toString).flatMap(files).foreach { f =>
+        md.update(s"${f.getPath}|${f.getLen}|${f.getModificationTime}\n"
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+      md.digest().map("%02x".format(_)).mkString
+    }
+  }
 
   /** `df` redistributed to the session's shuffle parallelism — but ONLY
     * when its plan arrives narrower (r17, guide §2.4 stragglers).
@@ -115,23 +193,14 @@ object Tables {
     * so any query over it shares its oracle with the flat table. */
   def eventsByDay(spark: SparkSession, sfDir: String): (String, String) = synchronized {
     // cache key = fingerprint of the LISTED DATA FILES (path|size|mtime
-    // per file), not the top-level directory entry: a Spark-written
-    // events.parquet is a directory whose entry metadata survives an
-    // in-place part-file rewrite, so a dir-inode fingerprint would
-    // silently serve a stale partitioned copy after a regeneration.
-    // Distinct paths can't collide the way a lossy character-class
-    // sanitization could.
+    // per file, [[fileSetSignature]]), not the top-level directory
+    // entry: a Spark-written events.parquet is a directory whose entry
+    // metadata survives an in-place part-file rewrite, so a dir-inode
+    // fingerprint would silently serve a stale partitioned copy after a
+    // regeneration. Distinct paths can't collide the way a lossy
+    // character-class sanitization could.
     val src = new java.io.File(s"$sfDir/events.parquet")
-    def dataFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .sortBy(_.getName).toSeq.flatMap(dataFiles)
-      else Seq(f)
-    val sig = dataFiles(src)
-      .map(f => s"${f.getAbsolutePath}|${f.length}|${f.lastModified}").mkString("\n")
-    val fp = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(
-        s"${src.getAbsolutePath}\n$sig").toLong & 0xffffffffL)
+    val fp = fileSetSignature(spark, src.getAbsolutePath).fold("missing")(_.take(16))
     val tmpDir = sys.props.getOrElse("java.io.tmpdir", "/tmp")
     val base = s"$tmpDir/graft_dpp_$fp"
     val facts = s"$base/events_by_day"

@@ -105,7 +105,22 @@ object Timing {
     * next rep. Each rep reconstructs its plans from the parquet
     * inputs, so nothing semantic is lost — this only stops state from
     * leaking between measurements. Opt out (to reproduce the old
-    * shared-state behaviour) with SPARK_GRAFT_BENCH_ISOLATE=0. */
+    * shared-state behaviour) with SPARK_GRAFT_BENCH_ISOLATE=0.
+    *
+    * Contract for callers: NO session-level persisted data survives a
+    * rep. Every cached table/plan and every persisted or checkpointed
+    * RDD in the SparkContext is dropped — including one a caller
+    * warmed before measuring — so a measurement never reads blocks an
+    * earlier rep or query left behind.
+    *
+    * Two per-JVM caches are deliberately NOT residue and survive:
+    * [[Tables.parquet]]'s schema cache and Spark's generated-code cache
+    * (sized by [[GraftSession.configure]]). Neither holds a data block:
+    * one maps a file set to its schema, the other source text to a
+    * compiled class. The untimed first execution of a query (a warm-up
+    * or check pass) fills them, and a user re-running a query pays
+    * neither inference nor compilation again, so a measurement that
+    * paid them every rep would time a cost no repeat query has. */
   private val isolateReps: Boolean =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "1") != "0"
 

@@ -81,7 +81,7 @@ object Bucketing {
     finally in.close()
     if (found != bucketSpec(numBuckets, key, sortCols)) return false
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val ddl = spark.read.parquet(path).schema.toDDL
+    val ddl = graft.Tables.parquet(spark, path).schema.toDDL
     val sorted =
       if (sortCols.nonEmpty) s"SORTED BY (${sortCols.mkString(", ")})" else ""
     spark.sql(

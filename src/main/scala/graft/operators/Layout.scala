@@ -106,7 +106,7 @@ object Layout {
     * stats skip everything outside the box's z-range. The oracle runs
     * the same slice on the plain table — layout is results-invisible. */
   def zorderSlice(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(ensureZOrderedLineitem(spark, sfDir))
+    graft.Tables.parquet(spark, ensureZOrderedLineitem(spark, sfDir))
       .filter(col("l_partkey").between(0, 24) &&
         col("l_suppkey").between(0, 1))
       .groupBy("l_returnflag")

@@ -118,10 +118,11 @@ object StreamingOps {
   /** Read the events parquet as a (bounded) stream — used by tests to
     * drive the streaming operators synchronously via the memory sink.
     * Streaming sources need an explicit schema; it is inferred from
-    * the files present at start (one driver-side footer read), so the
-    * nanos-long and timestamp[us] testdata generations both work. */
+    * the files present at start (one footer read per file set, through
+    * [[graft.Tables.parquet]]'s schema cache), so the nanos-long and
+    * timestamp[us] testdata generations both work. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
+    spark.readStream.schema(graft.Tables.parquet(spark, dir).schema).parquet(dir)
 
   /** Stateful per-user session counting via `mapGroupsWithState`
     * (SURVEY §2.10: custom state beyond windowed aggs). State = (last
