@@ -18,13 +18,18 @@ import org.apache.spark.sql.SparkSession
   *   the resolved dtype via [[Tables.epochSeconds]]/[[Tables.eventTime]].
   */
 object GraftSession {
-  def apply(master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
-            appName: String = "graft"): SparkSession = configure(
-    SparkSession.builder().master(master).appName(appName)
-      // default only — configure() itself never touches it, so a caller's
-      // explicit shuffle.partitions (Bench/Verify's SPARK_GRAFT_CPUS) wins
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors.toString)).getOrCreate()
+  /** The local session every entrypoint and the test suite run on:
+    * [[configure]] plus [[localFs]] on `local[cores]`, with one
+    * shuffle partition per core. */
+  def local(cores: Int): SparkSession = local(cores, cores)
+
+  /** [[local]] with `shufflePartitions` reduce partitions instead of
+    * one per core (StressSmoke's cluster-like 200). */
+  def local(cores: Int, shufflePartitions: Int): SparkSession =
+    localFs(configure(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions)))
+      .getOrCreate()
 
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .withExtensions(new GraftExtensions)
@@ -70,24 +75,23 @@ object GraftSession {
   // it is a storage-profile decision, not an engine default; local
   // entrypoints opt in via [[localFs]].
 
-  /** Local-filesystem storage profile, applied by the LOCAL bench /
-    * probe / verify entrypoints on top of [[configure]] — not by the
-    * shared builder (r16 ADVICE: the threshold is a storage-profile
-    * decision, not an engine default).
+  /** Local-filesystem storage profile, applied on top of [[configure]]
+    * by [[local]] (every local entrypoint) — not by the shared builder
+    * (r16 ADVICE: the threshold is a storage-profile decision, not an
+    * engine default).
     *
     * Partition discovery above the threshold launches a Spark job
     * with ONE TASK PER DIRECTORY; on a local FS the per-task overhead
-    * dwarfs the listing (measured by [[DppSplit]] on a 3,000-day
-    * partitioned copy: 5.9 s as a listing job vs 0.38 s driver-side —
-    * the whole r15 q_dpp_dayslice x100 "anomaly" was this job, not
-    * the pruned scan, which beats the full scan once the table handle
+    * dwarfs the listing (measured on a 3,000-day partitioned copy:
+    * 5.9 s as a listing job vs 0.38 s driver-side — COVERAGE.md's
+    * partition-pruned scan row, DPP_SPLIT_r16.json / _r17.json; the
+    * whole r15 q_dpp_dayslice x100 "anomaly" was this job, not the
+    * pruned scan, which beats the full scan once the table handle
     * exists). Driver-side listing is right up to ~10k dirs HERE; on
     * an object store a 10k-prefix serial driver listing is the known
     * slow pattern, so a cluster deployment keeps Spark's default (or,
     * better, uses catalog tables whose partitions come from the
-    * metastore and are never re-listed per query). Override with
-    * SPARK_GRAFT_LIST_THRESHOLD for listing A/B measurements. */
+    * metastore and are never re-listed per query). */
   def localFs(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-      sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "10000"))
+    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", 10000L)
 }

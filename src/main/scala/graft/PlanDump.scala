@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes `explain("formatted")` for the given queries to
@@ -21,11 +20,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.localFs(GraftSession.configure(
-      SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32"))).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     Files.createDirectories(outDir)
     val mode = ExplainMode.fromString("formatted")
     names.foreach { name =>

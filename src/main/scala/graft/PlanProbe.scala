@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints a registered query's AQE-FINALIZED physical plan — after one
   * execution, so runtime decisions (`ReusedExchange`/stage reuse, AQE
   * join conversions, skew splits, coalesced partitions) are visible.
@@ -16,12 +14,7 @@ object PlanProbe {
     val name = args.headOption.getOrElse(
       sys.error("usage: PlanProbe <queryName> [sfDir]"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = GraftSession.localFs(GraftSession.configure(
-      SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", 32))
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     val df = SparkEntry.queries(name)(spark, sfDir)
     // drive THIS dataset's own QueryExecution: a write (or .rdd /
     // .foreach, which plan a separate rddQueryExecution) would leave

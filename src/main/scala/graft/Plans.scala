@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `explain("formatted")` for the headline queries to PLANS.md —
@@ -97,10 +96,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = GraftSession.localFs(GraftSession.configure(
-      SparkSession.builder().master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4"))).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     val mode = ExplainMode.fromString("formatted")
     val sections = headline.map { name =>
       val plan = SparkEntry.queries(name)(spark, sfDir)

@@ -279,9 +279,10 @@ object StressSmoke {
       // checkpointed like the canonical query: the ledger feeds two
       // consumers (banding + history scoring) — unpersisted, the
       // history shingle→minhash pipeline ran TWICE per rep, which the
-      // r16 MinhashSplit leg profile measured as ~4 s of the ~20 s
-      // x100 total (in production the ledger is a persisted parquet
-      // table, so the rebuild isn't the operator's cost either way)
+      // r16 leg profile measured as ~4 s of the ~20 s x100 total
+      // (MINHASH_SPLIT_r16.json; in production the ledger is a
+      // persisted parquet table, so the rebuild isn't the operator's
+      // cost either way)
       val ledger = Dedup.minhashLedgerOf(
         docs.filter(rid < 250), "doc_id", "text", w = 3)
         .localCheckpoint()
@@ -467,12 +468,7 @@ object StressSmoke {
     // queries at the bench width and separate fixed per-stage task
     // overhead from actual scan/shuffle growth.
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_STRESS_SHUFFLE", "200").toInt
-    val spark = GraftSession.localFs(GraftSession.configure(
-      SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", shuffleParts))
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32, shuffleParts)
     if (!new java.io.File(s"$work/lineitem.parquet").exists()) {
       val t0 = System.nanoTime()
       generate(spark, src, work, reps)

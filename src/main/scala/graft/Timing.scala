@@ -104,8 +104,7 @@ object Timing {
     * timed regions; blocking, so no async eviction bleeds into the
     * next rep. Each rep reconstructs its plans from the parquet
     * inputs, so nothing semantic is lost — this only stops state from
-    * leaking between measurements. Opt out (to reproduce the old
-    * shared-state behaviour) with SPARK_GRAFT_BENCH_ISOLATE=0.
+    * leaking between measurements.
     *
     * Contract for callers: NO session-level persisted data survives a
     * rep. Every cached table/plan and every persisted or checkpointed
@@ -121,10 +120,7 @@ object Timing {
     * or check pass) fills them, and a user re-running a query pays
     * neither inference nor compilation again, so a measurement that
     * paid them every rep would time a cost no repeat query has. */
-  private val isolateReps: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "1") != "0"
-
-  def releaseResidue(spark: SparkSession): Unit = if (isolateReps) {
+  def releaseResidue(spark: SparkSession): Unit = {
     // registry first (async eviction), then a BLOCKING unpersist of
     // every persistent RDD — which includes the cached plans' column
     // buffers — so no eviction overlaps the next timed region

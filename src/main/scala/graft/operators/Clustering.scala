@@ -54,8 +54,8 @@ object Clustering {
     * [[graft.functions.KMeansArgminExpr]], which carries the centroid
     * matrix as ONE reference object outside the expression tree — the
     * plan stays O(1) in k, which is what a real SemDeDup pass
-    * (k in the thousands) needs. Measured (KmeansCalibrate, sf0.1
-    * embeddings, iters=0, assignment only): the literal arm's
+    * (k in the thousands) needs. Measured (COVERAGE.md's k-means row;
+    * sf0.1 embeddings, iters=0, assignment only): the literal arm's
     * end-to-end time grows with k — 0.8 s at k=8, 1.4 s at k=64,
     * 4.7 s at k=256 (codegen + evaluation of the k·dim expression
     * tree dominates; only 5k rows flow) — while the fused arm holds

@@ -443,11 +443,10 @@ object Dedup {
       .select(col("doc"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  /** Probe access ([[graft.MinhashSplit]]): the banded candidate join
-    * + distinct as a standalone leg — exactly the candHist stage of
+  /** The banded candidate join + distinct — the candHist stage of
     * [[applyMinhashIncremental]]. */
-  private[graft] def bandCandidates(sigsA: DataFrame, sigsB: DataFrame,
-                                    numHashes: Int, bands: Int): DataFrame = {
+  private def bandCandidates(sigsA: DataFrame, sigsB: DataFrame,
+                             numHashes: Int, bands: Int): DataFrame = {
     val a = detBands(sigsA, numHashes, bands)
     val b = detBands(sigsB, numHashes, bands)
     a.select(col("doc").as("doc_a"), col("band"), col("key"))
@@ -455,12 +454,6 @@ object Dedup {
         Seq("band", "key"))
       .select("doc_a", "doc_b").distinct()
   }
-
-  /** Probe access ([[graft.MinhashSplit]]): the signature-agreement
-    * scorer as a standalone leg. */
-  private[graft] def scoreCandidates(cand: DataFrame, sigsA: DataFrame,
-                                     sigsB: DataFrame, numHashes: Int): DataFrame =
-    estimateScored(cand, sigsA, sigsB, numHashes)
 
   /** Score candidate pairs by signature-component agreement (the
     * [[EstimateVerify]] kernel), joining wide signature tables keyed
@@ -533,9 +526,9 @@ object Dedup {
     // survivor-signature semi-join and the final cluster-apply) and
     // freshSigs feeds THREE (self banding + both sides of self
     // scoring) — unpersisted, the history anti-join re-ran per
-    // consumer (the r16 MinhashSplit leg profile measured the gap as
-    // ~1/3 of the x100 total). Both are batch-bounded like newSigs;
-    // lazy checkpoints keep construction side-effect-free.
+    // consumer (the r16 leg profile measured the gap as ~1/3 of the
+    // x100 total, MINHASH_SPLIT_r16.json). Both are batch-bounded like
+    // newSigs; lazy checkpoints keep construction side-effect-free.
     val fresh = newDocs.join(dupVsHistory, Seq(idCol), "left_anti")
       .localCheckpoint(eager = false)
     val freshSigs = newSigs
@@ -563,37 +556,56 @@ object Dedup {
     * `maxIter` rounds — a silently-truncated propagation would return
     * wrong (split) clusters.
     *
-    * Integral ids take the RDD-level loop ([[ccLongRdd]], r18): the
-    * former per-round DataFrame materialization paid Catalyst
-    * analysis/optimization plus an eager-localCheckpoint job storm on
-    * EVERY round of EVERY execution (q_dedup_semantic_apply: 59 jobs,
-    * ~40% of its wall). The RDD loop plans nothing per round, keeps
-    * every label/edge RDD hash-partitioned by node so all per-round
-    * joins are narrow, and runs one job per round (the convergence
-    * count). Non-integral ids (string keys) keep the plan-level loop,
-    * which has no dtype constraints. */
+    * One loop, [[ccLongRdd]], serves every id type. Integral ids of one
+    * type go straight in. Any other ids (strings, decimals, two
+    * different integral widths) first take an order-preserving dense
+    * index: the distinct non-null ids of both columns, sorted and
+    * numbered by `zipWithIndex`. Index order is id order, so a
+    * component's min index is its min id, and mapping the labels back
+    * gives the same min-id clusters, in the two columns' widened type.
+    *
+    * A pair with a null id is dropped: it contributes no edge, and a
+    * node seen only in such pairs gets no label. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 50): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val dtA = pairs.schema(aCol).dataType
     val dtB = pairs.schema(bCol).dataType
     val integral = Seq(ByteType, ShortType, IntegerType, LongType)
     if (integral.contains(dtA) && dtA == dtB) ccLongRdd(pairs, aCol, bCol, maxIter, dtA)
-    else ccPlanLoop(pairs, aCol, bCol, maxIter)
+    else {
+      val ids = pairs.select(col(aCol).as("id"))
+        .union(pairs.select(col(bCol).as("id")))
+        .na.drop().distinct().orderBy("id")
+      val idType = ids.schema("id").dataType
+      // materialized once: read four times (both pair ends, both
+      // label ends), partly by concurrently running stages
+      val index = pairs.sparkSession.createDataFrame(
+        ids.rdd.zipWithIndex().map { case (r, i) => Row(r.get(0), i) },
+        StructType(Seq(StructField("id", idType, nullable = false),
+          StructField("idx", LongType, nullable = false))))
+        .localCheckpoint()
+      def keyed(id: String, idx: String) =
+        index.select(col("id").as(id), col("idx").as(idx))
+      val dense = pairs
+        .select(col(aCol).cast(idType).as("_a"), col(bCol).cast(idType).as("_b"))
+        .join(keyed("_a", "a"), "_a").join(keyed("_b", "b"), "_b")
+      ccLongRdd(dense, "a", "b", maxIter, LongType)
+        .join(keyed("_node", "node"), "node")
+        .join(keyed("_cluster", "cluster"), "cluster")
+        .select(col("_node").as("node"), col("_cluster").as("cluster"))
+    }
   }
 
-  /** RDD arm of [[connectedComponents]] for integral ids (every dedup
-    * id in this library): identical smallest-label-propagation +
-    * pointer-doubling semantics and identical output (node, cluster)
-    * in the input id dtype, but the loop iterates over
-    * hash-partitioned `RDD[(Long, Long)]`s — zero Catalyst work per
-    * round, one convergence-count job per round, narrow joins
-    * throughout (edges and labels share one HashPartitioner), and each
-    * round's blocks are unpersisted as soon as the next round lands
-    * (the plan-level loop's checkpoint blocks lingered until context
-    * GC — r17's block-manager-pressure suspect). Null ids cannot match
-    * any join key and are dropped, as the join-based loop effectively
-    * does. */
+  /** The loop behind [[connectedComponents]], over integral ids:
+    * smallest-label propagation + pointer doubling on
+    * hash-partitioned `RDD[(Long, Long)]`s, output (node, cluster) in
+    * the input id dtype. Zero Catalyst work per round, one
+    * convergence-count job per round, narrow joins throughout (edges
+    * and labels share one HashPartitioner), and each round's blocks are
+    * unpersisted as soon as the next round lands. A pair with a null id
+    * is dropped. */
   private def ccLongRdd(pairs: DataFrame, aCol: String, bCol: String,
                         maxIter: Int,
                         idType: org.apache.spark.sql.types.DataType): DataFrame = {
@@ -604,9 +616,9 @@ object Dedup {
     val sess = pairs.sparkSession
     // one pass over the (possibly expensive) pair plan; symmetrize in
     // the same pass, dedup once, then right-size round parallelism to
-    // the edge count exactly like the plan loop did: label propagation
-    // is latency-bound on small cluster graphs and shuffle-bound on
-    // large ones; partitions ∝ edges serves both regimes
+    // the edge count: label propagation is latency-bound on small
+    // cluster graphs and shuffle-bound on large ones; partitions ∝
+    // edges serves both regimes
     val raw: RDD[(Long, Long)] = pairs
       .select(col(aCol).cast("long"), col(bCol).cast("long"))
       .na.drop()
@@ -678,99 +690,13 @@ object Dedup {
     }
     val out = sess.createDataFrame(
       labels.map { case (n, l) => org.apache.spark.sql.Row(n, l) },
-      // nullable like the plan loop's aggregate output, so the Verify
-      // parquet dump keeps the same optional-field schema it always had
+      // nullable, so the Verify parquet dump keeps the optional-field
+      // schema it always had
       StructType(Seq(StructField("node", LongType, nullable = true),
         StructField("cluster", LongType, nullable = true))))
     if (idType == LongType) out
     else out.select(col("node").cast(idType).as("node"),
       col("cluster").cast(idType).as("cluster"))
-  }
-
-  /** Plan-level arm of [[connectedComponents]] (non-integral ids):
-    * the pre-r18 DataFrame loop — one eager localCheckpoint per round,
-    * Catalyst planning per round. Kept because it has no id-dtype
-    * constraints; every id in this library is integral, so the hot
-    * paths never come here. */
-  private def ccPlanLoop(pairs: DataFrame, aCol: String, bCol: String,
-                         maxIter: Int): DataFrame = {
-    // symmetrize via explode, not union: a union's two branches would
-    // each re-evaluate the (possibly expensive) upstream pair plan
-    val edges0 = pairs.select(explode(array(
-      struct(col(aCol).as("src"), col(bCol).as("dst")),
-      struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-      .select("e.src", "e.dst").distinct()
-    // materialize ONCE (one pass over the possibly-expensive pair
-    // plan), truncate lineage so round k's plan doesn't embed rounds
-    // 0..k−1, then right-size round parallelism to the edge count:
-    // label propagation is latency-bound on small cluster graphs
-    // (every round is a scheduled job — width-32 stages of near-empty
-    // partitions dominate wall time) and shuffle-bound on large ones;
-    // partitions ∝ edges serves both regimes. Executor-local blocks
-    // are released by the ContextCleaner when the round frames go out
-    // of scope — nothing stays pinned after the result is consumed.
-    val staged = edges0.localCheckpoint()
-    val nEdges = staged.count()
-    val maxPar = staged.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
-    val p = math.max(1L, math.min(maxPar.toLong, nEdges / 20000L + 1L)).toInt
-    val edges = staged.repartition(p, col("dst")).localCheckpoint()
-    // round 0 folds into initialization: every node starts at
-    // min(own id, min neighbor id) — the symmetrized edge list carries
-    // every node as a dst, so no node is lost
-    var labels = edges.groupBy(col("dst"))
-      .agg(min(col("src")).as("_mn"))
-      .select(col("dst").as("node"), least(col("dst"), col("_mn")).as("label"))
-      .localCheckpoint()
-    var converged = false
-    var i = 1
-    while (!converged && i < maxIter) {
-      // one aggregation over (own label ∪ neighbors' labels) per round —
-      // a single shuffle on node. The pre-round label rides along as
-      // `old`, so the convergence probe needs no join back onto labels.
-      val prop = edges
-        .join(labels.withColumnRenamed("node", "dst"), "dst")
-        .select(col("src").as("node"), col("label"), lit(false).as("own"))
-        .union(labels.withColumn("own", lit(true)))
-        .groupBy("node").agg(
-          min(col("label")).as("label"),
-          min(when(col("own"), col("label"))).as("old"))
-      // pointer doubling (path shortcutting): label := label(label),
-      // looked up in the PREVIOUS round's materialized map — the label
-      // chain collapses geometrically, so convergence is O(log
-      // diameter) rounds instead of O(diameter) (a 10k-node path graph
-      // converges in ~15 rounds, not 10k — ScaleOpsSpec measures it).
-      // Engaged only from round 3: near-dup cluster graphs converge in
-      // 2-3 plain rounds, where the extra per-round join would be pure
-      // overhead; a graph still moving after 2 rounds has real depth
-      // and takes the jump from then on. Labels are always node ids of
-      // the same component (init picks self/neighbor ids; prop takes
-      // mins of labels; the jump follows a label to that node's own
-      // label), so min-label semantics and the final fixed point are
-      // unchanged: at convergence every adjacent pair has label(a) ≤
-      // label(b) and label(b) ≤ label(a), forcing one label per
-      // component, which must be its min id. The left join tolerates
-      // (and the coalesce keeps correct) a label with no node row,
-      // though the symmetrized edge list guarantees every label IS a
-      // node.
-      val jumped = if (i <= 2) prop else {
-        val jump = labels.select(col("node").as("label"), col("label").as("_ll"))
-        prop.join(jump, Seq("label"), "left")
-          .select(col("node"), coalesce(col("_ll"), col("label")).as("label"),
-            col("old"))
-      }
-      val updated = jumped
-        .localCheckpoint()   // eager: the round runs here, lineage cut
-      val changed = updated.filter(col("label") < col("old")).limit(1).count()
-      labels = updated.select("node", "label")
-      converged = changed == 0
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents: not converged after $maxIter rounds " +
-          "(component min-label diameter exceeds maxIter); raise maxIter")
-    labels.select(col("node"), col("label").as("cluster"))
   }
 
   /** Apply near-dup clustering: keep each cluster's min-id

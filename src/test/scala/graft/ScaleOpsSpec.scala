@@ -21,10 +21,9 @@ class ScaleOpsSpec extends SparkSpec {
     assert(salted === plain)
   }
 
-  test("connectedComponents RDD arm: int ids keep their dtype and match the plan-loop labels") {
-    // r18: integral ids take the RDD-level loop; the output must stay
-    // in the INPUT id dtype (the oracle dump compares schemas) and the
-    // labels must equal the plan-level loop's on the same graph
+  test("connectedComponents: int ids keep their dtype and take min-id labels") {
+    // the output must stay in the INPUT id dtype (the oracle dump
+    // compares schemas) and label every node with its component's min id
     import graft.operators.Dedup
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (7L, 7L))
       .toDF("doc_a", "doc_b")
@@ -37,12 +36,55 @@ class ScaleOpsSpec extends SparkSpec {
     assert(labels === Set((1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (7, 7)))
   }
 
-  test("connectedComponents falls back to the plan loop on string ids") {
+  test("connectedComponents labels string ids through the order-preserving index") {
     import graft.operators.Dedup
     val pairs = Seq(("b", "c"), ("a", "b"), ("x", "y")).toDF("doc_a", "doc_b")
     val got = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
       .as[(String, String)].collect().toSet
     assert(got === Set(("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")))
+  }
+
+  test("connectedComponents drops pairs with a null int id") {
+    import graft.operators.Dedup
+    val pairs = Seq[(Option[Int], Option[Int])](
+      (Some(1), Some(2)), (Some(2), None), (None, Some(3)), (Some(4), Some(5)))
+      .toDF("doc_a", "doc_b")
+    val got = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+      .as[(Int, Int)].collect().toSet
+    assert(got === Set((1, 1), (2, 1), (4, 4), (5, 4)))
+  }
+
+  test("connectedComponents drops pairs with a null string id") {
+    import graft.operators.Dedup
+    val pairs = Seq[(String, String)](
+      ("a", "b"), ("b", null), (null, "c"), ("x", "y"))
+      .toDF("doc_a", "doc_b")
+    val got = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+      .as[(String, String)].collect().toSet
+    assert(got === Set(("a", "a"), ("b", "a"), ("x", "x"), ("y", "x")))
+  }
+
+  test("connectedComponents widens mixed int/long ids to long") {
+    import graft.operators.Dedup
+    val pairs = Seq((3, 2L), (2, 1L), (7, 9L)).toDF("doc_a", "doc_b")
+    val got = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+    assert(got.schema("node").dataType === LongType)
+    assert(got.schema("cluster").dataType === LongType)
+    assert(got.as[(Long, Long)].collect().toSet ===
+      Set((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (9L, 7L)))
+  }
+
+  test("connectedComponents labels a 200-node string chain with its min id") {
+    // zero-padded so string order is numeric order: "n000" is the min;
+    // like the long chain below, this needs pointer doubling, here
+    // through the dense index and back
+    import graft.operators.Dedup
+    val chain = (0 until 199).map(i => (f"n$i%03d", f"n${i + 1}%03d"))
+      .toDF("doc_a", "doc_b")
+    val labels = Dedup.connectedComponents(chain, "doc_a", "doc_b")
+      .as[(String, String)].collect()
+    assert(labels.length === 200)
+    assert(labels.forall(_._2 == "n000"))
   }
 
   test("connectedComponents RDD arm labels a deep chain needing pointer doubling") {

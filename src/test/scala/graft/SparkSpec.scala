@@ -6,10 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites (one JVM-wide session; suites run in
   * the forked test JVM). */
 object TestSession {
-  lazy val spark: SparkSession = GraftSession.localFs(GraftSession.configure(
-    SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")))
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
