@@ -1,9 +1,9 @@
 package graft
 
-import graft.functions.{CosineSim, DotProduct, HyperplaneBuckets, MinHashSigs, NfcNormalize, RollingFp, SimHash64}
+import graft.functions.{CosineSim, DotProduct, NfcNormalize, RollingFp}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions hook exposing the engine's custom Catalyst
   * expressions to SQL (`spark.sql("SELECT cosine_sim(a, b) ...")`),
@@ -11,12 +11,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * Registered by [[GraftSession]] via `withExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def intArg(e: Expression, name: String): Int = e match {
-    case Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$name must be an integer literal, got $other")
-  }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -28,10 +22,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       (args: Seq[Expression]) => DotProduct(args(0), args(1))))
     ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (args: Seq[Expression]) => SimHash64(args(0))))
-    ext.injectFunction((
       new FunctionIdentifier("nfc_normalize"),
       new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
       (args: Seq[Expression]) => NfcNormalize(args(0))))
@@ -39,15 +29,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("rolling_fp"),
       new ExpressionInfo(classOf[RollingFp].getName, "rolling_fp"),
       (args: Seq[Expression]) => RollingFp(args(0))))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
-      (args: Seq[Expression]) => MinHashSigs(args(0), intArg(args(1), "numHashes"))))
-    ext.injectFunction((
-      new FunctionIdentifier("hyperplane_buckets"),
-      new ExpressionInfo(classOf[HyperplaneBuckets].getName, "hyperplane_buckets"),
-      (args: Seq[Expression]) => HyperplaneBuckets(args(0),
-        intArg(args(1), "dim"), intArg(args(2), "bits"),
-        intArg(args(3), "tables"), intArg(args(4), "seed"))))
   }
 }

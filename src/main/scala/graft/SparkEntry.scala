@@ -249,7 +249,7 @@ object SparkEntry {
     // feature buckets (add-one smoothing, 4096 buckets) — target model
     // from one source slice, raw model from the whole corpus. The
     // entire scorer INCLUDING the feature hash is SQL-reproducible
-    // (same fold family as the DetHash dedup arms). Selection rule:
+    // (the det hash family of the dedup operators). Selection rule:
     // keep docs STRICTLY above the corpus-median weight — absolute
     // weights carry a smoothing offset (buckets >> per-slice vocab),
     // so thresholds must be relative. Both engines interpolate the
@@ -1839,10 +1839,10 @@ object SparkEntry {
         .orderBy("split_a", "split_b")
     }),
 
-    // Dedup 3: MinHash+LSH with exact-Jaccard verification. Default
-    // DetHash family (RollingFp mod 2³¹−1, affine signatures) — the
-    // whole LSH path runs under the full DuckDB oracle; the xxhash64
-    // family is spec-gated (recall vs exact pairs) in OperatorSpec.
+    // Dedup 3: MinHash+LSH with exact-Jaccard verification. Det hash
+    // family (RollingFp mod 2³¹−1, affine signatures) — the whole LSH
+    // path runs under the full DuckDB oracle; recall vs the exact pair
+    // set is gated in PlanSpec.
     "q_dedup_minhash" -> ((s, dir) => {
       Dedup.minhashLshPairs(
         t(s, dir, "documents").filter(col("doc_id") < 500),
@@ -1862,9 +1862,9 @@ object SparkEntry {
         .orderBy("doc_a", "doc_b")
     }),
 
-    // Dedup 4: SimHash Hamming-band near-dup. Default DetHash family:
-    // every step is integer arithmetic, so the full oracle checks it
-    // bit-for-bit; pigeonhole banding identical to the xxhash64 arm.
+    // Dedup 4: SimHash Hamming-band near-dup. Det hash family: every
+    // step is integer arithmetic, so the full oracle checks it
+    // bit-for-bit; pigeonhole banding on (maxHamming+1) bands.
     "q_dedup_simhash" -> ((s, dir) => {
       Dedup.simhashPairs(
         t(s, dir, "documents").filter(col("doc_id") < 500),
@@ -1872,13 +1872,13 @@ object SparkEntry {
         .orderBy("doc_a", "doc_b")
     }),
 
-    // Dedup 5: embedding cosine near-dup in LSH buckets. Default
-    // DetHash hyperplanes + strict left-to-right float folds make the
-    // doubles bit-identical in SQL (full oracle). vec_id < 500 (the
-    // full set at small SFs): the interpreted folds that BUY the bit
-    // parity cost ~13 ms/vector, so the oracle query keeps a bounded
-    // slice; the codegen XxHash64 arm is the throughput path and is
-    // recall-gated in PlanSpec + stress-probed in StressSmoke.
+    // Dedup 5: embedding cosine near-dup in LSH buckets. Det
+    // hyperplanes + strict left-to-right float folds make the doubles
+    // bit-identical in SQL (full oracle); both run as fused codegen
+    // expressions (DetHyperplaneKeysExpr, CosineFold). vec_id < 500
+    // (the full set at small SFs) keeps the oracle's all-pairs check
+    // bounded; recall is gated in PlanSpec and the wider slice is
+    // stress-probed in StressSmoke.
     "q_dedup_embed" -> ((s, dir) => {
       Dedup.embeddingNearDup(
         t(s, dir, "embeddings").filter(col("vec_id") < 500),
@@ -1930,12 +1930,12 @@ object SparkEntry {
         .orderBy("q_id", "rank")
     }),
 
-    // Similarity 2: LSH-bucketed ANN top-k. Default DetHash
-    // hyperplanes — candidate generation, scoring, and ranking all
-    // hash-match the oracle with no rounding; bounded corpus slice for
-    // the same reason as q_dedup_embed (the folds that buy parity are
-    // interpreted). The codegen XxHash64 arm is recall-gated in
-    // PlanSpec and stress-probed in StressSmoke. bits/tables sized for
+    // Similarity 2: LSH-bucketed ANN top-k. Det hyperplanes (fused
+    // DetHyperplaneKeysExpr keys, CosineFold scoring) — candidate
+    // generation, scoring, and ranking all hash-match the oracle with
+    // no rounding; bounded corpus slice as in q_dedup_embed. Recall is
+    // gated in PlanSpec and the whole corpus is stress-probed in
+    // StressSmoke. bits/tables sized for
     // the synthetic embeddings (near-random, max pairwise cos ≈ 0.5):
     // p ≈ (1−θ/π)^bits per table; 12 tables (vs the near-dup ops' 8)
     // because top-k recall is gated against the exact baseline and the
@@ -3671,7 +3671,7 @@ object SparkEntry {
         |SELECT s AS node, CAST(LEAST(s, MIN(dd)) AS BIGINT) AS cluster
         |FROM reach GROUP BY s ORDER BY node""".stripMargin,
 
-    // mirrors the DetHash arm of minhashLshPairs hash-for-hash:
+    // mirrors minhashLshPairs hash-for-hash:
     // RollingFp fold mod 2³¹−1 per shingle, 16 affine min-signatures,
     // 8 two-sig bands, band-key self-join, exact-Jaccard verify. The
     // MIN list and band UNION are generated from the same (aᵢ, bᵢ)
@@ -3818,9 +3818,9 @@ object SparkEntry {
         |ORDER BY c.doc_a, c.doc_b""".stripMargin
     },
 
-    // mirrors the DetHash arm of embeddingNearDup: same
-    // multiplicative-hash hyperplane rationals, same strict
-    // left-to-right folds (list_reduce ≡ the Spark aggregate lambda),
+    // mirrors embeddingNearDup: same multiplicative-hash hyperplane
+    // rationals, same strict left-to-right folds (list_reduce ≡ the
+    // accumulation order of the fused folds),
     // same fold-quotient cosine — the doubles are bit-identical, so no
     // rounding is applied at all
     "q_dedup_embed" -> {
@@ -3850,7 +3850,7 @@ object SparkEntry {
         |WHERE cos >= 0.35 ORDER BY id_a, id_b""".stripMargin
     },
 
-    // mirrors Dedup.semanticDecontaminate's det arm: same hyperplane
+    // mirrors Dedup.semanticDecontaminate: same hyperplane
     // keys and strict-fold cosine, bipartite corpus × eval sides
     "q_decontaminate_semantic" -> {
       val keyExprs = detKeyExprsSql("v")
@@ -3920,7 +3920,7 @@ object SparkEntry {
         |ORDER BY vec_id""".stripMargin
     },
 
-    // mirrors the DetHash arm of simhashPairs constant-for-constant:
+    // mirrors simhashPairs constant-for-constant:
     // RollingFp fold mod 2³¹−1 per token, 64 affine ±1 sums, sign bits
     // packed into two 32-bit halves, 8 byte-band keys, Hamming via
     // xor+bit_count — integer arithmetic end to end
@@ -4137,7 +4137,7 @@ object SparkEntry {
     // oracle verifies the large-k codegen path end to end
     "q_kmeans_large" -> kmeansOracleSql(k = 64, iters = 1),
 
-    // mirrors the DetHash arm of bucketedTopK: det-hyperplane keys on
+    // mirrors bucketedTopK: det-hyperplane keys on
     // both sides, band join, fold cosine, (cos DESC, n_id) row_number —
     // bit-exact, no rounding (same parity recipe as q_dedup_embed)
     "q_sim_ann" -> {
@@ -4647,11 +4647,12 @@ object SparkEntry {
         |ORDER BY media_id, frame_idx""".stripMargin,
 
     // mirrors Multimodal.patternOf + aHash64 round trip: the pattern
-    // bits are pure integer arithmetic (DetHash affine recipe over the
-    // group id) packed into 32-bit lo/hi halves; member m of each
-    // 4-id group XORs m disjoint planted bits. 200 ids → all-pairs
-    // Hamming ≤ 3 is equivalent to the engine's pigeonhole band join
-    // (banding guarantees every ≤-maxHamming pair shares a band).
+    // bits are pure integer arithmetic (the det hash family's affine
+    // recipe over the group id) packed into 32-bit lo/hi halves;
+    // member m of each 4-id group XORs m disjoint planted bits.
+    // 200 ids → all-pairs Hamming ≤ 3 is equivalent to the engine's
+    // pigeonhole band join (banding guarantees every ≤-maxHamming
+    // pair shares a band).
     "q_mm_neardup" -> {
       def bit(k: Int) =
         s"(CASE WHEN (s * ${7919L * k + 7L} + ${104729L * k + 9973L})" +

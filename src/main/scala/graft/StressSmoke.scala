@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * side of the ratio artifact.
   */
 object StressSmoke {
-  import graft.operators.{Dedup, Similarity, XxHash64}
+  import graft.operators.{Dedup, Similarity}
 
   /** Queries with a linear-or-better scale design, spanning BOTH
     * halves of the engine: the LLM-ops families (dedup/text/
@@ -166,13 +166,15 @@ object StressSmoke {
     "q_sample_temp", "q_dedup_keep_best", "q_split_leakfree",
     "q_split_contamination", "q_agg_state_full", "q_theta_novelty")
 
-  /** Stress-side bodies for the near-dup/ANN pack: SparkEntry's
-    * canonical queries run the DetHash oracle arm on fixed id slices
-    * (bounded by design — the interpreted parity folds are the price
-    * of full verification, and a fixed slice would measure nothing at
-    * 10×). The probe instead measures the XxHash64 codegen arm — the
-    * documented throughput alternative — on the same slices the r4
-    * artifact used, so ratios stay comparable round over round. */
+  /** Stress-side query bodies, looked up before
+    * [[SparkEntry.queries]]: probe-only names (the raw sketch arms) and
+    * canonical queries whose fixed id slice would measure nothing at
+    * 10×. The near-dup/ANN entries run the same operators as the
+    * canonical queries, on the slices the r4 artifact used:
+    * q_dedup_embed widens vec_id < 500 to < 1000, the semantic
+    * decontamination corpus replicates via pmod, and q_sim_ann
+    * searches the whole replicated corpus. q_dedup_minhash and
+    * q_dedup_simhash have no entry and run their canonical bodies. */
   private val overrides: Map[String, (SparkSession, String) => DataFrame] = Map(
     // raw sketch arms (probe-only names — see stressQueries note): the
     // operator passes without the oracle's exact-percentile bound
@@ -217,22 +219,11 @@ object StressSmoke {
         .select("doc_id")
         .orderBy("doc_id")
     }),
-    "q_dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashLshPairs(
-        Tables(s, dir, "documents").filter(col("doc_id") < 500),
-        "doc_id", "text", w = 3, numHashes = 16, bands = 8, threshold = 0.05,
-        hash = XxHash64)
-        .orderBy("doc_a", "doc_b")),
-    "q_dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(
-        Tables(s, dir, "documents").filter(col("doc_id") < 500),
-        "doc_id", "text", maxHamming = 7, hash = XxHash64)
-        .orderBy("doc_a", "doc_b")),
     "q_dedup_embed" -> ((s, dir) =>
       Dedup.embeddingNearDup(
         Tables(s, dir, "embeddings").filter(col("vec_id") < 1000),
         "vec_id", "embedding", dim = 64, threshold = 0.35,
-        bits = 4, tables = 8, hash = XxHash64)
+        bits = 4, tables = 8)
         .orderBy("id_a", "id_b")),
     // eval side stays the replica-0 slice (held-out sets don't grow
     // with the corpus); the corpus side replicates via pmod — replica
@@ -246,14 +237,14 @@ object StressSmoke {
         e.filter(rid >= 40 && rid < 500),
         e.filter(col("vec_id") < 40),
         "vec_id", "embedding", dim = 64, threshold = 0.30,
-        bits = 4, tables = 8, hash = XxHash64)
+        bits = 4, tables = 8)
         .orderBy("corpus_id", "eval_id")
     }),
     "q_sim_ann" -> ((s, dir) => {
       val e = Tables(s, dir, "embeddings")
       Similarity.bucketedTopK(
         e.filter(col("vec_id") < 50), e, "vec_id", "embedding",
-        dim = 64, k = 5, bits = 4, tables = 8, hash = XxHash64)
+        dim = 64, k = 5, bits = 4, tables = 8)
         .orderBy("q_id", "rank")
     }),
     // the canonical q_densify/q_scd2 slice to user_id < 50 for a

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * The composed `aggregate(sequence(...))` forms are CodegenFallback:
   * every element costs an interpreted closure call, and the
   * hyperplane-key fold runs bits×tables such folds per row — the
-  * dominant cost of the det arms of q_dedup_embed / q_sim_ann
+  * dominant cost of q_dedup_embed / q_sim_ann
   * (SURVEY §2.11 preference (b): custom Expression over UDF).
   *
   * Parity argument: each accumulator performs the IDENTICAL sequence

@@ -42,11 +42,10 @@ object Vectors {
     * table t's key is the sign of the fold-dot of the vector with the
     * rational hyperplane w(t,b,d) = ((((t·bits+b)·dim+d)·2654435761)
     * mod 2001 − 1000)/1000 — hash-free, so the identical key
-    * computation is expressible in ANSI SQL (the oracle face of
-    * [[hyperplaneBuckets]]). Returns `array<long>` of `tables` keys.
-    * Backed by the fused [[DetHyperplaneKeysExpr]] codegen expression
-    * (bits×tables interpreted folds per row otherwise — the dominant
-    * cost of the det ANN/near-dup arms). */
+    * computation is expressible in ANSI SQL. Returns `array<long>` of
+    * `tables` keys. Backed by the fused [[DetHyperplaneKeysExpr]]
+    * codegen expression (bits×tables interpreted folds per row
+    * otherwise — the dominant cost of the ANN/near-dup operators). */
   def detHyperplaneKeys(v: Column, dim: Int, bits: Int, tables: Int): Column =
     DetHyperplaneKeysExpr(v, dim, bits, tables)
 
@@ -83,12 +82,4 @@ object Vectors {
     * higher-order functions) — kept as the reference semantics the
     * fused expression is tested against. */
   def cosineComposed(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Random-hyperplane LSH bucket ids, one per hash table: bit i of
-    * table t = sign(a · h_{t,i}) with deterministic pseudo-random
-    * directions — reproducible across runs and executors with no
-    * stored model. Backed by the [[HyperplaneBuckets]] Catalyst
-    * expression (compact plan, tight-loop eval). */
-  def hyperplaneBuckets(a: Column, dim: Int, bits: Int, tables: Int, seed: Int): Column =
-    HyperplaneBuckets(a, dim, bits, tables, seed)
 }

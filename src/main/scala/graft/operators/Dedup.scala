@@ -305,99 +305,20 @@ object Dedup {
     * verified with exact Jaccard ≥ threshold (so LSH only affects
     * recall, never precision). Output: (doc_a, doc_b, jaccard).
     *
-    * `hash` selects the signature family — [[DetHash]] (default,
-    * SQL-reproducible end to end) or [[XxHash64]] (stronger mixing,
-    * fused [[graft.functions.MinHashSigs]] codegen). Same pipeline
-    * shape either way: shingle → signature → band key → equi-join →
-    * exact-Jaccard verify. */
-  def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
-                      w: Int, numHashes: Int, bands: Int,
-                      threshold: Double,
-                      hash: HashFamily = DetHash,
-                      verify: MinHashVerify = ExactVerify): DataFrame = hash match {
-    case DetHash => minhashDet(docs, idCol, textCol, w, numHashes, bands, threshold, verify)
-    case XxHash64 => minhashXx(docs, idCol, textCol, w, numHashes, bands, threshold, verify)
-  }
-
-  /** xxhash64 arm of [[minhashLshPairs]]: the distinct-shingle array is
-    * materialized ONCE per doc and reused by both the signature and
-    * verification stages; signatures come from the fused
-    * [[graft.functions.MinHashSigs]] codegen expression (one pass over
-    * the shingles for all hashes — the composed
-    * `array_min(transform(...))`-per-hash form walks the array
-    * numHashes× through the interpreter). */
-  private def minhashXx(docs: DataFrame, idCol: String, textCol: String,
-                        w: Int, numHashes: Int, bands: Int,
-                        threshold: Double,
-                        verify: MinHashVerify = ExactVerify): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val shingled = docs.select(
-      col(idCol).as("doc"),
-      array_distinct(Text.shingles(col(textCol), w)).as("sh"))
-    val sigs = shingled.select(col("doc"), col("sh"),
-      graft.functions.MinHashSigs(col("sh"), numHashes).as("sig"))
-    // band key = (band index, hash of the band's slice of the signature)
-    val banded = sigs.select(
-      col("doc"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("sig"), b * rows + 1, rows).cast("string")).as("bkey"))
-      }: _*)).as("bk"))
-    val cand = banded.select(col("doc").as("doc_a"), col("bk"))
-      .join(banded.select(col("doc").as("doc_b"), col("bk")), Seq("bk"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    verify match {
-      case ExactVerify => verifyJaccard(cand, shingled, threshold)
-      case EstimateVerify =>
-        // null components (empty shingle set) never agree: a === b is
-        // null-propagating and when() falls to 0
-        val agree = size(filter(
-          zip_with(col("sig_a"), col("sig_b"),
-            (a, b) => when(a === b, lit(true)).otherwise(lit(false))),
-          x => x))
-        cand
-          .join(sigs.select(col("doc").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-          .join(sigs.select(col("doc").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-          .withColumn("jaccard", agree.cast("double") / numHashes)
-          .filter(col("jaccard") >= threshold)
-          .select("doc_a", "doc_b", "jaccard")
-    }
-  }
-
-  /** Exact-Jaccard verification of (doc_a, doc_b) candidate pairs on
-    * precomputed distinct-shingle arrays — shared by both MinHash
-    * variants so the oracle-checkable twin can never drift from the
-    * production one. LSH thus only ever affects recall, not
-    * precision. */
-  private def verifyJaccard(cand: DataFrame, shingled: DataFrame,
-                            threshold: Double): DataFrame =
-    cand
-      .join(shingled.toDF("doc_a", "sh_a"), "doc_a")
-      .join(shingled.toDF("doc_b", "sh_b"), "doc_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-
-  /** [[DetHash]] arm of [[minhashLshPairs]]: the identical
-    * shingle → signature → band → candidate → exact-Jaccard-verify
-    * pipeline, with the per-shingle hash swapped from xxhash64 to the
-    * transparent [[graft.functions.RollingFp]] codepoint fold reduced
-    * mod 2³¹−1 and the signature family to the affine (aᵢ·f + bᵢ) mod
-    * 2³¹−1 — every step reproducible in ANSI SQL, so the WHOLE LSH
-    * pipeline runs under the full DuckDB oracle.
+    * Per-shingle fingerprints are the transparent
+    * [[graft.functions.RollingFp]] codepoint fold reduced mod 2³¹−1,
+    * and the signature family is the affine (aᵢ·f + bᵢ) mod 2³¹−1 —
+    * every step reproducible in ANSI SQL, so the WHOLE LSH pipeline
+    * runs under the full DuckDB oracle.
     *
     * Scale shape: explode → numHashes-way min aggregate — signatures
     * partial-aggregate map-side (shuffle ∝ distinct (doc, shingle)),
     * with no interpreted higher-order pass; banding and candidate
     * generation are string-key equi-joins. */
-  private def minhashDet(docs: DataFrame, idCol: String, textCol: String,
-                         w: Int, numHashes: Int, bands: Int,
-                         threshold: Double,
-                         verify: MinHashVerify = ExactVerify): DataFrame = {
+  def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
+                      w: Int, numHashes: Int, bands: Int,
+                      threshold: Double,
+                      verify: MinHashVerify = ExactVerify): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val shingled = docs.select(
       col(idCol).as("doc"),
@@ -410,7 +331,15 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
     verify match {
-      case ExactVerify => verifyJaccard(cand, shingled, threshold)
+      case ExactVerify =>
+        cand
+          .join(shingled.toDF("doc_a", "sh_a"), "doc_a")
+          .join(shingled.toDF("doc_b", "sh_b"), "doc_b")
+          .withColumn("jaccard",
+            size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+              size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+          .filter(col("jaccard") >= threshold)
+          .select("doc_a", "doc_b", "jaccard")
       case EstimateVerify =>
         estimateScored(cand, sigs, sigs, numHashes)
           .filter(col("jaccard") >= threshold)
@@ -737,42 +666,6 @@ object Dedup {
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** 64-bit SimHash: for each token hash, add +1/−1 per bit position,
-    * take the sign vector. Near-dups = pairs within `maxHamming` bits,
-    * found by splitting the 64 bits into (maxHamming+1) bands — the
-    * pigeonhole guarantees matching pairs share an exact band.
-    * Computed by the fused codegen [[graft.functions.SimHash64]]
-    * expression (one pass per row). */
-  def simhash64(textCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.SimHash64(Text.tokens(textCol))
-
-  /** Reference implementation of [[simhash64]] as composed built-ins
-    * (64 interpreter-evaluated `aggregate` folds) — kept for the
-    * bit-for-bit equality spec against the fused expression. */
-  def simhash64Composed(textCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val hashes = transform(Text.tokens(textCol), t => xxhash64(t))
-    val bitSums = (0 until 64).map { bit =>
-      aggregate(hashes, lit(0),
-        (acc, h) => acc + when(h.bitwiseAND(lit(1L << bit)) =!= 0L, 1).otherwise(-1))
-    }
-    bitSums.zipWithIndex.map { case (s, bit) =>
-      when(s > 0, lit(1L << bit)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-  }
-
-  /** SimHash Hamming-band near-dup pairs: docs within `maxHamming`
-    * bits, found via the pigeonhole banding scheme (maxHamming+1
-    * bands — matching pairs must share an exact band). `hash` selects
-    * the per-token fingerprint family, [[DetHash]] (default,
-    * integer-exact in SQL) or [[XxHash64]] (fused
-    * [[graft.functions.SimHash64]] codegen). */
-  def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int,
-                   hash: HashFamily = DetHash): DataFrame = hash match {
-    case DetHash => simhashDet(docs, idCol, textCol, maxHamming)
-    case XxHash64 => simhashXx(docs, idCol, textCol, maxHamming)
-  }
-
   /** 64-bit Hamming near-dup pairs over ANY precomputed signature
     * column — text SimHash signatures, image average-hashes
     * ([[Multimodal.imageHashes]]), audio fingerprints: pigeonhole
@@ -803,24 +696,18 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** xxhash64 arm of [[simhashPairs]]: fused signature expression +
-    * the shared [[hammingPairs64]] banding. */
-  private def simhashXx(docs: DataFrame, idCol: String, textCol: String,
-                        maxHamming: Int): DataFrame =
-    hammingPairs64(
-      docs.select(col(idCol).as("doc"), simhash64(col(textCol)).as("sig")),
-      "doc", "sig", maxHamming)
-
-  /** [[DetHash]] arm of [[simhashPairs]]: per token, the transparent
+  /** 64-bit SimHash near-dup pairs: docs within `maxHamming` bits,
+    * found via pigeonhole banding into (maxHamming+1) bands — matching
+    * pairs must share an exact band. Per token, the transparent
     * RollingFp fold mod 2³¹−1 rehashed through 64 affine families
     * decides the ±1 contribution per bit (top-half-of-range rule); the
     * per-bit sums, sign bits, packed 32-bit halves, band keys, and
     * Hamming verification are ALL integer arithmetic — bit-exactly
     * reproducible in ANSI SQL with no float anywhere. Explode → 64-way
-    * sum aggregate (map-side combined); banding and verify mirror the
-    * xxhash64 arm's pigeonhole scheme. */
-  private def simhashDet(docs: DataFrame, idCol: String, textCol: String,
-                         maxHamming: Int): DataFrame = {
+    * sum aggregate (map-side combined); banding and verify follow
+    * [[hammingPairs64]]'s pigeonhole scheme on the two 32-bit halves. */
+  def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
+                   maxHamming: Int): DataFrame = {
     val nBands = maxHamming + 1
     require(64 % nBands == 0, s"maxHamming+1 must divide 64, got $nBands")
     val bandBits = 64 / nBands
@@ -860,19 +747,36 @@ object Dedup {
   }
 
   /** Embedding cosine near-dup inside hyperplane-LSH buckets: only
-    * vectors whose sign-signatures collide are compared. Exact cosine
-    * verification keeps precision at 1. `hash` selects the hyperplane
-    * family, [[DetHash]] (default, bit-identical doubles in SQL via
-    * strict left-to-right folds) or [[XxHash64]] (codegen
-    * [[graft.functions.HyperplaneBuckets]] — the throughput option
-    * when the interpreted fold cost of the det arm matters more than
-    * oracle verifiability). */
+    * vectors whose sign-signatures collide are compared, and an exact
+    * cosine verify keeps precision at 1. Hyperplane components are
+    * rationals from a multiplicative hash of (table, bit, dim) —
+    * computable identically in SQL — and every float reduction (the
+    * sign dots and the verify cosine) accumulates strictly left to
+    * right, the order of DuckDB's `list_reduce`, so the doubles are
+    * bit-identical across engines and the full oracle hash-matches.
+    * Both reductions run as fused codegen expressions
+    * ([[graft.functions.DetHyperplaneKeysExpr]] for the keys,
+    * [[graft.functions.CosineFold]] for the verify). */
   def embeddingNearDup(embs: DataFrame, idCol: String, vecCol: String,
                        dim: Int, threshold: Double,
-                       bits: Int = 4, tables: Int = 8,
-                       hash: HashFamily = DetHash): DataFrame = hash match {
-    case DetHash => embeddingNearDupDet(embs, idCol, vecCol, dim, threshold, bits, tables)
-    case XxHash64 => embeddingNearDupXx(embs, idCol, vecCol, dim, threshold, bits, tables)
+                       bits: Int = 4, tables: Int = 8): DataFrame = {
+    val vecs = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val banded = embs.select(col(idCol).as("id"),
+      posexplode(Vectors.detHyperplaneKeys(col(vecCol), dim, bits, tables))
+        .as(Seq("t", "key")))
+    // candidate pairs dedup on IDS ONLY — a pair colliding in several
+    // tables must cost one cosine, not `tables`, and the distinct
+    // shuffle must carry two longs, not two 64-float payloads; vectors
+    // join back per unique pair for the verify
+    val cand = banded.select(col("id").as("id_a"), col("t"), col("key"))
+      .join(banded.select(col("id").as("id_b"), col("t"), col("key")), Seq("t", "key"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+    cand.join(vecs.toDF("id_a", "v_a"), "id_a")
+      .join(vecs.toDF("id_b", "v_b"), "id_b")
+      .select(col("id_a"), col("id_b"),
+        Vectors.cosineFold(col("v_a"), col("v_b"), dim).as("cos"))
+      .filter(col("cos") >= threshold)
   }
 
   /** Semantic decontamination: corpus items whose EMBEDDING is close
@@ -891,22 +795,10 @@ object Dedup {
   def semanticDecontaminate(corpus: DataFrame, evalSet: DataFrame,
                             idCol: String, vecCol: String,
                             dim: Int, threshold: Double,
-                            bits: Int = 4, tables: Int = 8,
-                            hash: HashFamily = DetHash): DataFrame = {
-    def banded(df: DataFrame, id: String) = hash match {
-      case DetHash => df.select(col(idCol).as(id),
-        posexplode(Vectors.detHyperplaneKeys(col(vecCol), dim, bits, tables))
-          .as(Seq("t", "key")))
-      case XxHash64 => df.select(col(idCol).as(id),
-        posexplode(Vectors.hyperplaneBuckets(col(vecCol), dim, bits, tables, seed = 1000))
-          .as(Seq("t", "key")))
-    }
-    val cosOf = hash match {
-      case DetHash => (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-        Vectors.cosineFold(a, b, dim)
-      case XxHash64 => (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-        Vectors.cosine(a, b)
-    }
+                            bits: Int = 4, tables: Int = 8): DataFrame = {
+    def banded(df: DataFrame, id: String) = df.select(col(idCol).as(id),
+      posexplode(Vectors.detHyperplaneKeys(col(vecCol), dim, bits, tables))
+        .as(Seq("t", "key")))
     val cand = banded(corpus, "corpus_id")
       .join(broadcast(banded(evalSet, "eval_id")), Seq("t", "key"))
       .select("corpus_id", "eval_id").distinct()
@@ -914,7 +806,7 @@ object Dedup {
       .join(corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("_vc")), "corpus_id")
       .join(broadcast(evalSet.select(col(idCol).as("eval_id"), col(vecCol).as("_ve"))), "eval_id")
       .select(col("corpus_id"), col("eval_id"),
-        cosOf(col("_vc"), col("_ve")).as("cos"))
+        Vectors.cosineFold(col("_vc"), col("_ve"), dim).as("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -931,63 +823,10 @@ object Dedup {
   def applySemanticDedup(items: DataFrame, idCol: String,
                          embs: DataFrame, embIdCol: String, vecCol: String,
                          dim: Int, threshold: Double,
-                         bits: Int = 4, tables: Int = 8,
-                         hash: HashFamily = DetHash): DataFrame = {
+                         bits: Int = 4, tables: Int = 8): DataFrame = {
     val pairs = embeddingNearDup(embs, embIdCol, vecCol, dim, threshold,
-      bits, tables, hash).select("id_a", "id_b")
+      bits, tables).select("id_a", "id_b")
     applyNearDups(items, idCol, pairs, "id_a", "id_b")
-  }
-
-  /** xxhash64 arm of [[embeddingNearDup]]. */
-  private def embeddingNearDupXx(embs: DataFrame, idCol: String, vecCol: String,
-                                 dim: Int, threshold: Double,
-                                 bits: Int, tables: Int): DataFrame = {
-    val vecs = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val bucketed = embs.select(col(idCol).as("id"),
-      posexplode(Vectors.hyperplaneBuckets(col(vecCol), dim, bits, tables, seed = 1000))
-        .as(Seq("t", "b")))
-      .withColumn("bk", struct(col("t"), col("b"))).drop("t", "b")
-    // candidate pairs dedup on IDS ONLY — a pair colliding in several
-    // tables must cost one cosine, not `tables`, and the distinct
-    // shuffle must carry two longs, not two 64-float payloads; vectors
-    // join back per unique pair for the verify
-    val cand = bucketed.select(col("id").as("id_a"), col("bk"))
-      .join(bucketed.select(col("id").as("id_b"), col("bk")), Seq("bk"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    cand.join(vecs.toDF("id_a", "v_a"), "id_a")
-      .join(vecs.toDF("id_b", "v_b"), "id_b")
-      .select(col("id_a"), col("id_b"), Vectors.cosine(col("v_a"), col("v_b")).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
-  /** [[DetHash]] arm of [[embeddingNearDup]]: hyperplane components
-    * are rationals from a multiplicative hash of (table, bit, dim) —
-    * computable identically in SQL — and every float reduction (the
-    * sign dots and the verify cosine) is a STRICT LEFT-TO-RIGHT fold
-    * (`aggregate` here ≡ `list_reduce` in DuckDB), so the accumulated
-    * doubles are bit-identical across engines and the full oracle
-    * hash-matches. Interpreted higher-order folds are the point, not a
-    * compromise: fixed order is what buys parity. */
-  private def embeddingNearDupDet(embs: DataFrame, idCol: String, vecCol: String,
-                                  dim: Int, threshold: Double,
-                                  bits: Int, tables: Int): DataFrame = {
-    val vecs = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val banded = embs.select(col(idCol).as("id"),
-      posexplode(Vectors.detHyperplaneKeys(col(vecCol), dim, bits, tables))
-        .as(Seq("t", "key")))
-    // ids-only candidate distinct + vector join-back (same shuffle
-    // diet as the xx arm); the verify cosine itself stays the strict
-    // fold, once per unique pair
-    val cand = banded.select(col("id").as("id_a"), col("t"), col("key"))
-      .join(banded.select(col("id").as("id_b"), col("t"), col("key")), Seq("t", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    cand.join(vecs.toDF("id_a", "v_a"), "id_a")
-      .join(vecs.toDF("id_b", "v_b"), "id_b")
-      .select(col("id_a"), col("id_b"),
-        Vectors.cosineFold(col("v_a"), col("v_b"), dim).as("cos"))
-      .filter(col("cos") >= threshold)
   }
 
   /** Cross-document repeated-span removal — fixed-width-gram

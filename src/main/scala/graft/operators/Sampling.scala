@@ -284,9 +284,9 @@ object Sampling {
     * average; select by thresholding or top-k on w.
     *
     * Feature hashing uses the transparent [[graft.functions.RollingFp]]
-    * fold mod `buckets` — the same SQL-reproducible family the DetHash
-    * dedup arms use, so the whole scorer (hashing included) runs under
-    * the DuckDB oracle.
+    * fold mod `buckets` — the same SQL-reproducible det hash family
+    * the dedup operators use, so the whole scorer (hashing included)
+    * runs under the DuckDB oracle.
     *
     * Scale shape: each model is one explode → two-level aggregate
     * (partial map-side; the shuffle carries ≤ `buckets` rows), the

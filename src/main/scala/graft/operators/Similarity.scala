@@ -70,28 +70,16 @@ object Similarity {
   /** Bucketed (LSH) ANN top-k: candidates = corpus vectors sharing any
     * of `tables` hyperplane buckets with the query; exact cosine +
     * top-k within candidates. Recall grows with `tables`, cost with
-    * bucket occupancy (≈ N / 2^bits per table). `hash` selects the
-    * hyperplane family — [[DetHash]] (default, oracle-checkable) or
-    * [[XxHash64]] (codegen hyperplanes + fused cosine, the throughput
-    * option). */
+    * bucket occupancy (≈ N / 2^bits per table). Same parity recipe as
+    * [[graft.operators.Dedup.embeddingNearDup]]: hash-free rational
+    * hyperplanes ([[Vectors.detHyperplaneKeys]]) and a strict
+    * left-to-right fold cosine ([[Vectors.cosineFold]]) make every
+    * double bit-identical in ANSI SQL, so candidate generation,
+    * scoring, and ranking all hash-match the DuckDB oracle with no
+    * rounding. */
   def bucketedTopK(queries: DataFrame, corpus: DataFrame,
                    idCol: String, vecCol: String, dim: Int, k: Int,
-                   bits: Int = 4, tables: Int = 8,
-                   hash: HashFamily = DetHash): DataFrame = hash match {
-    case DetHash => bucketedTopKDet(queries, corpus, idCol, vecCol, dim, k, bits, tables)
-    case XxHash64 => bucketedTopKXx(queries, corpus, idCol, vecCol, dim, k, bits, tables)
-  }
-
-  /** [[DetHash]] arm of [[bucketedTopK]] (see
-    * [[graft.operators.Dedup.embeddingNearDup]]'s det arm for the
-    * parity recipe): hash-free rational hyperplanes
-    * ([[Vectors.detHyperplaneKeys]]) and strict left-to-right fold
-    * cosine ([[Vectors.cosineFold]]) make every double bit-identical in
-    * ANSI SQL, so candidate generation, scoring, and ranking all
-    * hash-match the DuckDB oracle with no rounding. */
-  private def bucketedTopKDet(queries: DataFrame, corpus: DataFrame,
-                              idCol: String, vecCol: String, dim: Int, k: Int,
-                              bits: Int, tables: Int): DataFrame = {
+                   bits: Int = 4, tables: Int = 8): DataFrame = {
     def bucketize(df: DataFrame, id: String, v: String): DataFrame =
       df.select(col(id),
         posexplode(Vectors.detHyperplaneKeys(col(v), dim, bits, tables))
@@ -109,30 +97,6 @@ object Similarity {
       .select("q_id", "n_id").distinct()
     val scored = cand.join(qv, "q_id").join(cv, "n_id")
       .withColumn("cos", Vectors.cosineFold(col("q_v"), col("n_v"), dim))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("cos"), col("rank"))
-  }
-
-  /** xxhash64 arm of [[bucketedTopK]]. */
-  private def bucketedTopKXx(queries: DataFrame, corpus: DataFrame,
-                             idCol: String, vecCol: String, dim: Int, k: Int,
-                             bits: Int, tables: Int): DataFrame = {
-    def bucketize(df: DataFrame, id: String, v: String): DataFrame =
-      df.select(col(id),
-        posexplode(Vectors.hyperplaneBuckets(col(v), dim, bits, tables, seed = 2000))
-          .as(Seq("t", "b")))
-        .withColumn("bk", struct(col("t"), col("b"))).drop("t", "b")
-    val qv = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
-    val cv = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_v"))
-    val q = bucketize(qv, "q_id", "q_v")
-    val c = bucketize(cv, "n_id", "n_v")
-    // ids-only distinct + vector join-back — see the det arm's note
-    val cand = q.join(c, Seq("bk")).filter(col("q_id") =!= col("n_id"))
-      .select("q_id", "n_id").distinct()
-    val scored = cand.join(qv, "q_id").join(cv, "n_id")
-      .withColumn("cos", round(Vectors.cosine(col("q_v"), col("n_v")), 6))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into `private[sql]` Column↔Expression conversion, needed to
   * expose custom Catalyst expressions (e.g.
-  * [[graft.functions.HyperplaneBuckets]]) through the public Column
+  * [[graft.functions.CosineFold]]) through the public Column
   * API. Lives under `org.apache.spark.sql` purely for access; contains
   * no Spark code. */
 object ColumnBridge {

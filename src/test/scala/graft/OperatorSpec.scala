@@ -534,17 +534,17 @@ class OperatorSpec extends SparkSpec {
     assert(got === Seq(("b", 3L, 1L), ("a", 2L, 2L), ("c", 1L, 3L)))
   }
 
-  test("Dedup.minhashLshPairs (XxHash64 arm) recalls an exact duplicate and verifies jaccard") {
+  test("Dedup.minhashLshPairs finds an exact duplicate at threshold 0.9, jaccard 1.0") {
     val base = "a b c d e f g h i j k l m n o p"
     val docs = Seq((1L, base), (2L, base), (3L, "z y x w v u t s r q p2 o2 n2 m2"))
       .toDF("doc_id", "text")
     val got = Dedup.minhashLshPairs(docs, "doc_id", "text",
-      w = 3, numHashes = 16, bands = 8, threshold = 0.9, hash = XxHash64)
+      w = 3, numHashes = 16, bands = 8, threshold = 0.9)
       .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect()
     assert(got.toSeq === Seq((1L, 2L, 1.0)))
   }
 
-  test("Dedup.minhashLshPairs (DetHash default) recalls a near-dup with the exact verified jaccard") {
+  test("Dedup.minhashLshPairs recalls a near-dup with the exact verified jaccard") {
     val base = "a b c d e f g h i j"
     val docs = Seq((1L, base), (2L, base + " k"), (3L, "z y x w v u t s r q"))
       .toDF("doc_id", "text")
@@ -557,7 +557,7 @@ class OperatorSpec extends SparkSpec {
     assert(math.abs(got.head._3 - 8.0 / 9.0) < 1e-12)
   }
 
-  test("Dedup.simhashPairs (DetHash default): identical docs at hamming 0, disjoint docs unpaired") {
+  test("Dedup.simhashPairs: identical docs at hamming 0, disjoint docs unpaired") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy dog"),
@@ -567,7 +567,7 @@ class OperatorSpec extends SparkSpec {
     assert(got === Set((1L, 2L, 0)))
   }
 
-  test("Dedup.embeddingNearDup (DetHash default) pairs near-parallel vectors, not orthogonal ones") {
+  test("Dedup.embeddingNearDup pairs near-parallel vectors, not orthogonal ones") {
     val dim = 64
     def vec(f: Int => Float) = (0 until dim).map(f).toArray
     val embs = Seq(
@@ -584,7 +584,7 @@ class OperatorSpec extends SparkSpec {
     assert(math.abs(got.head._3 - 0.9 / math.sqrt(0.81 + 0.01)) < 1e-6)
   }
 
-  test("Similarity.bucketedTopK (DetHash default) ranks the true nearest neighbor first") {
+  test("Similarity.bucketedTopK ranks the true nearest neighbor first") {
     import graft.operators.Similarity
     val dim = 64
     def vec(f: Int => Float) = (0 until dim).map(f).toArray
@@ -600,14 +600,6 @@ class OperatorSpec extends SparkSpec {
       .select("q_id", "n_id", "rank").as[(Long, Long, Int)].collect()
       .sortBy(_._3)
     assert(got.head === ((1L, 2L, 1)))   // near-parallel vector ranks first
-  }
-
-  test("Dedup.simhashPairs (XxHash64 arm): identical docs at hamming 0, disjoint docs far") {
-    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e f"),
-      (3L, "q r s t u v w x y z")).toDF("doc_id", "text")
-    val got = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3, hash = XxHash64)
-      .select("doc_a", "doc_b", "hamming").as[(Long, Long, Int)].collect()
-    assert(got.toSeq === Seq((1L, 2L, 0)))
   }
 
   test("Dedup.connectedComponents labels transitive chains with the min id") {

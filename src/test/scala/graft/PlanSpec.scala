@@ -346,20 +346,6 @@ class PlanSpec extends SparkSpec {
     assert(!approx.contains("Expand"), approx.take(1200))
   }
 
-  test("fused SimHash64 equals the composed 64-fold form bit-for-bit") {
-    import spark.implicits._
-    val docs = Tables(spark, sf, "documents").limit(300)
-    val diff = docs.select(
-      graft.operators.Dedup.simhash64(col("text")).as("fused"),
-      graft.operators.Dedup.simhash64Composed(col("text")).as("composed"))
-      .filter(col("fused") =!= col("composed")).count()
-    assert(diff === 0)
-    // edge cases: empty token list → 0, and the SQL registration works
-    val edge = spark.sql("SELECT simhash64(array()) AS a, " +
-      "simhash64(CAST(NULL AS ARRAY<STRING>)) AS b").collect()(0)
-    assert(edge.getLong(0) === 0L && edge.isNullAt(1))
-  }
-
   test("ANN recall@5 vs exact top-k ground truth (LSH and IVF)") {
     import spark.implicits._
     // self-oracle: q_sim_topk is the exact brute-force baseline; the
@@ -381,22 +367,19 @@ class PlanSpec extends SparkSpec {
 
   test("MinHash-LSH and embedding-LSH dedup recall vs their exact pair sets") {
     import spark.implicits._
-    // the DetHash default is hash-verified by the DuckDB oracle; these
-    // recall gates cover the XxHash64 arm, whose hashes the oracle
-    // can't reproduce — both arms, both operators, vs exact truth
+    // the oracle checks these operators hash-for-hash against its own
+    // SQL twin; these gates check their LSH recall vs exact truth
     val docs = Tables(spark, sf, "documents")
     val exactPairs = graft.operators.Dedup
       .ngramJaccardPairs(docs, "doc_id", "text", w = 3, threshold = 0.05)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    for (h <- Seq(graft.operators.DetHash, graft.operators.XxHash64)) {
-      val lshPairs = graft.operators.Dedup
-        .minhashLshPairs(docs, "doc_id", "text", w = 3,
-          numHashes = 16, bands = 8, threshold = 0.05, hash = h)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      assert(lshPairs.subsetOf(exactPairs))   // exact-verify ⇒ precision 1
-      val mhRecall = lshPairs.intersect(exactPairs).size.toDouble / exactPairs.size
-      assert(mhRecall >= 0.7, s"minhash($h) recall = $mhRecall < 0.7")
-    }
+    val lshPairs = graft.operators.Dedup
+      .minhashLshPairs(docs, "doc_id", "text", w = 3,
+        numHashes = 16, bands = 8, threshold = 0.05)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(lshPairs.subsetOf(exactPairs))   // exact-verify ⇒ precision 1
+    val mhRecall = lshPairs.intersect(exactPairs).size.toDouble / exactPairs.size
+    assert(mhRecall >= 0.7, s"minhash recall = $mhRecall < 0.7")
 
     // embedding-LSH near-dup vs brute-force cosine pairs ≥ threshold
     val e = Tables(spark, sf, "embeddings").filter(col("vec_id") < 500)
@@ -405,35 +388,14 @@ class PlanSpec extends SparkSpec {
       .filter(col("id_a") < col("id_b"))
       .filter(graft.functions.Vectors.cosine(col("va"), col("vb")) >= 0.35)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    for (h <- Seq(graft.operators.DetHash, graft.operators.XxHash64)) {
-      val near = graft.operators.Dedup
-        .embeddingNearDup(e, "vec_id", "embedding", dim = 64, threshold = 0.35,
-          bits = 4, tables = 8, hash = h)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      assert(near.subsetOf(truth))
-      val emRecall = if (truth.isEmpty) 1.0
-        else near.intersect(truth).size.toDouble / truth.size
-      assert(emRecall >= 0.6, s"embedding($h) near-dup recall = $emRecall < 0.6")
-    }
-  }
-
-  test("fused MinHashSigs equals the composed array_min/transform form bit-for-bit") {
-    import spark.implicits._
-    val shingled = Tables(spark, sf, "documents").limit(300)
-      .select(array_distinct(graft.functions.Text.shingles(col("text"), 3)).as("sh"))
-    val composed = array((0 until 16).map { i =>
-      array_min(transform(col("sh"), s => xxhash64(lit(i), s)))
-    }: _*)
-    val diff = shingled.select(
-      graft.functions.MinHashSigs(col("sh"), 16).as("fused"), composed.as("c"))
-      .filter(not(col("fused") <=> col("c"))).count()
-    assert(diff === 0)
-    // empty shingle set (doc shorter than w) → all-null signature, both forms
-    val empty = Seq("a b").toDF("text")
-      .select(array_distinct(graft.functions.Text.shingles(col("text"), 3)).as("sh"))
-      .select(graft.functions.MinHashSigs(col("sh"), 4).as("fused"), composed.as("c"))
-    val row = empty.collect()(0)
-    assert(row.getSeq[Any](0) === Seq(null, null, null, null))
+    val near = graft.operators.Dedup
+      .embeddingNearDup(e, "vec_id", "embedding", dim = 64, threshold = 0.35,
+        bits = 4, tables = 8)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(near.subsetOf(truth))
+    val emRecall = if (truth.isEmpty) 1.0
+      else near.intersect(truth).size.toDouble / truth.size
+    assert(emRecall >= 0.6, s"embedding near-dup recall = $emRecall < 0.6")
   }
 
   test("star-schema hard hints cover only fixed-size dims or ≤1-row aggregates") {
@@ -533,9 +495,6 @@ class PlanSpec extends SparkSpec {
       .cosineFold(col("a"), col("b"), 3)).collect()).contains("cosine_fold"))
     assert(rootMsgs(ragged.select(graft.functions.Vectors
       .detHyperplaneKeys(col("b"), 3, 4, 2)).collect()).contains("det_hyperplane_keys"))
-    assert(rootMsgs(ragged.select(graft.functions.Vectors
-      .hyperplaneBuckets(col("b"), 3, 4, 2, seed = 7)).collect())
-      .contains("hyperplane_buckets"))
     // and longer-than-dim uses the first dim components, same as the
     // composed folds' element_at(1..dim) — no error, no extra terms
     val long = ragged.select(graft.functions.Vectors
