@@ -36,11 +36,10 @@ object Plans {
     // box slice with both range predicates pushed to the scan
     "q_bucket_join", "q_bucket_rollup", "q_zorder_slice",
     // round 11: the three heaviest round-10 ops' plans (kmeans must
-    // show assignment as ONE narrow projection; ER and span-dedup no
-    // cartesian anywhere — keyed equi-joins only), plus the large-k
-    // kmeans arm (the same projection but with kmeans_argmin carrying
-    // the 64×64 centroid matrix OUTSIDE the plan tree — contrast with
-    // q_kmeans's k·dim literal subtrees)
+    // show assignment as ONE narrow projection, kmeans_argmin carrying
+    // the k×64 centroid matrix OUTSIDE the plan tree at k=8 and k=64
+    // alike; ER and span-dedup no cartesian anywhere — keyed
+    // equi-joins only)
     "q_kmeans", "q_er_match", "q_span_dedup", "q_kmeans_large",
     // round 12: the r11 stress artifact's worst non-output-explained
     // ratio — the plan must show the DERIVED l_shipdate bound pushed to

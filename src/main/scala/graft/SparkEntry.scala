@@ -1754,21 +1754,20 @@ object SparkEntry {
     }),
 
     // Clustering: exact-integer Lloyd k-means over the embeddings —
-    // corpus curation cells (SemDeDup-style) with centroids as driver
-    // literals (assignment = one narrow projection, update = k·dim
-    // map-side-combined partial sums). Integer arithmetic end to end
-    // makes the result partitioning-independent and oracle-exact.
+    // corpus curation cells (SemDeDup-style) with the centroid matrix
+    // riding the kmeans_argmin expression (assignment = one narrow
+    // projection, update = k·dim map-side-combined partial sums).
+    // Integer arithmetic end to end makes the result
+    // partitioning-independent and oracle-exact.
     "q_kmeans" -> ((s, dir) => {
       Clustering.kmeansAssign(
         t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, iters = 2)
         .orderBy("vec_id")
     }),
 
-    // k-means at k=64: k > fusedThreshold, so the assignment runs the
-    // reference-object KMeansArgminExpr arm — this query puts the
-    // large-k codegen path itself under the DuckDB oracle (the k=8
-    // query oracles the literal arm; both are exact integer argmin,
-    // so the SAME unrolled SQL serves with LIMIT 64 init)
+    // k-means at k=64: the same kmeans_argmin assignment with a
+    // 64-row centroid matrix under the DuckDB oracle — the SAME
+    // unrolled SQL as q_kmeans serves, with LIMIT 64 init
     "q_kmeans_large" -> ((s, dir) => {
       Clustering.kmeansAssign(
         t(s, dir, "embeddings"), "vec_id", "embedding", k = 64, iters = 1)
@@ -2439,7 +2438,7 @@ object SparkEntry {
 
   /** DuckDB fragment: exact integer squared-L2 between two quantized
     * 64-dim long vectors — BIGINT end to end, so the fold order is
-    * irrelevant (mirrors Clustering.kmeansAssign's zip_with sum). */
+    * irrelevant (mirrors KMeansArgminExpr's integer loop). */
   private def intDist2Sql(x: String, y: String): String =
     "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(64), " +
       s"dd -> ($x[dd+1]-$y[dd+1])*($x[dd+1]-$y[dd+1]))), (a, x) -> a + x)"
@@ -4132,9 +4131,9 @@ object SparkEntry {
     // hash-mismatched under the driver's type-sensitive compare
     "q_kmeans" -> kmeansOracleSql(k = 8, iters = 2),
 
-    // identical unrolled recipe at k=64/iters=1 — the Spark side runs
-    // the fused reference-object argmin (k > fusedThreshold), so this
-    // oracle verifies the large-k codegen path end to end
+    // identical unrolled recipe at k=64/iters=1 — the oracle for the
+    // kmeans_argmin codegen path at a k where a literal argmin would
+    // have folded 64·64 nodes into the plan
     "q_kmeans_large" -> kmeansOracleSql(k = 64, iters = 1),
 
     // mirrors bucketedTopK: det-hyperplane keys on

@@ -105,7 +105,7 @@ object StressSmoke {
     // replicas — candidate work scales linearly); k-means runs the
     // canonical full-corpus query as-is (embeddings replicate)
     "q_span_dedup", "q_er_match", "q_kmeans",
-    // round 11: the large-k fused-argmin arm on the replicated corpus
+    // round 11: the k=64 kmeans_argmin face on the replicated corpus
     "q_kmeans_large",
     // round 12: the sketch-MAD arm (the 100 TB answer to the exact
     // double-median's 30.6/100 x100 probe — heaviest flat-output probe)

@@ -126,11 +126,6 @@ object Tables {
     if (df.rdd.getNumPartitions < width) df.repartition(width, by: _*) else df
   }
 
-  /** Register every table as a temp view so `spark.sql` works against
-    * the same names the DuckDB oracle uses. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
-
   // ------------------------------------------------------- event time
 
   // `events.ts` arrives in whichever physical type the testdata

@@ -8,11 +8,11 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
-/** Argmin over a centroid MATRIX for the large-k Lloyd assignment
+/** Argmin over a centroid MATRIX for the Lloyd assignment
   * ([[graft.operators.Clustering.kmeansAssign]]).
   *
-  * Why this exists: the literal-path `best()` folds the centroids into
-  * the plan as k·dim `Literal` nodes inside k `zip_with`/`aggregate`
+  * Why this exists: an argmin composed of builtins folds the centroids
+  * into the plan as k·dim `Literal` nodes inside k `zip_with`/`aggregate`
   * subtrees. At the SemDeDup-style k (10k+ cells) that is ~10⁶ AST
   * nodes — analysis and codegen blow up long before any data moves.
   * Here the matrix rides OUTSIDE the tree as one reference object
@@ -21,14 +21,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * whole-stage-codegen projection — no join, no shuffle, exactly the
   * shape MLlib's Lloyd iteration has with its broadcast centroids.
   *
-  * Semantics are IDENTICAL to the literal path (spec'd equal at k=8):
-  * exact integer squared-L2 over the quantized vector, ties to the
-  * smaller cluster index (strict `<` keeps the first minimum). Null
-  * vector elements are outside the contract (quantization makes the
-  * input non-null by construction); a vector whose length differs from
-  * the centroid dim in EITHER direction throws — the literal arm's
-  * zip_with null-poisons ragged rows, so silently truncating a long
-  * vector here would make the two arms quietly diverge.
+  * Semantics: exact integer squared-L2 over the quantized vector, ties
+  * to the smaller cluster index (strict `<` keeps the first minimum) —
+  * what the q_kmeans / q_kmeans_large oracle SQL computes, and what
+  * CurationOpsSpec's plain-Scala Lloyd reference checks. Null vector
+  * elements are outside the contract (quantization makes the input
+  * non-null by construction); a vector whose length differs from the
+  * centroid dim in EITHER direction throws rather than being silently
+  * truncated or padded.
   *
   * The matrix is held as `Seq[Seq[Long]]` so the case-class equals/
   * hashCode are structural: two expressions built from equal matrices
@@ -84,7 +84,7 @@ object KMeansArgminExpr {
     val dim = cents(0).length
     // checked once per row, outside the k loop: shorter AND longer
     // vectors both throw (truncating a long vector would silently
-    // diverge from the literal arm, which null-poisons ragged rows)
+    // assign it by a prefix of its coordinates)
     if (v.numElements() != dim)
       throw new IllegalArgumentException(
         s"kmeans_argmin: vector length ${v.numElements()} != centroid dim $dim")

@@ -22,21 +22,15 @@ import org.apache.spark.sql.functions._
   * cluster geometry (inputs are unit-scale embeddings).
   *
   * Scale design (the classic Lloyd-on-Spark shape, cf. Spark MLlib
-  * KMeans): centroids live on the driver as k·dim literals (k·dim
-  * longs — bounded by parameters, not data) and are folded into the
-  * assignment expression, so assignment is ONE narrow projection over
+  * KMeans): centroids live on the driver (k·dim longs — bounded by
+  * parameters, not data) and ride into the assignment expression as
+  * one matrix, so assignment is ONE narrow projection over
   * the corpus — no join, no shuffle. The update aggregates
   * (cell, dim) partial sums map-side: shuffle is k·dim rows per
   * partition regardless of corpus size. Empty cells keep their
   * previous centroid (deterministic, mirrored by the oracle).
   */
 object Clustering {
-
-  /** Above this k the literal-argmin plan's AST size (k·dim Literal
-    * nodes) dominates; the fused reference-object expression takes
-    * over. 32 is conservative — both arms are fast there — chosen so
-    * the switch happens well before codegen limits, not at them. */
-  val fusedThreshold = 32
 
   /** Assign every vector to one of k clusters after `iters` Lloyd
     * update rounds. Deterministic init: the k smallest-id vectors are
@@ -45,40 +39,22 @@ object Clustering {
     * squared distance (quantized domain) to the final centroid;
     * ties broken toward the smaller cluster index.
     *
-    * Two equivalent argmin arms (spec'd equal at k=8):
-    * the composed-builtins form folds k·dim literal nodes into the
-    * plan — oracle-mirrorable, but plan/codegen size grows with k and
-    * becomes the bottleneck around k ≈ 100. Past `fusedThreshold`
-    * (or when `fused = Some(true)` forces it; `Some(false)` forces the
-    * literal arm, for calibration) the assignment switches to
-    * [[graft.functions.KMeansArgminExpr]], which carries the centroid
-    * matrix as ONE reference object outside the expression tree — the
-    * plan stays O(1) in k, which is what a real SemDeDup pass
-    * (k in the thousands) needs. Measured (COVERAGE.md's k-means row;
-    * sf0.1 embeddings, iters=0, assignment only): the literal arm's
-    * end-to-end time grows with k — 0.8 s at k=8, 1.4 s at k=64,
-    * 4.7 s at k=256 (codegen + evaluation of the k·dim expression
-    * tree dominates; only 5k rows flow) — while the fused arm holds
-    * ~0.2 s flat through k=1024 with ~0.01 s plan build. */
+    * The argmin is [[graft.functions.KMeansArgminExpr]], which carries
+    * the centroid matrix as ONE reference object outside the
+    * expression tree, so the plan stays O(1) in k (a SemDeDup pass
+    * runs k in the thousands). Measured (COVERAGE.md's k-means row;
+    * sf0.1 embeddings, iters=0, assignment only): ~0.2 s flat through
+    * k=1024 with ~0.01 s plan build, where an argmin composed of k·dim
+    * literal nodes took 0.8 s at k=8 and 4.7 s at k=256. */
   def kmeansAssign(vecs: DataFrame, idCol: String, vecCol: String,
-                   k: Int, iters: Int, fused: Option[Boolean] = None): DataFrame = {
+                   k: Int, iters: Int): DataFrame = {
     require(k >= 2 && iters >= 0, "need k >= 2 and iters >= 0")
-    val useFused = fused.getOrElse(k > fusedThreshold)
     val q = vecs.select(col(idCol).as("id"),
       transform(col(vecCol),
         x => floor(x.cast("double") * lit(1000000.0)).cast("long")).as("vq"))
 
-    // argmin over k centroid literals: array_min on (dist2, cluster)
-    // structs — lexicographic struct ordering gives the min distance
-    // with ties to the smaller cluster index, all in one projection
     def best(cents: Array[Array[Long]]): Column =
-      if (useFused) graft.functions.KMeansArgminExpr(col("vq"), cents)
-      else array_min(array(cents.zipWithIndex.map { case (c, j) =>
-        struct(
-          aggregate(zip_with(col("vq"), typedLit(c.toSeq),
-            (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x).as("dist2"),
-          lit(j).as("cluster"))
-      }: _*))
+      graft.functions.KMeansArgminExpr(col("vq"), cents)
 
     var cents: Array[Array[Long]] = q.orderBy("id").limit(k).collect()
       .map(_.getSeq[Long](1).toArray)

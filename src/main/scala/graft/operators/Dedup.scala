@@ -138,9 +138,9 @@ object Dedup {
     * the corpus-wide groupBy twice; it stays cached for reuse across
     * the caller's actions. Repeat calls over the SAME corpus plan
     * reuse the one cache entry (Spark's CacheManager dedupes by
-    * analyzed plan); a long-lived session processing MANY distinct
-    * corpora should call [[releaseBloomWinners]] after consuming each
-    * result, or the per-corpus winner caches accumulate. */
+    * analyzed plan); in a long-lived session processing MANY distinct
+    * corpora the per-corpus winner caches accumulate until the session
+    * cache is cleared (`spark.catalog.clearCache()`). */
   def applyExactBloom(docs: DataFrame, idCol: String, textCol: String,
                       expectedWinners: Long = 1000000L,
                       fpp: Double = 0.03): DataFrame = {
@@ -156,7 +156,7 @@ object Dedup {
         s"applyExactBloom: idCol '$idCol' must be an integral type " +
           s"(build inserts native values, probe hashes longs); got ${dt.simpleString}")
     }
-    val winners = bloomWinners(docs, idCol, textCol)
+    val winners = exact(docs, idCol, textCol).select(col("keep_id").as(idCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bloom = winners.stat.bloomFilter(idCol, expectedWinners, fpp)
     // the filter rides as a binary literal into Spark's native
@@ -176,17 +176,6 @@ object Dedup {
       ColumnBridge.expression(col(idCol).cast("long"))))
     docs.filter(mightWin).join(winners, Seq(idCol), "left_semi")
   }
-
-  /** Release the winner-id cache [[applyExactBloom]] holds for `docs`
-    * (same idCol/textCol), after the returned DataFrame has been fully
-    * consumed. Safe to call whether or not the entry still exists:
-    * uncaching matches by logical plan, so this constructs the same
-    * winners frame and drops its cache entry. */
-  def releaseBloomWinners(docs: DataFrame, idCol: String, textCol: String): Unit =
-    bloomWinners(docs, idCol, textCol).unpersist(blocking = false)
-
-  private def bloomWinners(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    exact(docs, idCol, textCol).select(col("keep_id").as(idCol))
 
   /** Benchmark decontamination: count, per training doc, the distinct
     * word-`w`-grams it shares with an evaluation/benchmark corpus —

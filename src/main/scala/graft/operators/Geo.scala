@@ -174,11 +174,4 @@ object Geo {
       val (lat, lon) = utm19sCentroid(xs, ys, parts)
       CentroidLL(lat, lon)
     })
-
-  /** Grid cell id for spatially-bucketed joins (the 100 TB path for the
-    * NN join, SURVEY §7 risk 7): equi-join on cell + 8 neighbors
-    * replaces the cross join once the right side outgrows broadcast. */
-  def gridCell(lat: Column, lon: Column, cellDeg: Double): Column =
-    struct(floor(lat / cellDeg).cast("int").as("gy"),
-      floor(lon / cellDeg).cast("int").as("gx"))
 }

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   *
   * J2 (ref `temperaturas_rm.py:121-147`): nearest-neighbor assignment —
   * the reference materializes a full scipy `cdist` matrix and argmins
-  * rows; here it is a broadcast cross join + per-left-key `row_number`
-  * (rank-1), which Catalyst executes as BroadcastNestedLoopJoin with
-  * the small side broadcast — the big side streams, never shuffles.
+  * rows; here [[nearestJoin]] is a broadcast cross join reduced by a
+  * map-side-combined `min(struct(dist, …))` argmin — the big side
+  * streams, never shuffles.
   *
   * J3+A6 (ref nb c29-c32): gravity model flow matrix + row-stochastic
   * normalization — the reference's O(n²) Python loop becomes a cross
@@ -18,10 +18,9 @@ import org.apache.spark.sql.functions._
   * normalization a window sum. Canonical storage stays long-form;
   * pivot to a dense matrix only at presentation time.
   *
-  * Scale path (SURVEY §7 risk 7): when the right side stops being
-  * broadcastable, swap the cross join for a grid-bucketed join (bin
-  * lat/lon to cells, equi-join on cell + 8 neighbors) behind the same
-  * signature; callers are unaffected.
+  * Scale path (SURVEY §7 risk 7): for 1-D fixed-point values whose
+  * right side scales with the corpus, [[nearestJoinTicks1D]] needs no
+  * broadcast and no cross join.
   */
 object Nearest {
 
@@ -33,11 +32,10 @@ object Nearest {
     * ordering is lexicographic, so the min IS the argmin — rather than
     * a rank-1 window: the aggregate partial-combines map-side, so only
     * one candidate row per left row reaches the shuffle instead of the
-    * whole |left|×|right| cross product. (`leftKey` is retained in the
-    * signature for the grid-bucketed swap-in; grouping is by all left
-    * columns.) */
+    * whole |left|×|right| cross product. Grouping is by all left
+    * columns. */
   def nearestJoin(left: DataFrame, right: DataFrame,
-                  dist: Column, leftKey: Seq[String], tieBreak: Seq[Column]): DataFrame = {
+                  dist: Column, tieBreak: Seq[Column]): DataFrame = {
     val leftCols = left.columns.toSeq
     val rightCols = right.columns.toSeq
     val crossed = left.crossJoin(broadcast(right)).withColumn("_dist", dist)
@@ -85,21 +83,6 @@ object Nearest {
       .select(leftCols.map(col) ++ rightCols.map(col) :+ col("_dist"): _*)
   }
 
-  /** True when Catalyst's size estimate for `df` fits the session's
-    * `autoBroadcastJoinThreshold` — the same signal the planner uses,
-    * derived from file statistics (no job is triggered). Callers use it
-    * to pick between a broadcast kernel and its shuffle-based scale
-    * twin at plan-build time. */
-  def fitsBroadcast(df: DataFrame): Boolean = {
-    val s = df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
-    if (s.startsWith("-")) false
-    else {
-      val thr = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
-      thr > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= thr
-    }
-  }
-
   /** The scale twin of [[nearestJoinQuantized]] for 1-D values (money,
     * sensor ticks): NO broadcast, NO cross join — safe when the right
     * side scales with the corpus. Same contract and same winner: among
@@ -124,8 +107,8 @@ object Nearest {
     * the cross-bucket handoff — the last right tick below a bucket /
     * the first right tick above it — rides a per-bucket carry table:
     * one `max`/`min` aggregate per bucket, collected (≤ `maxBuckets`
-    * rows, the same O(k)-driver-literal pattern as the k-means
-    * centroids), prefix/suffix-scanned on the driver, and broadcast
+    * rows, bounded by a parameter like the k-means centroids),
+    * prefix/suffix-scanned on the driver, and broadcast
     * back as `(bucket, predCarry, succCarry)`. A probe's pred is its
     * within-bucket `last`, or the carry when its bucket has no right
     * tick at or below it — the within-bucket candidate is always ≥
@@ -249,46 +232,6 @@ object Nearest {
       .join(right, col("_wk") === col(rightKey))
       .withColumn("_dist", abs(leftVal - rightVal))
       .select(leftCols.map(col) ++ rightCols.map(col) :+ col("_dist"): _*)
-  }
-
-  /** The 100 TB path for the nearest-neighbor join (SURVEY §7 risk 7):
-    * grid-bucketed spatial join. Right points are assigned to
-    * `cellDeg`-sized lat/lon cells once; each left point probes its own
-    * cell plus the 8 neighbors via a plain equi-join on the cell id,
-    * then the same `min(struct(...))` argmin reduces candidates. Work
-    * is proportional to cell occupancy, not |left|×|right|, and the
-    * shuffle key is the cell id — no broadcast or cross product.
-    *
-    * Contract: exact whenever the true nearest neighbor lies within
-    * ±1 cell (guaranteed if max NN distance < `cellDeg`); left rows
-    * with an empty 3×3 neighborhood are dropped (use a coarser grid or
-    * the broadcast [[nearestJoin]] for guaranteed-total output).
-    * Columns `latL/lonL` belong to `left`, `latR/lonR` to `right`;
-    * the frames must not share column names. Adds `_dist` (euclidean
-    * in degrees, matching [[nearestJoin]] with [[Geo.euclidDeg]]).
-    */
-  def gridNearestJoin(left: DataFrame, right: DataFrame,
-                      latL: String, lonL: String, latR: String, lonR: String,
-                      cellDeg: Double, tieBreak: Seq[Column]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val rightCols = right.columns.toSeq
-    val cellR = Geo.gridCell(col(latR), col(lonR), cellDeg)
-    val bucketedR = right.withColumn("_cell", cellR)
-    // left probes 9 cells: its own + 8 neighbors
-    val offsets = for { dy <- -1 to 1; dx <- -1 to 1 } yield (dy, dx)
-    val probeCells = array(offsets.map { case (dy, dx) =>
-      struct(
-        (floor(col(latL) / cellDeg).cast("int") + dy).as("gy"),
-        (floor(col(lonL) / cellDeg).cast("int") + dx).as("gx"))
-    }: _*)
-    val probedL = left.withColumn("_cell", explode(probeCells))
-    val crossedInCell = probedL.join(bucketedR, "_cell")
-      .withColumn("_dist", Geo.euclidDeg(col(latL), col(lonL), col(latR), col(lonR)))
-    val payload = struct(rightCols.map(col): _*).as("_r")
-    crossedInCell.groupBy(leftCols.map(col): _*)
-      .agg(min(struct(col("_dist") +: tieBreak :+ payload: _*)).as("_m"))
-      .select(leftCols.map(col) ++
-        rightCols.map(c => col(s"_m._r.$c").as(c)) :+ col("_m._dist").as("_dist"): _*)
   }
 
   /** Gravity flows over a zone table `(zone, mass)`:

@@ -6,13 +6,10 @@ import org.apache.spark.sql.functions._
 /** Deterministic dataset splitting for training pipelines: every row is
   * assigned to a named split by a pure function of its id, so the
   * assignment is stable across runs, engines, and repartitioning —
-  * unlike `randomSplit`, which depends on partition layout. Two
-  * assigners:
-  *
-  *  - `byModulo`: bucket = id mod 100 — transparent, SQL-reproducible
-  *    (the oracle-checked variant); correct when ids are uniform.
-  *  - `byHash`: bucket = xxhash64(id, salt) mod 100 — robust to
-  *    structured ids (sequential, clustered); the production default.
+  * unlike `randomSplit`, which depends on partition layout. The
+  * samplers bucket ids by transparent arithmetic (`byModulo`: id mod
+  * 100; the others: Knuth's multiplicative hash), so every assignment
+  * is SQL-reproducible.
   */
 object Sampling {
 
@@ -25,11 +22,6 @@ object Sampling {
 
   def byModulo(df: DataFrame, idCol: String, cuts: Seq[(String, Int)]): DataFrame =
     df.withColumn("split", splitColumn(pmod(col(idCol), lit(100)).cast("int"), cuts))
-
-  def byHash(df: DataFrame, idCol: String, cuts: Seq[(String, Int)],
-             salt: Long = 42L): DataFrame =
-    df.withColumn("split",
-      splitColumn(pmod(xxhash64(col(idCol), lit(salt)), lit(100)).cast("int"), cuts))
 
   /** Leakage-safe split: assign whole NEAR-DUP CLUSTERS to splits, not
     * individual docs. A per-doc split lets two near-identical documents
@@ -124,31 +116,27 @@ object Sampling {
       .drop("_key")
   }
 
-  /** Deterministic stratified sampling: keep a row iff its hash bucket
-    * (0..999999, a pure function of the id) falls under the stratum's
-    * rate — downsample over-represented strata (the classic
+  /** Deterministic stratified sampling: keep a row iff its
+    * multiplicative-hash bucket — (id · 2654435761) mod 10⁶, Knuth's
+    * constant, a pure function of the id — falls under the stratum's
+    * rate. It downsamples over-represented strata (the classic
     * language/source rebalancing pass of a pretraining mix) with
-    * run/partitioning/engine-stable membership, unlike `sampleBy`.
-    * Strata missing from `rates` keep `defaultRate`. A row kept at
-    * rate r stays kept at any rate ≥ r (nested samples — raising a
-    * stratum's rate only ADDS rows, an audit-friendly property random
-    * samplers lack). */
-  def stratified(df: DataFrame, stratumCol: String, idCol: String,
-                 rates: Map[String, Double], defaultRate: Double = 1.0,
-                 salt: Long = 7L): DataFrame =
-    stratifiedBy(df, pmod(xxhash64(col(idCol), lit(salt)), lit(1000000L)),
-      stratumCol, rates, defaultRate)
-
-  /** [[stratified]] with a transparent multiplicative-hash bucket —
-    * (id · 2654435761) mod 10⁶, Knuth's constant — instead of xxhash64.
-    * Same nested-sample property; fully reproducible in ANSI SQL (the
-    * oracle-checked variant, like `byModulo` vs `byHash`). Safe under
-    * ANSI overflow checking for ids up to ~2⁶³/2654435761 ≈ 3.5e9. */
+    * run/partitioning/engine-stable membership, unlike `sampleBy`, and
+    * is fully reproducible in ANSI SQL (oracle-checked). Strata missing
+    * from `rates` keep `defaultRate`. A row kept at rate r stays kept
+    * at any rate ≥ r (nested samples — raising a stratum's rate only
+    * ADDS rows, an audit-friendly property random samplers lack). Safe
+    * under ANSI overflow checking for ids up to ~2⁶³/2654435761 ≈
+    * 3.5e9. */
   def stratifiedByModulo(df: DataFrame, stratumCol: String, idCol: String,
                          rates: Map[String, Double],
-                         defaultRate: Double = 1.0): DataFrame =
-    stratifiedBy(df, pmod(col(idCol) * lit(2654435761L), lit(1000000L)),
-      stratumCol, rates, defaultRate)
+                         defaultRate: Double = 1.0): DataFrame = {
+    val threshold = rates.foldLeft(lit(defaultRate * 1000000L)) {
+      case (rest, (stratum, rate)) =>
+        when(col(stratumCol) === stratum, lit(rate * 1000000L)).otherwise(rest)
+    }
+    df.filter(pmod(col(idCol) * lit(2654435761L), lit(1000000L)) < threshold)
+  }
 
   /** Deterministic per-row weighted sampling: keep a row iff its
     * multiplicative-hash bucket falls under `rate` (a Column in [0,1] —
@@ -159,16 +147,6 @@ object Sampling {
   def byRate(df: DataFrame, idCol: String, rate: Column): DataFrame =
     df.filter(pmod(col(idCol) * lit(2654435761L), lit(1000000L)) <
       rate * lit(1000000L))
-
-  private def stratifiedBy(df: DataFrame, bucket: Column, stratumCol: String,
-                           rates: Map[String, Double],
-                           defaultRate: Double): DataFrame = {
-    val threshold = rates.foldLeft(lit(defaultRate * 1000000L)) {
-      case (rest, (stratum, rate)) =>
-        when(col(stratumCol) === stratum, lit(rate * 1000000L)).otherwise(rest)
-    }
-    df.filter(bucket < threshold)
-  }
 
   /** Mixture sampling: downsample each group so the OUTPUT's group
     * shares match `targets` (the data-mixing pass of a pretraining
@@ -183,11 +161,11 @@ object Sampling {
     * exactly.
     *
     * Scale shape: one tiny groupBy for the targeted-group counts
-    * (≤ |targets| rows, collected — bounded driver literals, the
-    * k-means-centroid pattern), the binding scale folded on the
-    * driver, and the per-group rates riding the corpus as a literal
-    * when-chain — the corpus itself streams through one filter; the
-    * plan has no join, no window, no shuffle. */
+    * (≤ |targets| rows, collected — bounded driver literals), the
+    * binding scale folded on the driver, and the per-group rates
+    * riding the corpus as a literal when-chain — the corpus itself
+    * streams through one filter; the plan has no join, no window, no
+    * shuffle. */
   def mixture(df: DataFrame, groupCol: String, idCol: String,
               targets: Map[String, Double]): DataFrame = {
     require(targets.nonEmpty && targets.values.forall(_ > 0),
@@ -197,9 +175,9 @@ object Sampling {
         when(col(groupCol) === g, lit(share)).otherwise(rest)
     }
     // per-group counts of the TARGETED groups only: ≤ |targets| rows,
-    // collected to the driver (the same bounded O(k)-literal pattern
-    // as the k-means centroids — the binding scale is a fold over a
-    // handful of numbers, not a distributed computation). The corpus
+    // collected to the driver (bounded driver literals — the binding
+    // scale is a fold over a handful of numbers, not a distributed
+    // computation). The corpus
     // then streams through ONE filter of pure literal expressions: no
     // join, no window, no shuffle anywhere in the plan (round 13 —
     // this replaced a counts-dim global window, the guard class the

@@ -73,7 +73,7 @@ object TemperaturasRM {
     val asignado = Nearest.nearestJoin(
       rm, estaciones,
       Geo.euclidDeg(col("lat_centroid"), col("lon_centroid"), col("est_lat"), col("est_lon")),
-      leftKey = Seq("Comuna"), tieBreak = Seq(col("Codigo_Estacion")))
+      tieBreak = Seq(col("Codigo_Estacion")))
       .withColumn("Distancia_Estacion_km", Geo.degToKm(col("_dist")))  // ref :130
       .select("Comuna", "Codigo_Estacion", "Distancia_Estacion_km")
     asignado.join(temperaturas, Seq("Codigo_Estacion"))  // fan-out, ref :135-147

@@ -1,14 +1,9 @@
 package graft.sources
 
-import java.io.DataInputStream
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,79 +24,32 @@ import org.apache.spark.unsafe.types.UTF8String
   * D→date (yyyymmdd). Deleted records (0x2A flag) are skipped (but
   * still advance `_gid`, keeping alignment with the .shp side).
   *
-  * Scale note: one InputPartition per file — DBF files are small
-  * attribute sidecars; a directory of them parallelizes per-file. The
-  * parsed output is immediately columnar downstream (project/filter
-  * prune as usual); for repeated analytics convert to parquet once.
+  * One file per load, through the shared [[FileSource]] chain.
   */
-class DbfDataSource extends TableProvider with org.apache.spark.sql.sources.DataSourceRegister {
+class DbfDataSource extends FileSource {
   override def shortName(): String = "dbf"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val base = DbfUtil.schemaOf(options.get("path"))
-    if (options.getBoolean("gid", false))
+  private def withGid(options: CaseInsensitiveStringMap): Boolean =
+    options.getBoolean("gid", false)
+
+  override def schemaOf(file: String, options: CaseInsensitiveStringMap): StructType = {
+    val base = DbfUtil.schemaOf(file)
+    if (withGid(options))
       StructType(StructField("_gid", IntegerType, nullable = false) +: base.fields)
     else base
   }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new DbfTable(properties.get("path"), schema)
-
-  override def supportsExternalMetadata(): Boolean = false
-}
-
-private[sources] class DbfTable(path: String, schema: StructType)
-  extends Table with SupportsRead {
-  override def name(): String = s"dbf:$path"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new DbfScanBuilder(path, schema)
-}
-
-private[sources] class DbfScanBuilder(path: String, schema: StructType)
-  extends ScanBuilder with Scan with Batch {
-  override def build(): Scan = this
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(DbfPartition(path))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DbfReaderFactory(schema)
-}
-
-private[sources] case class DbfPartition(path: String) extends InputPartition
-
-private[sources] class DbfReaderFactory(schema: StructType)
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new DbfReader(partition.asInstanceOf[DbfPartition].path, schema)
-}
-
-private[sources] class DbfReader(path: String, schema: StructType)
-  extends PartitionReader[InternalRow] {
-  private val (fields, records) = DbfUtil.readAll(path)
-  private val withGid = schema.nonEmpty && schema.head.name == "_gid"
-  private val dataSchema = if (withGid) StructType(schema.fields.drop(1)) else schema
-  private var idx = 0
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (idx < records.length) {
-      val rec = records(idx); idx += 1   // idx is now the 1-based gid
-      if (rec(0) != '*') {   // 0x2A marks a deleted record
+  override def decode(file: String, options: CaseInsensitiveStringMap,
+                      schema: StructType): Iterator[InternalRow] = {
+    val (fields, records) = DbfUtil.readAll(file)
+    val gid = withGid(options)
+    val dataSchema = if (gid) StructType(schema.fields.drop(1)) else schema
+    records.iterator.zipWithIndex.collect {
+      case (rec, i) if rec(0) != '*' =>   // 0x2A marks a deleted record
         val values = DbfUtil.parseValues(rec, fields, dataSchema)
-        current = InternalRow.fromSeq(
-          if (withGid) Integer.valueOf(idx) +: values else values)
-        return true
-      }
+        InternalRow.fromSeq(if (gid) Integer.valueOf(i + 1) +: values else values)
     }
-    false
   }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }
 
 private[sources] object DbfUtil {
@@ -138,14 +86,14 @@ private[sources] object DbfUtil {
     case _ => StringType
   }
 
-  def schemaOf(path: String): StructType = {
-    val bytes = Files.readAllBytes(Paths.get(stripScheme(path)))
+  def schemaOf(file: String): StructType = {
+    val bytes = Files.readAllBytes(Paths.get(file))
     val (fields, _, _, _) = readHeader(bytes)
     StructType(fields.map(f => StructField(f.name, sparkType(f), nullable = true)))
   }
 
-  def readAll(path: String): (Seq[DbfField], Array[Array[Byte]]) = {
-    val bytes = Files.readAllBytes(Paths.get(stripScheme(path)))
+  def readAll(file: String): (Seq[DbfField], Array[Array[Byte]]) = {
+    val bytes = Files.readAllBytes(Paths.get(file))
     val (fields, nRecords, headerLen, recordLen) = readHeader(bytes)
     val recs = Array.tabulate(nRecords) { i =>
       val start = headerLen + i * recordLen
@@ -169,7 +117,4 @@ private[sources] object DbfUtil {
         case _ => UTF8String.fromString(raw)
       }
     }
-
-  private def stripScheme(p: String): String =
-    if (p.startsWith("file:")) p.stripPrefix("file:") else p
 }

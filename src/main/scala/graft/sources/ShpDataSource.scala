@@ -2,13 +2,9 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
-import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -41,62 +37,21 @@ import scala.collection.mutable
   * Centroids: [[graft.operators.Geo.utm19sCentroidUdf]] reduces
   * (xs, ys, parts) to the reference's CRS-chain centroid.
   *
-  * Scale note: one InputPartition per file, like the DBF side —
-  * admin-boundary shapefiles are small dims (the reference's is 346
-  * comunas); convert to parquet once for repeated analytics.
+  * One file per load, through the shared [[FileSource]] chain, like
+  * the DBF side.
   */
-class ShpDataSource extends TableProvider with org.apache.spark.sql.sources.DataSourceRegister {
+class ShpDataSource extends FileSource {
   override def shortName(): String = "shp"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+  override def schemaOf(file: String, options: CaseInsensitiveStringMap): StructType =
     ShpUtil.schema
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new ShpTable(properties.get("path"), schema)
-
-  override def supportsExternalMetadata(): Boolean = false
-}
-
-private[sources] class ShpTable(path: String, schema: StructType)
-  extends Table with SupportsRead {
-  override def name(): String = s"shp:$path"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ShpScanBuilder(path, schema)
-}
-
-private[sources] class ShpScanBuilder(path: String, schema: StructType)
-  extends ScanBuilder with Scan with Batch {
-  override def build(): Scan = this
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(ShpPartition(path))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ShpReaderFactory
-}
-
-private[sources] case class ShpPartition(path: String) extends InputPartition
-
-private[sources] class ShpReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ShpReader(partition.asInstanceOf[ShpPartition].path)
-}
-
-private[sources] class ShpReader(path: String) extends PartitionReader[InternalRow] {
-  private val records = ShpUtil.readAll(path)
-  private var idx = 0
-  override def next(): Boolean = idx < records.length
-  override def get(): InternalRow = {
-    val r = records(idx); idx += 1
-    InternalRow(r.gid, r.shapeType, r.xs.length,
-      ArrayData.toArrayData(r.parts), ArrayData.toArrayData(r.xs),
-      ArrayData.toArrayData(r.ys))
-  }
-  override def close(): Unit = ()
+  override def decode(file: String, options: CaseInsensitiveStringMap,
+                      schema: StructType): Iterator[InternalRow] =
+    ShpUtil.readAll(file).iterator.map(r =>
+      InternalRow(r.gid, r.shapeType, r.xs.length,
+        ArrayData.toArrayData(r.parts), ArrayData.toArrayData(r.xs),
+        ArrayData.toArrayData(r.ys)))
 }
 
 private[sources] object ShpUtil {
@@ -112,11 +67,8 @@ private[sources] object ShpUtil {
   case class ShpRecord(gid: Int, shapeType: Int, parts: Array[Int],
                        xs: Array[Double], ys: Array[Double])
 
-  private def stripScheme(p: String): String =
-    if (p.startsWith("file:")) p.stripPrefix("file:") else p
-
-  def readAll(path: String): Array[ShpRecord] = {
-    val bytes = Files.readAllBytes(Paths.get(stripScheme(path)))
+  def readAll(file: String): Array[ShpRecord] = {
+    val bytes = Files.readAllBytes(Paths.get(file))
     val buf = ByteBuffer.wrap(bytes)
     buf.order(ByteOrder.BIG_ENDIAN)
     val fileCode = buf.getInt(0)

@@ -3,15 +3,6 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
@@ -31,84 +22,14 @@ import scala.collection.mutable
   * `spark.read.format("graft.sources.XlsDataSource")
   *   .option("sheet", name).option("header", "true").load(path)`.
   *
-  * Typing and scale notes are shared with the XLSX side ([[SheetGrid]];
-  * one InputPartition per file — these are small dimension inputs).
+  * One file per load, through the shared [[FileSource]] chain; options,
+  * header handling and typing are [[SheetSource]]'s, as on the XLSX side.
   */
-class XlsDataSource extends TableProvider with org.apache.spark.sql.sources.DataSourceRegister {
+class XlsDataSource extends SheetSource {
   override def shortName(): String = "xls"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SheetGrid.schemaOf(
-      XlsUtil.parse(options.get("path"), Option(options.get("sheet"))),
-      header = options.getBoolean("header", true))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new XlsTable(properties.get("path"), schema,
-      Option(properties.get("sheet")),
-      !"false".equalsIgnoreCase(properties.getOrDefault("header", "true")))
-
-  override def supportsExternalMetadata(): Boolean = false
-}
-
-private[sources] class XlsTable(path: String, schema: StructType,
-                                sheet: Option[String], header: Boolean)
-  extends Table with SupportsRead {
-  override def name(): String = s"xls:$path"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new XlsScanBuilder(path, schema, sheet, header)
-}
-
-private[sources] class XlsScanBuilder(path: String, schema: StructType,
-                                      sheet: Option[String], header: Boolean)
-  extends ScanBuilder with Scan with Batch {
-  override def build(): Scan = this
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(XlsPartition(path, sheet, header))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new XlsReaderFactory(schema)
-}
-
-private[sources] case class XlsPartition(path: String, sheet: Option[String],
-                                         header: Boolean) extends InputPartition
-
-private[sources] class XlsReaderFactory(schema: StructType)
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[XlsPartition]
-    new XlsReader(p.path, p.sheet, p.header, schema)
-  }
-}
-
-private[sources] class XlsReader(path: String, sheet: Option[String],
-                                 header: Boolean, schema: StructType)
-  extends PartitionReader[InternalRow] {
-  private val grid = SheetGrid.untag(XlsUtil.parse(path, sheet))
-  private val dataRows = if (header) grid.drop(1) else grid
-  private var idx = 0
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    if (idx >= dataRows.length) return false
-    val row = dataRows(idx); idx += 1
-    val values = schema.fields.zipWithIndex.map { case (sf, i) =>
-      val raw = if (i < row.length) row(i) else null
-      if (raw == null || raw.isEmpty) null
-      else sf.dataType match {
-        case DoubleType => java.lang.Double.valueOf(raw.toDouble)
-        case _ => UTF8String.fromString(raw)
-      }
-    }
-    current = InternalRow.fromSeq(values.toSeq)
-    true
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override protected def grid(file: String, sheet: Option[String]): Array[Array[String]] =
+    XlsUtil.parse(file, sheet)
 }
 
 // ------------------------------------------------------------------ OLE2/CFB
@@ -117,15 +38,12 @@ private[sources] object CfbUtil {
   private final val EndOfChain = 0xFFFFFFFE
   private final val Free = 0xFFFFFFFF
 
-  private def stripScheme(p: String): String =
-    if (p.startsWith("file:")) p.stripPrefix("file:") else p
-
   /** All directory-entry streams by name (stream type 2 only). */
-  def streams(path: String): Map[String, Array[Byte]] = {
-    val bytes = Files.readAllBytes(Paths.get(stripScheme(path)))
+  def streams(file: String): Map[String, Array[Byte]] = {
+    val bytes = Files.readAllBytes(Paths.get(file))
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     require(buf.getLong(0) == 0xE11AB1A1E011CFD0L,
-      s"not an OLE2 compound file: $path")
+      s"not an OLE2 compound file: $file")
     val sectorShift = buf.getShort(30).toInt
     val sectorSize = 1 << sectorShift
     val miniSize = 1 << buf.getShort(32).toInt
@@ -229,7 +147,6 @@ private[sources] class BiffCursor(segments: Array[Array[Byte]]) {
   private def ensure(): Unit =
     while (seg < segments.length && pos >= segments(seg).length) { seg += 1; pos = 0 }
 
-  def hasMore: Boolean = { ensure(); seg < segments.length }
   def u8(): Int = { ensure(); val v = segments(seg)(pos) & 0xff; pos += 1; v }
   def u16(): Int = u8() | (u8() << 8)
   def u32(): Long = u16().toLong | (u16().toLong << 16)
@@ -303,11 +220,11 @@ private[graft] object XlsUtil {
   private case class Rec(op: Int, start: Int, len: Int)
 
   /** Tagged grid of the chosen sheet (see [[SheetGrid]]). */
-  def parse(path: String, sheetName: Option[String]): Array[Array[String]] = {
-    val wb = CfbUtil.streams(path).collectFirst {
+  def parse(file: String, sheetName: Option[String]): Array[Array[String]] = {
+    val wb = CfbUtil.streams(file).collectFirst {
       case (n, d) if n == "Workbook" || n == "Book" => d
     }.getOrElse(throw new IllegalArgumentException(
-      s"no Workbook stream in $path — not a BIFF8 .xls?"))
+      s"no Workbook stream in $file — not a BIFF8 .xls?"))
 
     // index records once (positions matter: BOUNDSHEET points at BOFs)
     val recs = mutable.ArrayBuffer.empty[Rec]
@@ -349,7 +266,7 @@ private[graft] object XlsUtil {
         case _ =>
       }
     }
-    require(sheets.nonEmpty, s"no BOUNDSHEET records in $path")
+    require(sheets.nonEmpty, s"no BOUNDSHEET records in $file")
     val bofPos = sheetName match {
       case Some(n) => sheets.find(_._1 == n).map(_._2).getOrElse(
         throw new IllegalArgumentException(

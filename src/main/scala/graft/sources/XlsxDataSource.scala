@@ -1,16 +1,7 @@
 package graft.sources
 
-import java.util
 import java.util.zip.ZipFile
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
@@ -30,164 +21,33 @@ import scala.collection.mutable
   *     .load(path)
   * }}}
   *
-  * Typing: a column whose data cells are all numeric (XLSX stores
-  * numbers untagged and strings via the shared-string pool, so this is
-  * exact, not a parse guess) becomes `double`; anything else `string`.
-  * Blank cells are null either way.
+  * One file per load, through the shared [[FileSource]] chain; options,
+  * header handling and typing are [[SheetSource]]'s (XLSX stores
+  * numbers untagged and strings via the shared-string pool, so the
+  * numeric typing is exact, not a parse guess).
   *
-  * Scale note: like [[DbfDataSource]], one InputPartition per file —
-  * spreadsheets are small dimension/config inputs (the reference's is
-  * 346 comunas × 34 year columns); a directory of them parallelizes
-  * per-file, and anything analytical converts to parquet once.
-  *
-  * `.xls` (BIFF8, S3) has its own reader: [[XlsDataSource]].
+  * `.xls` (BIFF8, S3) has its own decoder: [[XlsDataSource]].
   */
-class XlsxDataSource extends TableProvider with org.apache.spark.sql.sources.DataSourceRegister {
+class XlsxDataSource extends SheetSource {
   override def shortName(): String = "xlsx"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    XlsxUtil.schemaOf(options.get("path"), Option(options.get("sheet")),
-      header = options.getBoolean("header", true))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new XlsxTable(properties.get("path"), schema,
-      Option(properties.get("sheet")),
-      !"false".equalsIgnoreCase(properties.getOrDefault("header", "true")))
-
-  override def supportsExternalMetadata(): Boolean = false
-}
-
-private[sources] class XlsxTable(path: String, schema: StructType,
-                                 sheet: Option[String], header: Boolean)
-  extends Table with SupportsRead {
-  override def name(): String = s"xlsx:$path"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new XlsxScanBuilder(path, schema, sheet, header)
-}
-
-private[sources] class XlsxScanBuilder(path: String, schema: StructType,
-                                       sheet: Option[String], header: Boolean)
-  extends ScanBuilder with Scan with Batch {
-  override def build(): Scan = this
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(XlsxPartition(path, sheet, header))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new XlsxReaderFactory(schema)
-}
-
-private[sources] case class XlsxPartition(path: String, sheet: Option[String],
-                                          header: Boolean) extends InputPartition
-
-private[sources] class XlsxReaderFactory(schema: StructType)
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[XlsxPartition]
-    new XlsxReader(p.path, p.sheet, p.header, schema)
-  }
-}
-
-private[sources] class XlsxReader(path: String, sheet: Option[String],
-                                  header: Boolean, schema: StructType)
-  extends PartitionReader[InternalRow] {
-  private val grid = XlsxUtil.readSheet(path, sheet)
-  private val dataRows = if (header) grid.drop(1) else grid
-  private var idx = 0
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    if (idx >= dataRows.length) return false
-    val row = dataRows(idx); idx += 1
-    val values = schema.fields.zipWithIndex.map { case (sf, i) =>
-      val raw = if (i < row.length) row(i) else null
-      if (raw == null || raw.isEmpty) null
-      else sf.dataType match {
-        case DoubleType => java.lang.Double.valueOf(raw.toDouble)
-        case _ => UTF8String.fromString(raw)
-      }
-    }
-    current = InternalRow.fromSeq(values.toSeq)
-    true
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-/** Shared sheet-grid typing for the two Excel readers ([[XlsxUtil]]
-  * and [[XlsUtil]]): cells arrive as strings, with numeric cells
-  * carrying a NUL-prefixed tag (numbers and strings are distinct cell
-  * types in both XLSX XML and BIFF, so typing is exact, not a parse
-  * guess). A column whose data cells are all numeric types as
-  * `double`; anything else `string`. */
-private[sources] object SheetGrid {
-
-  /** Tag marking a numeric cell in the intermediate grid. */
-  final val NumTag = "\u0000N"
-
-  def untag(grid: Array[Array[String]]): Array[Array[String]] =
-    grid.map(_.map(v =>
-      if (v != null && v.startsWith(NumTag)) v.substring(NumTag.length) else v))
-
-  def schemaOf(grid: Array[Array[String]], header: Boolean): StructType = {
-    if (grid.isEmpty) return StructType(Nil)
-    val nCols = grid.map(_.length).max
-    val names =
-      if (header) (0 until nCols).map { i =>
-        val h = if (i < grid(0).length) grid(0)(i) else null
-        if (h == null || h.isEmpty) s"_c$i"
-        else if (h.startsWith(NumTag)) trimNum(h.substring(NumTag.length))
-        else h
-      }
-      else (0 until nCols).map(i => s"_c$i")
-    val data = if (header) grid.drop(1) else grid
-    val fields = (0 until nCols).map { i =>
-      val cells = data.iterator.map(r => if (i < r.length) r(i) else null)
-        .filter(v => v != null && v.nonEmpty).toSeq
-      val numeric = cells.nonEmpty && cells.forall(_.startsWith(NumTag))
-      StructField(names(i), if (numeric) DoubleType else StringType, nullable = true)
-    }
-    StructType(fields)
-  }
-
-  /** Excel writes integers as "2002" but doubles as "2002.0"; header
-    * names from numeric cells drop a redundant ".0". */
-  private def trimNum(s: String): String =
-    if (s.endsWith(".0")) s.dropRight(2) else s
-
-  /** Render a BIFF numeric cell the way XLSX cell text shows an
-    * integer-valued number (no trailing ".0"). */
-  def renderNum(d: Double): String =
-    if (!d.isInfinite && d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString
-    else d.toString
+  override protected def grid(file: String, sheet: Option[String]): Array[Array[String]] =
+    XlsxUtil.parse(file, sheet)
 }
 
 private[sources] object XlsxUtil {
 
-  private def stripScheme(p: String): String =
-    if (p.startsWith("file:")) p.stripPrefix("file:") else p
-
   private final val NumTag = SheetGrid.NumTag
 
-  private def parse(path: String, sheetName: Option[String]): Array[Array[String]] = {
-    val zip = new ZipFile(stripScheme(path))
+  /** Tagged grid of the chosen sheet (see [[SheetGrid]]). */
+  def parse(file: String, sheetName: Option[String]): Array[Array[String]] = {
+    val zip = new ZipFile(file)
     try {
       val shared = readSharedStrings(zip)
       val sheetPart = resolveSheetPart(zip, sheetName)
       readSheetXml(zip, sheetPart, shared)
     } finally zip.close()
   }
-
-  /** Grid with the numeric tag removed — what the reader consumes. */
-  def readSheet(path: String, sheetName: Option[String]): Array[Array[String]] =
-    SheetGrid.untag(parse(path, sheetName))
-
-  def schemaOf(path: String, sheetName: Option[String], header: Boolean): StructType =
-    SheetGrid.schemaOf(parse(path, sheetName), header)
 
   private def xmlReader(zip: ZipFile, part: String): Option[XMLStreamReader] = {
     val entry = zip.getEntry(part)
@@ -344,7 +204,4 @@ private[sources] object XlsxUtil {
     }
     rows.toArray
   }
-
-  /** NUL-prefixed numeric-tag marker exposed for tests. */
-  def numTag: String = NumTag
 }

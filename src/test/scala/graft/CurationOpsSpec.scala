@@ -71,28 +71,54 @@ class CurationOpsSpec extends SparkSpec {
     assert(repart === out) // exact integer arithmetic ⇒ partitioning-independent
   }
 
-  test("kmeansAssign fused argmin (reference-object expression) ≡ literal path at k=8") {
-    // the large-k arm must be BIT-identical to the oracle-mirrored
-    // literal arm — same exact-integer dist2, same smaller-index tie
-    // break — on the real corpus at the canonical q_kmeans parameters
+  /** Plain-Scala Lloyd k-means with the semantics kmeansAssign
+    * promises: floor(x·10⁶) quantization, integer squared L2, ties to
+    * the smaller index, floor-mean updates, and an empty cell keeping
+    * its centroid. Returns (id, cluster, dist2) sorted by id. */
+  private def lloydReference(vecs: Seq[(Long, Seq[Double])], k: Int,
+                             iters: Int): Seq[(Long, Int, Long)] = {
+    val q = vecs.sortBy(_._1)
+      .map { case (id, v) => (id, v.map(x => math.floor(x * 1000000.0).toLong)) }
+    def argmin(v: Seq[Long], cents: Seq[Seq[Long]]): (Int, Long) =
+      cents.indices.map { j =>
+        (j, v.zip(cents(j)).map { case (a, b) => (a - b) * (a - b) }.sum)
+      }.reduceLeft((best, c) => if (c._2 < best._2) c else best)
+    var cents = q.take(k).map(_._2)
+    for (_ <- 1 to iters) {
+      val cells = q.groupBy { case (_, v) => argmin(v, cents)._1 }
+      cents = cents.indices.map { j =>
+        cells.get(j).fold(cents(j)) { members =>
+          members.map(_._2).transpose.map(dim => Math.floorDiv(dim.sum, dim.size.toLong))
+        }
+      }
+    }
+    q.map { case (id, v) => val (j, d) = argmin(v, cents); (id, j, d) }
+  }
+
+  test("kmeansAssign ≡ a plain-Scala Lloyd reference at k=8, row for row") {
+    // exactness reference for the kmeans_argmin assignment on the real
+    // corpus at the canonical q_kmeans parameters: same cluster AND
+    // same exact-integer dist2 for every vector
     val e = Tables(spark, sf, "embeddings")
-    val lit = Clustering.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = 2)
-      .orderBy("vec_id").collect().toSeq.map(_.toString)
-    val fus = Clustering.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = 2,
-      fused = Some(true)).orderBy("vec_id").collect().toSeq.map(_.toString)
-    assert(fus === lit)
-    // and the fused plan must not grow with k: the argmin is a single
-    // expression node carrying the matrix outside the AST
-    val plan = Clustering.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = 0,
-      fused = Some(true)).queryExecution.executedPlan.toString
+    val got = Clustering.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = 2)
+      .orderBy("vec_id").collect().toSeq
+      .map(r => (r.getAs[Number](0).longValue, r.getInt(1), r.getLong(2)))
+    val vecs = e.select("vec_id", "embedding").collect().toSeq.map(r =>
+      (r.getAs[Number](0).longValue,
+        r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue)))
+    assert(got === lloydReference(vecs, k = 8, iters = 2))
+    // the plan must not grow with k: the argmin is a single expression
+    // node carrying the matrix outside the AST
+    val plan = Clustering.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = 0)
+      .queryExecution.executedPlan.toString
     assert(plan.contains("kmeans_argmin"), plan.take(1200))
   }
 
-  test("kmeansAssign auto-switches to the fused arm past fusedThreshold without error") {
-    // k=40 > fusedThreshold=32: the literal arm would fold 40·dim
-    // Literal nodes into the plan; the switch keeps plan size O(1).
-    // Correctness at large k is the same code path spec'd equal above;
-    // here assert the end-to-end run completes and covers all points.
+  test("kmeansAssign at k=40 on 120 vectors runs and covers every point") {
+    // a k·dim literal argmin would fold 40·dim nodes into the plan;
+    // kmeans_argmin keeps plan size O(1) in k. Correctness is spec'd
+    // against the reference above; here assert the end-to-end run
+    // completes and covers all points.
     val e = Tables(spark, sf, "embeddings").limit(120)
     val out = Clustering.kmeansAssign(e, "vec_id", "embedding", k = 40, iters = 1)
     assert(out.count() === 120L)
@@ -115,8 +141,7 @@ class CurationOpsSpec extends SparkSpec {
     val b = KMeansArgminExpr(child(), mat().map(_.toSeq).toSeq)
     assert(a == b && a.semanticEquals(b) && a.hashCode == b.hashCode)
     // ragged vectors throw in BOTH directions: a longer vector must not
-    // be silently truncated to dim (the literal arm null-poisons it —
-    // silent truncation would make the two arms quietly diverge)
+    // be silently truncated to dim
     val vecs = Seq((0L, Array(1L, 2L)), (1L, Array(1L, 2L, 3L))).toDF("vid", "vq")
     val long = intercept[Exception] {
       vecs.select(KMeansArgminExpr(col("vq"), mat())).collect()

@@ -71,7 +71,7 @@ class OperatorSpec extends SparkSpec {
     val left = Seq((1, 0.0), (2, 9.0)).toDF("lid", "lx")
     val right = Seq((10, 1.0), (11, 8.0), (12, 10.0)).toDF("rid", "rx")
     val got = Nearest.nearestJoin(left, right, abs(col("lx") - col("rx")),
-      Seq("lid"), Seq(col("rid")))
+      Seq(col("rid")))
       .select("lid", "rid").as[(Int, Int)].collect().toSet
     assert(got === Set((1, 10), (2, 11)))  // 2 is dist-1 from both 11,12? no: |9-8|=1,|9-10|=1 → tie → min rid 11
   }
@@ -82,7 +82,7 @@ class OperatorSpec extends SparkSpec {
     val left = (1 to 40).map(i => (i, rnd.nextInt(100000) / 100.0)).toDF("lid", "lx")
     val right = (1 to 25).map(i => (i, rnd.nextInt(100000) / 100.0)).toDF("rid", "rx")
     val dist = abs(col("lx") - col("rx"))
-    val exact = Nearest.nearestJoin(left, right, dist, Seq("lid"), Seq(col("rid")))
+    val exact = Nearest.nearestJoin(left, right, dist, Seq(col("rid")))
       .select("lid", "rid", "_dist").as[(Int, Int, Double)].collect().toSet
     val quant = Nearest.nearestJoinQuantized(left, right, dist, "rid", invQuantum = 100)
       .select("lid", "rid", "_dist").as[(Int, Int, Double)].collect().toSet
@@ -678,21 +678,18 @@ class OperatorSpec extends SparkSpec {
   test("Sampling splits are deterministic, exhaustive, and disjoint") {
     val df = (0L until 1000L).toDF("id")
     val cuts = Seq("train" -> 80, "val" -> 90, "test" -> 100)
-    for (split <- Seq(Sampling.byModulo(df, "id", cuts), Sampling.byHash(df, "id", cuts))) {
-      val counts = split.groupBy("split").count()
-        .as[(String, Long)].collect().toMap
-      assert(counts.values.sum === 1000L)
-      assert(counts.keySet === Set("train", "val", "test"))
-      assert(counts("train") > counts("val"))
-      // determinism: recomputing yields the identical assignment
-      val again = split.select("id", "split").except(
-        split.select("id", "split")).count()
-      assert(again === 0)
-    }
-    // modulo variant is exactly 800/100/100 on uniform ids
-    val m = Sampling.byModulo(df, "id", cuts).groupBy("split").count()
+    val split = Sampling.byModulo(df, "id", cuts)
+    val counts = split.groupBy("split").count()
       .as[(String, Long)].collect().toMap
-    assert(m === Map("train" -> 800L, "val" -> 100L, "test" -> 100L))
+    assert(counts.values.sum === 1000L)
+    assert(counts.keySet === Set("train", "val", "test"))
+    assert(counts("train") > counts("val"))
+    // determinism: recomputing yields the identical assignment
+    val again = split.select("id", "split").except(
+      split.select("id", "split")).count()
+    assert(again === 0)
+    // modulo is exactly 800/100/100 on uniform ids
+    assert(counts === Map("train" -> 800L, "val" -> 100L, "test" -> 100L))
   }
 
   test("Dedup.semanticDecontaminate: planted eval copy is always caught, bipartite only") {
@@ -797,13 +794,13 @@ class OperatorSpec extends SparkSpec {
     assert(head.sliding(2).exists(p => (p(1) - p(0)).abs != 8))
   }
 
-  test("Sampling.stratified: deterministic, rate-accurate, nested across rates") {
+  test("Sampling.stratifiedByModulo: deterministic, rate-accurate, nested across rates") {
     val df = (1L to 10000L).map(i => (i, if (i % 3 == 0) "en" else "es"))
       .toDF("id", "lang")
     val rates = Map("es" -> 0.25, "en" -> 1.0)
-    val s1 = Sampling.stratified(df, "lang", "id", rates)
+    val s1 = Sampling.stratifiedByModulo(df, "lang", "id", rates)
       .select("id").as[Long].collect().toSet
-    val s2 = Sampling.stratified(df.repartition(13), "lang", "id", rates)
+    val s2 = Sampling.stratifiedByModulo(df.repartition(13), "lang", "id", rates)
       .select("id").as[Long].collect().toSet
     assert(s1 === s2)                       // partitioning-independent
     val en = df.filter(col("lang") === "en").count()
@@ -813,7 +810,7 @@ class OperatorSpec extends SparkSpec {
     val rate = esKept.toDouble / esTotal
     assert(math.abs(rate - 0.25) < 0.02, s"es rate $rate")
     // nested: raising a rate only adds rows
-    val bigger = Sampling.stratified(df, "lang", "id", Map("es" -> 0.5, "en" -> 1.0))
+    val bigger = Sampling.stratifiedByModulo(df, "lang", "id", Map("es" -> 0.5, "en" -> 1.0))
       .select("id").as[Long].collect().toSet
     assert(s1.subsetOf(bigger))
   }

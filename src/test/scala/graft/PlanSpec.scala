@@ -88,41 +88,13 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("*(1)"), plan.take(1200))
   }
 
-  test("gridNearestJoin matches broadcast nearestJoin when cell > max NN distance") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val left = (1 to 60).map(i => (i, rnd.nextDouble() * 10, rnd.nextDouble() * 10))
-      .toDF("lid", "llat", "llon")
-    val right = (1 to 40).map(i => (i + 1000, rnd.nextDouble() * 10, rnd.nextDouble() * 10))
-      .toDF("rid", "rlat", "rlon")
-    val exact = Nearest.nearestJoin(left, right,
-      graft.operators.Geo.euclidDeg(col("llat"), col("llon"), col("rlat"), col("rlon")),
-      Seq("lid"), Seq(col("rid")))
-      .select("lid", "rid").as[(Int, Int)].collect().toSet
-    // 10°×10° box, 40 random right points → max NN distance ≪ 5°
-    val grid = Nearest.gridNearestJoin(left, right, "llat", "llon", "rlat", "rlon",
-      cellDeg = 5.0, tieBreak = Seq(col("rid")))
-      .select("lid", "rid").as[(Int, Int)].collect().toSet
-    assert(grid === exact)
-  }
-
-  test("q_j2 tick-domain plan: no corpus-sized broadcast; fitsBroadcast guards correctly") {
+  test("q_j2 tick-domain plan: no corpus-sized broadcast") {
     val df = SparkEntry.queries("q_j2_nearest")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     // the kernel must not cross-join or nested-loop-broadcast the
     // corpus-scaling right side at ANY threshold
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
-    // the broadcast-vs-scale-kernel guard tracks the session threshold
-    val supp = Tables(spark, sf, "supplier")
-    assert(Nearest.fitsBroadcast(supp))
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
-      assert(!Nearest.fitsBroadcast(supp))
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      assert(!Nearest.fitsBroadcast(supp))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
   test("mergeable-state plans: map-side sketch partials, no exchange after the state union") {

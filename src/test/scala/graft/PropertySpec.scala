@@ -169,7 +169,7 @@ class PropertySpec extends SparkSpec {
         val left = ls.zipWithIndex.map { case (x, i) => (i, x) }.toDF("lid", "lx")
         val right = rs.zipWithIndex.map { case (x, i) => (i, x) }.toDF("rid", "rx")
         val got = Nearest.nearestJoin(left, right, abs(col("lx") - col("rx")),
-          Seq("lid"), Seq(col("rid")))
+          Seq(col("rid")))
           .select("lid", "_dist").as[(Int, Double)].collect().toMap
         ls.zipWithIndex.foreach { case (x, i) =>
           val want = rs.map(r => math.abs(x - r)).min
