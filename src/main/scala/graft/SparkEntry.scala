@@ -832,7 +832,7 @@ object SparkEntry {
           bucketWidth = 3600)
         .groupBy("event_type", "w_start")
         .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(28,6)")).cast("double").as("sum_value"))
+          Exact.dsum(col("value")).as("sum_value"))
         .orderBy("event_type", "w_start")
     }),
 
@@ -958,7 +958,7 @@ object SparkEntry {
     // Skew-mitigated join: the lineitem fact salted over 8 sub-keys
     // against the replicated part dim — equi-join semantics preserved
     // exactly (the oracle is the plain join), only the shuffle
-    // distribution changes. Decimal-accumulated sum for float parity.
+    // distribution changes. Exact sum for float parity.
     "q_skew_join" -> ((s, dir) => {
       val big = t(s, dir, "lineitem")
         .select(col("l_partkey").as("p_partkey"), col("l_quantity"))
@@ -966,7 +966,7 @@ object SparkEntry {
       Skew.saltedJoin(big, small, "p_partkey", salt = 8)
         .groupBy("p_brand")
         .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(28,6)")).cast("double").as("sum_qty"))
+          Exact.dsum(col("l_quantity")).as("sum_qty"))
         .orderBy("p_brand")
     }),
 

@@ -2,25 +2,33 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Deterministic ("oracle-exact") aggregation helpers.
   *
   * Floating-point SUM/AVG are summation-order dependent, so two engines
   * (or two runs with different partitioning) can disagree in the last
-  * bits. Routing the accumulation through a fixed-scale decimal makes
-  * the aggregate exact and engine-independent; the final cast back to
-  * double is a single deterministic conversion. This is how every
-  * money/quantity aggregate in the engine stays hash-comparable with a
-  * DuckDB oracle while remaining a plain map-side-combinable Spark
-  * aggregate (partial sums of decimals are still decimals — no loss of
-  * parallelism, no collect-to-driver).
+  * bits. Accumulating the 6-dp decimal image of each value instead
+  * makes the aggregate exact and engine-independent; the final
+  * conversion back to double is a single deterministic rounding. This
+  * is how every money/quantity aggregate in the engine stays
+  * hash-comparable with a DuckDB oracle while remaining a plain
+  * map-side-combinable Spark aggregate.
+  *
+  * [[dsum]] equals `CAST(SUM(CAST(x AS DECIMAL(28,6))) AS DOUBLE)` bit
+  * for bit (the oracle SQL of [[sqlSum]]), but runs as
+  * [[graft.functions.ExactSum]]: a 128-bit fixed-point buffer with a
+  * codegen'd per-row conversion, instead of a `BigDecimal` per row.
+  *
+  * Out of scope, on Spark's decimal `sum`: `Sketches.aggState`, whose
+  * `sum_v` is a decimal state column that `mergeStates` re-sums, and
+  * `Regression.olsPredict`, whose `sxy_d` sums a decimal × integer
+  * product the kernel does not model (its `sy_d` sits in the same
+  * aggregate and stays with it).
   */
 object Exact {
-  private val Dec = DecimalType(28, 6)
 
-  /** Exact SUM over a double column, returned as double. */
-  def dsum(c: Column): Column = sum(c.cast(Dec)).cast("double")
+  /** Exact SUM over a numeric column, returned as double. */
+  def dsum(c: Column): Column = graft.functions.ExactSum(c)
 
   /** Exact AVG (sum/count of non-nulls), returned as double. */
   def davg(c: Column): Column = dsum(c) / count(c)

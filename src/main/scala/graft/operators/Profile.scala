@@ -71,9 +71,11 @@ object Profile {
             graft.functions.KllQuantileEstimate(col("_sk"), lit(lo)).as("_lo") :+
             graft.functions.KllQuantileEstimate(col("_sk"), lit(hi)).as("_hi"): _*)
       else
-        df.groupBy(groupCols.map(col): _*).agg(
-          percentile(col(valueCol), lit(lo)).as("_lo"),
-          percentile(col(valueCol), lit(hi)).as("_hi"))
+        // one percentile buffer per group serves both bounds
+        df.groupBy(groupCols.map(col): _*)
+          .agg(percentile(col(valueCol), array(lit(lo), lit(hi))).as("_b"))
+          .select(groupCols.map(col) :+
+            col("_b")(0).as("_lo") :+ col("_b")(1).as("_hi"): _*)
     joinBounds(df, bounds, groupCols)
       .withColumn(valueCol + "_w",
         least(greatest(col(valueCol), col("_lo")), col("_hi")))
@@ -441,9 +443,11 @@ object Profile {
     *    correlation are shift-invariant) so the n·Σxx − (Σx)² form
     *    loses no digits to cancellation and is immune to one-sided FMA
     *    contraction;
-    *  - the centered sums accumulate in fixed-scale decimal (exact,
-    *    order-independent), and every engine computes the identical
-    *    double expression over those exact sums;
+    *  - the centered sums accumulate exactly, as the sums of their
+    *    `decimal(12,6)` images and of products of those images
+    *    ([[graft.functions.ExactSum]]: order-independent, and equal to
+    *    the decimal SQL the oracle runs), and every engine computes the
+    *    identical double expression over those exact sums;
     *  - outputs are rounded to 6 dp.
     *
     * One hash aggregate, map-side combined — the streaming-merge
@@ -451,20 +455,21 @@ object Profile {
     * which is exactly what a 100 TB re-partitioning must not change. */
   def stats2(df: DataFrame, groupCols: Seq[String], x: Column, y: Column,
              xOffset: Double, yOffset: Double): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(12, 6)
-    val xc = (x - xOffset).cast(dec)
-    val yc = (y - yOffset).cast(dec)
+    val xc = x - xOffset
+    val yc = y - yOffset
+    // Σ of decimal(12,6) images and of their products, as doubles
+    def csum(factors: Column*) = graft.functions.ExactSum.column(factors, precision = 12)
     val agg = df.groupBy(groupCols.map(col): _*).agg(
       count(lit(1)).as("n_rows"),
-      sum(xc).as("sx_d"), sum(yc).as("sy_d"),
-      sum(xc * xc).as("sxx_d"), sum(yc * yc).as("syy_d"),
-      sum(xc * yc).as("sxy_d"))
+      csum(xc).as("sx"), csum(yc).as("sy"),
+      csum(xc, xc).as("sxx"), csum(yc, yc).as("syy"),
+      csum(xc, yc).as("sxy"))
     val n = col("n_rows").cast("double")
-    val sx = col("sx_d").cast("double")
-    val sy = col("sy_d").cast("double")
-    val dxx = n * col("sxx_d").cast("double") - sx * sx
-    val dyy = n * col("syy_d").cast("double") - sy * sy
-    val dxy = n * col("sxy_d").cast("double") - sx * sy
+    val sx = col("sx")
+    val sy = col("sy")
+    val dxx = n * col("sxx") - sx * sx
+    val dyy = n * col("syy") - sy * sy
+    val dxy = n * col("sxy") - sx * sy
     val m = n * (n - 1)
     agg.select(groupCols.map(col) :+ col("n_rows") :+
       round(dxx / m, 6).as("var_x") :+

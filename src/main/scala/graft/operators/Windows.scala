@@ -73,7 +73,7 @@ object Windows {
   }
 
   /** Beyond-reference analytics pack: rank / lag / lead / running sum
-    * per group. Running sum accumulates in decimal so it is exact and
+    * per group. The running sum is [[Exact.dsum]], so it is exact and
     * oracle-comparable at any partitioning. */
   def analytics(df: DataFrame, partition: Seq[String], order: Seq[Column],
                 measure: Column): DataFrame = {
@@ -82,9 +82,7 @@ object Windows {
     df.withColumn("rn", row_number().over(w))
       .withColumn("prev_val", lag(measure, 1).over(w))
       .withColumn("next_val", lead(measure, 1).over(w))
-      .withColumn("running_sum",
-        sum(measure.cast(org.apache.spark.sql.types.DecimalType(28, 6)))
-          .over(run).cast("double"))
+      .withColumn("running_sum", Exact.dsum(measure).over(run))
   }
 
   /** Sessionization (beyond reference; training-pipeline staple): a new

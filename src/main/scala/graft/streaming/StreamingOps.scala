@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Exact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -45,7 +46,7 @@ object StreamingOps {
       .withWatermark("event_time", watermark)
       .groupBy(window(col("event_time"), windowLen), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(28, 6))).cast("double").as("sum_value"))
+        Exact.dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
 
@@ -60,7 +61,7 @@ object StreamingOps {
       .withWatermark("event_time", watermark)
       .groupBy(window(col("event_time"), windowLen, slide), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(28, 6))).cast("double").as("sum_value"))
+        Exact.dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
 
@@ -76,7 +77,7 @@ object StreamingOps {
       .withWatermark("event_time", watermark)
       .groupBy(session_window(col("event_time"), gap), col("user_id"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(28, 6))).cast("double").as("sum_value"))
+        Exact.dsum(col("value")).as("sum_value"))
       .select(col("session_window.start").as("session_start"), col("user_id"),
         col("n"), col("sum_value"))
 

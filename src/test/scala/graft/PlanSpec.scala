@@ -78,6 +78,35 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("partial_"), plan.take(1500))
   }
 
+  test("exact sums plan as partial+final HashAggregate with no decimal cast") {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.types.DecimalType
+    def allOps(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => allOps(a.executedPlan)
+      case s: QueryStageExec        => allOps(s.plan)
+      case other                    => other +: other.children.flatMap(allOps)
+    }
+    for (name <- Seq("q_a1_groupsum", "q_tpch_q1", "q_a9_stats")) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()   // AQE-finalize
+      val plan = df.queryExecution.executedPlan
+      val ops = allOps(plan)
+      val hash = ops.collect { case h: HashAggregateExec => h }
+      val modes = hash.flatMap(_.aggregateExpressions.map(_.mode)).toSet
+      assert(modes.contains(Partial) && modes.contains(Final), s"$name:\n$plan")
+      assert(!ops.exists(o => o.isInstanceOf[ObjectHashAggregateExec] ||
+        o.isInstanceOf[SortAggregateExec]), s"$name:\n$plan")
+      val decimalCasts = hash.flatMap(_.aggregateExpressions).flatMap(_.collect {
+        case c: Cast if c.dataType.isInstanceOf[DecimalType] => c
+      })
+      assert(decimalCasts.isEmpty, s"$name aggregates cast to decimal: $decimalCasts")
+    }
+  }
+
   test("whole-stage codegen covers the scan→filter→project pipeline") {
     // AQE finalizes (and codegen-wraps) the plan only at execution —
     // and only for THIS df's plan (count() would build a different one)

@@ -30,7 +30,8 @@ class PropertySpec extends SparkSpec {
     // output — decimal-exact sums, centered closed forms, and fixed
     // fold orders are what buy this. Exercise the order-sensitive
     // queries under two very different initial shuffle widths.
-    val names = Seq("q_a9_stats", "q_a7_ols", "q_j3_gravity",
+    val names = Seq("q_a1_groupsum", "q_tpch_q1",
+      "q_a9_stats", "q_a7_ols", "q_j3_gravity",
       "q_winsorize", "q_text_entropy", "q_profile",
       // round-5 operators whose determinism claim matters at scale:
       // median/MAD fences, window run-collapse, corpus line dedup,
