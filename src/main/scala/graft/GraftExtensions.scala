@@ -9,6 +9,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * expressions to SQL (`spark.sql("SELECT cosine_sim(a, b) ...")`),
   * so the library surface is reachable from pure-SQL clients too.
   * Registered by [[GraftSession]] via `withExtensions`.
+  *
+  * It also injects one physical rule, [[SmallSortInPlace]], through
+  * `injectQueryStagePrepRule`: a global sort whose input ends up in one
+  * partition anyway runs over `CoalesceExec(1)` instead of a range
+  * exchange. Spark applies query-stage preparation rules only inside
+  * adaptive execution, so with `spark.sql.adaptive.enabled=false` the
+  * plans are stock.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -29,5 +36,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("rolling_fp"),
       new ExpressionInfo(classOf[RollingFp].getName, "rolling_fp"),
       (args: Seq[Expression]) => RollingFp(args(0))))
+    ext.injectQueryStagePrepRule(SmallSortInPlace(_))
   }
 }

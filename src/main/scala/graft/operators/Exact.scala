@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
   *
   * Out of scope, on Spark's decimal `sum`: `Sketches.aggState`, whose
   * `sum_v` is a decimal state column that `mergeStates` re-sums, and
-  * `Regression.olsPredict`, whose `sxy_d` sums a decimal × integer
-  * product the kernel does not model (its `sy_d` sits in the same
-  * aggregate and stays with it).
+  * the `sxy_d` sum of `Regression.olsPredict`, a decimal × integer
+  * product the kernel does not model (its `sy` is a [[dsum]]).
   */
 object Exact {
 

@@ -10,9 +10,10 @@ import org.apache.spark.sql.types.DecimalType
   * hash aggregate computes every group's closed-form slope/intercept.
   *
   * Numerics, deliberately engine-reproducible (DuckDB oracle parity):
-  *  - the four sums accumulate exactly: ints for x/x², fixed-scale
-  *    decimal for y and x·y (decimal×int stays decimal — no double
-  *    rounding anywhere in the accumulation);
+  *  - the four sums accumulate exactly: ints for x/x², [[Exact.dsum]]
+  *    for y (the `decimal(28,6)` sum, on the fixed-point aggregate),
+  *    and a fixed-scale decimal for x·y (decimal×int stays decimal) —
+  *    no double rounding anywhere in the accumulation;
   *  - x is centered by `xOffset` first: slope is shift-invariant, and
   *    centering shrinks the catastrophic cancellation in
   *    n·Σxy − Σx·Σy by ~(x̄/σₓ)², below the final 6-dp rounding —
@@ -21,7 +22,6 @@ import org.apache.spark.sql.types.DecimalType
   *  - outputs are rounded to 6 dp on both sides.
   */
 object Regression {
-  private val Dec = DecimalType(28, 6)
   private val DecY = DecimalType(18, 6)
 
   /** Returns one row per group: slope, intercept, and a clamped
@@ -33,11 +33,11 @@ object Regression {
       count(lit(1)).as("n"),
       sum(xc.cast("long")).as("sx"),
       sum((xc * xc).cast("long")).as("sxx"),
-      sum(y.cast(Dec)).as("sy_d"),
+      Exact.dsum(y).as("sy"),
       sum(y.cast(DecY) * xc).as("sxy_d"))
     val n = col("n").cast("double")
     val sx = col("sx").cast("double")
-    val sy = col("sy_d").cast("double")
+    val sy = col("sy")
     val sxy = col("sxy_d").cast("double")
     // exact 64-bit integer arithmetic for the denominator
     val denom = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")

@@ -143,16 +143,16 @@ class CurationOpsSpec extends SparkSpec {
     // ragged vectors throw in BOTH directions: a longer vector must not
     // be silently truncated to dim
     val vecs = Seq((0L, Array(1L, 2L)), (1L, Array(1L, 2L, 3L))).toDF("vid", "vq")
-    val long = intercept[Exception] {
+    val long = QuietLogs(QuietLogs.ListenerBus)(intercept[Exception] {
       vecs.select(KMeansArgminExpr(col("vq"), mat())).collect()
-    }
+    })
     assert(String.valueOf(long.getMessage)
       .contains("kmeans_argmin: vector length") ||
       String.valueOf(long.getCause).contains("kmeans_argmin: vector length"))
-    val short = intercept[Exception] {
+    val short = QuietLogs(QuietLogs.ListenerBus)(intercept[Exception] {
       Seq((0L, Array(1L))).toDF("vid", "vq")
         .select(KMeansArgminExpr(col("vq"), mat())).collect()
-    }
+    })
     assert(String.valueOf(short.getMessage)
       .contains("kmeans_argmin: vector length") ||
       String.valueOf(short.getCause).contains("kmeans_argmin: vector length"))

@@ -2,8 +2,6 @@ package graft
 
 import graft.functions.ExactSum
 import graft.operators.Exact
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -30,19 +28,12 @@ class ExactSumSpec extends SparkSpec {
   /** Runs `body` with `spark.sql.ansi.enabled` = `ansi`. Under ANSI many
     * cases fail their job on purpose, so the task-failure loggers are
     * silenced meanwhile: their stack traces would fill the suite's log. */
-  private def withAnsi[A](ansi: Boolean)(body: => A): A = {
-    val loggers = Seq("org.apache.spark.executor.Executor",
-      "org.apache.spark.scheduler.TaskSetManager",
-      "org.apache.spark.storage.DiskBlockObjectWriter")
-    val levels = loggers.map(LogManager.getLogger(_).getLevel)
-    val prev = spark.conf.get("spark.sql.ansi.enabled")
-    loggers.foreach(Configurator.setLevel(_, Level.OFF))
-    spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
-    try body finally {
-      spark.conf.set("spark.sql.ansi.enabled", prev)
-      loggers.zip(levels).foreach { case (l, lv) => Configurator.setLevel(l, lv) }
+  private def withAnsi[A](ansi: Boolean)(body: => A): A =
+    QuietLogs("org.apache.spark.executor.Executor",
+        "org.apache.spark.scheduler.TaskSetManager",
+        "org.apache.spark.storage.DiskBlockObjectWriter") {
+      withConfs("spark.sql.ansi.enabled" -> ansi.toString)(body)
     }
-  }
 
   // -- values: the cases a 6-dp half-up cast can get wrong ---------------
   private val sign = Gen.oneOf(1.0, -1.0)

@@ -1,6 +1,10 @@
 package graft
 
 import graft.operators.Nearest
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_COL, REPARTITION_BY_NUM, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions: the plans the engine relies on at scale
@@ -12,6 +16,16 @@ class PlanSpec extends SparkSpec {
 
   private def physicalPlan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** `df`'s final plan: AQE fixes it only when `df` itself runs. */
+  private def finalOps(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    allOps(df.queryExecution.executedPlan)
+  }
+
+  private def rangeExchanges(ops: Seq[SparkPlan]): Seq[ShuffleExchangeLike] = ops.collect {
+    case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+  }
 
   test("P2 filter+project: predicate pushed to parquet, columns pruned") {
     val plan = physicalPlan("q_p2_filter_project")
@@ -81,30 +95,94 @@ class PlanSpec extends SparkSpec {
   test("exact sums plan as partial+final HashAggregate with no decimal cast") {
     import org.apache.spark.sql.catalyst.expressions.Cast
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
     import org.apache.spark.sql.types.DecimalType
-    def allOps(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => allOps(a.executedPlan)
-      case s: QueryStageExec        => allOps(s.plan)
-      case other                    => other +: other.children.flatMap(allOps)
-    }
-    for (name <- Seq("q_a1_groupsum", "q_tpch_q1", "q_a9_stats")) {
+    // (query, exact sums beside a decimal sum): q_a7_ols keeps a decimal
+    // sum for its decimal × integer Σxy, beside one exact_sum for Σy
+    for ((name, beside) <- Seq("q_a1_groupsum" -> None, "q_tpch_q1" -> None,
+        "q_a9_stats" -> None, "q_a7_ols" -> Some(1))) {
       val df = SparkEntry.queries(name)(spark, sf)
-      df.collect()   // AQE-finalize
+      val ops = finalOps(df)
       val plan = df.queryExecution.executedPlan
-      val ops = allOps(plan)
       val hash = ops.collect { case h: HashAggregateExec => h }
       val modes = hash.flatMap(_.aggregateExpressions.map(_.mode)).toSet
       assert(modes.contains(Partial) && modes.contains(Final), s"$name:\n$plan")
       assert(!ops.exists(o => o.isInstanceOf[ObjectHashAggregateExec] ||
         o.isInstanceOf[SortAggregateExec]), s"$name:\n$plan")
-      val decimalCasts = hash.flatMap(_.aggregateExpressions).flatMap(_.collect {
-        case c: Cast if c.dataType.isInstanceOf[DecimalType] => c
-      })
-      assert(decimalCasts.isEmpty, s"$name aggregates cast to decimal: $decimalCasts")
+      val aggs = hash.flatMap(_.aggregateExpressions)
+      beside match {
+        case None =>
+          val decimalCasts = aggs.flatMap(_.collect {
+            case c: Cast if c.dataType.isInstanceOf[DecimalType] => c
+          })
+          assert(decimalCasts.isEmpty, s"$name aggregates cast to decimal: $decimalCasts")
+        case Some(exactSums) =>
+          val finalSums = aggs.filter(_.mode == Final).map(_.aggregateFunction.prettyName)
+          assert(finalSums.count(_ == "exact_sum") === exactSums, s"$name: $finalSums")
+      }
     }
+  }
+
+  test("small global sorts run in place: no workload query's final sort has a range exchange") {
+    // the perfbench workload lists (perfbench/workloads.json): every
+    // result is a small ordered table, so SmallSortInPlace plans each
+    // final sort over CoalesceExec(1) instead of a sampled range shuffle
+    val analytics = Seq("q_a1_groupsum", "q_tpch_q1", "q_a9_stats", "q_a2_median",
+      "q_a8_percentiles", "q_winsorize", "q_kll_rollup", "q_rollup", "q_range_join",
+      "q_bucket_join", "q_p2_filter_project", "q_stream_window")
+    val curation = Seq("q_dedup_minhash_inc", "q_dedup_semantic_apply", "q_kmeans",
+      "q_dsir_select_approx", "q_text_pmi", "q_sample_temp", "q_text_vocab",
+      "q_sample_mixture", "q_dedup_exact", "q_select_budget", "q_shuffle_order",
+      "q_quality_gate", "q_text_clean", "q_mm_meta")
+    // q_text_vocab sorts Text.buildVocab's zipWithIndex output: an RDD
+    // with four partitions and no size estimate (Spark's default size,
+    // Long.MaxValue), so the rule cannot know it is small.
+    // (q_text_pmi ends in orderBy + limit, a TakeOrderedAndProject, and
+    // q_dsir_select_approx in a one-row check with no sort.)
+    val rangeSorted = Seq("q_text_vocab")
+    val kept = (analytics ++ curation).filter { name =>
+      val ops = finalOps(SparkEntry.queries(name)(spark, sf))
+      val inPlace = ops.forall {
+        case s: SortExec if s.global => allOps(s.child).exists(_.isInstanceOf[CoalesceExec])
+        case _                       => true
+      }
+      rangeExchanges(ops).nonEmpty || !inPlace
+    }
+    assert(kept === rangeSorted, "final sorts not planned in place")
+  }
+
+  test("small global sorts: a sort above the one-partition bound keeps its range exchange") {
+    // 2M longs: a 16 MB estimate, above the 1 MB a coalesced partition holds
+    val big = spark.range(0, 2000000).orderBy(desc("id")).queryExecution.executedPlan
+    assert(rangeExchanges(allOps(big)).map(_.shuffleOrigin) === Seq(ENSURE_REQUIREMENTS), big)
+    // the bound lowered through AQE's own conf: q_a1_groupsum's few
+    // hundred bytes of runtime input are above it, so the sort keeps its
+    // exchange, with the same rows; the one-split-scan arm does not read
+    // the bound, so q_p2_filter_project stays in place
+    val inPlace = SparkEntry.queries("q_a1_groupsum")(spark, sf).collect().toSeq
+    withConfs("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
+      val df = SparkEntry.queries("q_a1_groupsum")(spark, sf)
+      assert(rangeExchanges(finalOps(df)).size === 1, df.queryExecution.executedPlan)
+      assert(df.collect().toSeq === inPlace)
+      val scan = SparkEntry.queries("q_p2_filter_project")(spark, sf)
+      assert(rangeExchanges(finalOps(scan)).isEmpty, scan.queryExecution.executedPlan)
+    }
+  }
+
+  test("small global sorts: user range repartitions and top-k keep their plans") {
+    val ids = spark.range(0, 100).toDF("id")
+    for ((df, origin) <- Seq(ids.repartitionByRange(4, col("id")) -> REPARTITION_BY_NUM,
+        ids.repartitionByRange(col("id")) -> REPARTITION_BY_COL)) {
+      val ops = finalOps(df)
+      assert(rangeExchanges(ops).map(_.shuffleOrigin) === Seq(origin), df.queryExecution.executedPlan)
+      assert(!ops.exists(_.isInstanceOf[CoalesceExec]), df.queryExecution.executedPlan)
+    }
+    val topK = ids.orderBy(desc("id")).limit(5)
+    val ops = finalOps(topK)
+    assert(ops.exists(_.isInstanceOf[TakeOrderedAndProjectExec]), topK.queryExecution.executedPlan)
+    assert(!ops.exists(o => o.isInstanceOf[CoalesceExec] || o.isInstanceOf[SortExec]),
+      topK.queryExecution.executedPlan)
+    assert(topK.collect().map(_.getLong(0)).toSeq === (99L to 95L by -1L))
   }
 
   test("whole-stage codegen covers the scan→filter→project pipeline") {
@@ -305,15 +383,8 @@ class PlanSpec extends SparkSpec {
     // toString layout (the trailing-boolean formatting of
     // isNullAwareAntiJoin has changed across releases). AQE wraps the
     // tree in leaf nodes (AdaptiveSparkPlanExec, QueryStageExec) that
-    // collect() won't descend through — walk them explicitly.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // collect() won't descend through — allOps walks them.
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    def allOps(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => allOps(a.executedPlan)
-      case s: QueryStageExec => allOps(s.plan)
-      case other => other +: other.children.flatMap(allOps)
-    }
     val naaj = allOps(plan).collect {
       case j: BroadcastHashJoinExec if j.isNullAwareAntiJoin => j
     }
@@ -488,7 +559,7 @@ class PlanSpec extends SparkSpec {
     // named error on every path (the composed folds' element_at dies
     // under ANSI too — never a silent partial dot)
     def rootMsgs(f: => Any): String = {
-      val e = intercept[Throwable](f)
+      val e = QuietLogs(QuietLogs.ListenerBus)(intercept[Throwable](f))
       Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
         .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
     }
@@ -526,15 +597,15 @@ class PlanSpec extends SparkSpec {
     // every query (analysis), never read garbage cosines at runtime
     val dbl = Seq((1L, Seq(0.1, 0.2)), (2L, Seq(0.3, 0.4)))
       .toDF("id", "v") // v: array<double>
-    val cos = intercept[org.apache.spark.sql.AnalysisException] {
+    val cos = QuietLogs(QuietLogs.ListenerBus)(intercept[org.apache.spark.sql.AnalysisException] {
       dbl.select(graft.functions.Vectors
         .cosineFold(col("v"), col("v"), 2)).queryExecution.analyzed
-    }
+    })
     assert(cos.getMessage.contains("cosine_fold"), cos.getMessage)
-    val keys = intercept[org.apache.spark.sql.AnalysisException] {
+    val keys = QuietLogs(QuietLogs.ListenerBus)(intercept[org.apache.spark.sql.AnalysisException] {
       dbl.select(graft.functions.Vectors
         .detHyperplaneKeys(col("v"), 2, 4, 8)).queryExecution.analyzed
-    }
+    })
     assert(keys.getMessage.contains("det_hyperplane_keys"), keys.getMessage)
   }
 
@@ -567,15 +638,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed join: zero exchanges below the sort-merge join; bucketed rollup: zero anywhere") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    def allOps(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => allOps(a.executedPlan)
-      case s: QueryStageExec        => allOps(s.plan)
-      case other                    => other +: other.children.flatMap(allOps)
-    }
     // fact–fact join over the bucketed layout: the SMJ's subtree must
     // contain no shuffle — the buckets ARE the distribution
     val join = SparkEntry.queries("q_bucket_join")(spark, sf)

@@ -1,7 +1,11 @@
 package graft
 
 import graft.operators.{Nearest, Regression, Relational, Windows}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.CoalesceExec
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 
 /** Algebraic invariants (SURVEY §5.4) checked over seeded-random
   * inputs — property-style, but driven by a plain loop so only
@@ -46,6 +50,98 @@ class PropertySpec extends SparkSpec {
     try names.foreach { n =>
       assert(run(n, "3") === run(n, "17"), s"$n differs across partitionings")
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("global sorts order rows as a Scala sort on the total-order key, in place or not") {
+    // rows: a unique id and three low-cardinality nullable keys, so the
+    // sort keys tie and hold nulls; the id, last, makes the order total
+    type Row4 = (Long, Option[Int], Option[String], Option[Long])
+    case class Key(field: Int, asc: Boolean, nullsFirst: Boolean)
+    val rowsGen = Gen.choose(0, 60).flatMap(n => Gen.listOfN(n, for {
+      a <- Gen.option(Gen.choose(-2, 2))
+      b <- Gen.option(Gen.oneOf("", "a", "ab", "b"))
+      c <- Gen.option(Gen.choose(-1L, 1L))
+    } yield (a, b, c))).map(_.zipWithIndex.map { case ((a, b, c), i) => (i.toLong, a, b, c) })
+    val keysGen = for {
+      fields <- Gen.oneOf((1 to 3).flatMap(Seq(1, 2, 3).combinations(_).flatMap(_.permutations)))
+      flags  <- Gen.listOfN(fields.size + 1, Gen.zip(Gen.oneOf(true, false), Gen.oneOf(true, false)))
+    } yield (fields :+ 0).zip(flags).map { case (f, (asc, nf)) => Key(f, asc, nf) }
+    // the input: 1-8 partitions from a round-robin shuffle (the rule
+    // decides on its runtime size), from that many parquet files (one
+    // split, or several small ones), or from an RDD (no size estimate)
+    val inputGen = Gen.zip(Gen.choose(1, 8), Gen.oneOf("shuffle", "parquet", "rdd"))
+    val names = Seq("id", "a", "b", "c")
+    /** The input, and whether it is a one-split scan (one small file). */
+    def input(rows: List[(Long, Option[Int], Option[String], Option[Long])], parts: Int,
+              shape: String): (DataFrame, Boolean) = {
+      val local = rows.toDF(names: _*)
+      shape match {
+        case "shuffle" => (local.repartition(parts), false)
+        case "parquet" =>
+          val dir = java.nio.file.Files.createTempDirectory("graft_sort_prop_").toFile
+          local.repartition(parts).write.mode("overwrite").parquet(dir.getPath)
+          (spark.read.parquet(dir.getPath), dir.listFiles.count(_.getName.endsWith(".parquet")) == 1)
+        case "rdd" =>
+          (spark.createDataFrame(spark.sparkContext.parallelize(rows, parts)).toDF(names: _*), false)
+      }
+    }
+    def column(k: Key): Column = {
+      val c = col(names(k.field))
+      (k.asc, k.nullsFirst) match {
+        case (true, true)   => c.asc_nulls_first
+        case (true, false)  => c.asc_nulls_last
+        case (false, true)  => c.desc_nulls_first
+        case (false, false) => c.desc_nulls_last
+      }
+    }
+    def cmp[T](x: Option[T], y: Option[T], k: Key)(implicit o: Ordering[T]): Int = (x, y) match {
+      case (None, None)       => 0
+      case (None, _)          => if (k.nullsFirst) -1 else 1
+      case (_, None)          => if (k.nullsFirst) 1 else -1
+      case (Some(p), Some(q)) => if (k.asc) o.compare(p, q) else o.compare(q, p)
+    }
+    def field(r: Row4, k: Key, other: Row4): Int = k.field match {
+      case 0 => cmp(Some(r._1), Some(other._1), k)
+      case 1 => cmp(r._2, other._2, k)
+      case 2 => cmp(r._3, other._3, k)
+      case 3 => cmp(r._4, other._4, k)
+    }
+    def scalaSort(rows: List[Row4], keys: Seq[Key]): Seq[Long] = rows.sortWith { (x, y) =>
+      keys.iterator.map(field(x, _, y)).find(_ != 0).exists(_ < 0)
+    }.map(_._1)
+    // One SparkContext per JVM, so "local[1]" is its two effects on the
+    // rule: one shuffle partition, and a default parallelism of 1 in the
+    // coalescing bound (set through minPartitionNum). Above the bound, a
+    // 1-byte partition size leaves only the one-split-scan arm.
+    val layouts = Seq(
+      "local[1]" -> Seq("spark.sql.shuffle.partitions" -> "1",
+        "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "1"),
+      "local[4]" -> Seq("spark.sql.shuffle.partitions" -> "4"))
+    val bounds = Seq("below" -> Seq.empty,
+      "above" -> Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1"))
+    for (aqe <- Seq(true, false); (layout, lc) <- layouts; (bound, bc) <- bounds) {
+      val confs = (lc ++ bc) :+ ("spark.sql.adaptive.enabled" -> aqe.toString)
+      val prop = Prop.forAllNoShrink(rowsGen, keysGen, inputGen) { case (rows, keys, (parts, shape)) =>
+        withConfs(confs: _*) {
+          val (in, oneSplit) = input(rows, parts, shape)
+          val df = in.orderBy(keys.map(column): _*)
+          val got = df.collect().map(_.getLong(0)).toSeq
+          // the rule runs only under AQE (an RDD has no size estimate);
+          // below the bound it takes every other input, above it only a
+          // one-split scan. AQE plans an empty shuffle's result without
+          // a sort, so empty inputs check the order only.
+          val expected = aqe && shape != "rdd" && (bound == "below" || oneSplit)
+          val placed = allOps(df.queryExecution.executedPlan).exists(_.isInstanceOf[CoalesceExec])
+          Prop(got == scalaSort(rows, keys)) :| s"order: $keys over $parts $shape partitions" &&
+            Prop(rows.isEmpty || placed == expected) :|
+              s"in place: $placed, expected $expected ($parts $shape, one split: $oneSplit)"
+        }
+      }
+      val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(8)
+        .withInitialSeed(Seed(20261019L)).withWorkers(1), prop)
+      assert(res.passed, s"aqe=$aqe $layout bound $bound: ${res.status}")
+    }
   }
 
   test("hammingPairs64 banding finds EXACTLY the brute-force pair set") {

@@ -371,15 +371,12 @@ class ScaleOpsSpec extends SparkSpec {
     // explicit half): one key holding half the fact rows must trigger
     // AQE's OptimizeSkewedJoin under cluster-realistic thresholds,
     // proving the session config leaves the optimization reachable
-    val confs = Seq(
+    withConfs(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val big = spark.range(100000).select(
         when(col("id") % 2 === 0, 0L).otherwise(col("id")).as("k"),
         concat(lit("padpadpadpadpadpad"), col("id")).as("pad"))
@@ -389,9 +386,6 @@ class ScaleOpsSpec extends SparkSpec {
       assert(j.collect().length === 50500)   // key 0: 50k dups + 500 odd ids < 1000
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"), plan.take(3000))
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
