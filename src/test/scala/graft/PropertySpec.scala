@@ -71,6 +71,7 @@ class PropertySpec extends SparkSpec {
     // split, or several small ones), or from an RDD (no size estimate)
     val inputGen = Gen.zip(Gen.choose(1, 8), Gen.oneOf("shuffle", "parquet", "rdd"))
     val names = Seq("id", "a", "b", "c")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sort_prop_").toFile
     /** The input, and whether it is a one-split scan (one small file). */
     def input(rows: List[(Long, Option[Int], Option[String], Option[Long])], parts: Int,
               shape: String): (DataFrame, Boolean) = {
@@ -78,7 +79,7 @@ class PropertySpec extends SparkSpec {
       shape match {
         case "shuffle" => (local.repartition(parts), false)
         case "parquet" =>
-          val dir = java.nio.file.Files.createTempDirectory("graft_sort_prop_").toFile
+          val dir = java.nio.file.Files.createTempDirectory(tmp.toPath, "t").toFile
           local.repartition(parts).write.mode("overwrite").parquet(dir.getPath)
           (spark.read.parquet(dir.getPath), dir.listFiles.count(_.getName.endsWith(".parquet")) == 1)
         case "rdd" =>
@@ -120,7 +121,7 @@ class PropertySpec extends SparkSpec {
     val bounds = Seq("below" -> Seq.empty,
       "above" -> Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1"))
-    for (aqe <- Seq(true, false); (layout, lc) <- layouts; (bound, bc) <- bounds) {
+    try for (aqe <- Seq(true, false); (layout, lc) <- layouts; (bound, bc) <- bounds) {
       val confs = (lc ++ bc) :+ ("spark.sql.adaptive.enabled" -> aqe.toString)
       val prop = Prop.forAllNoShrink(rowsGen, keysGen, inputGen) { case (rows, keys, (parts, shape)) =>
         withConfs(confs: _*) {
@@ -141,7 +142,7 @@ class PropertySpec extends SparkSpec {
       val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(8)
         .withInitialSeed(Seed(20261019L)).withWorkers(1), prop)
       assert(res.passed, s"aqe=$aqe $layout bound $bound: ${res.status}")
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
   test("hammingPairs64 banding finds EXACTLY the brute-force pair set") {
