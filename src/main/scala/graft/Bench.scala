@@ -9,7 +9,7 @@ object Bench {
     // first measured query isn't charged ~7 s of one-time startup
     spark.range(1000000).selectExpr("sum(id)").collect()
     graft.Tables.all.foreach(n => graft.Tables(spark, sfDir, n).count())
-    // Per-query median of `reps` runs (Timing.medianNoopWrite): single-shot
+    // Per-query median of `reps` runs (Timing.sampleNoopWrite): single-shot
     // timing on this class of VM swings up to 10x on identical code, which
     // poisons round-over-round comparison. name-sorted so run order (and who
     // inherits residual JIT warmup) is identical across rounds — artifacts
@@ -34,8 +34,8 @@ object Bench {
             val extra = Timing.sampleNoopWrite(name, fn, spark, sfDir,
               heavyReps - reps)
             Timing.Sampled(base.times ++ extra.times,
-              base.ok && extra.ok, base.rows).toMeasured
-          } else base.toMeasured
+              base.ok && extra.ok, base.rows)
+          } else base
         (name, m.medianSec, m.ok)
       }
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
@@ -60,19 +60,10 @@ object Bench {
     // window, and the ~5 KB per-query line flooded it every round
     // (r9-r11: BENCH parsed:null). The sidecar is the durable artifact.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
-    def writeJson(path: String): Unit =
-      try java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case e: java.io.IOException =>
-        System.err.println(s"bench artifact write to $path failed: ${e.getMessage}") }
-    writeJson(out)
-    // Second, STABLE copy at a caller-chosen path, for tooling that
-    // wants the per-query map where stdout carries just the total. Only
-    // when SPARK_GRAFT_BENCH_SIDE names it: a default of the tracked
-    // BENCH_SIDE.json dirtied the tree on every ad-hoc run from the repo
-    // root and stamped later runs' head_sha `-dirty`. Full runs only, so
-    // a subset run can never shadow the round map.
-    if (onlyField.isEmpty) sys.env.get("SPARK_GRAFT_BENCH_SIDE").foreach(writeJson)
+    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
+      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: java.io.IOException =>
+      System.err.println(s"bench artifact write to $out failed: ${e.getMessage}") }
     // Stdout carries ONE compact JSON line (totals + sidecar path): short
     // enough that no tail window truncates it, bare at column 0 (build.sbt
     // sets run/outputStrategy=StdoutOutput so sbt adds no "[info] "

@@ -2,12 +2,30 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dumps `explain("formatted")` for the headline queries to PLANS.md —
-  * the physical-plan evidence (pushdown, broadcast, partial agg,
-  * codegen spans) that PlanSpec asserts programmatically. Regenerate:
-  * `sbt "runMain graft.Plans"`. */
+/** The plan tool: `explain("formatted")` of registered queries, in three
+  * modes that share the session and the explain code.
+  *
+  *  - `graft.Plans [sfDir] [out]` writes PLANS.md for the headline
+  *    queries at sf0.001 on 4 cores — the physical-plan evidence
+  *    (pushdown, broadcast, partial agg, codegen spans) that PlanSpec
+  *    asserts programmatically.
+  *  - `graft.Plans dump <outDir> <suffix> <q1,q2,...>` writes
+  *    `<outDir>/<query>_<suffix>.txt`, ONE FILE PER QUERY at bench
+  *    conditions (`SPARK_GRAFT_SF_DIR`, default sf0.1, on 32 cores), so
+  *    the before/after plan diffs an optimization round commits
+  *    (plans/rNN/) line up with the numbers the bench reports.
+  *  - `graft.Plans final <query> [sfDir]` prints the AQE-FINALIZED plan
+  *    after one collect (sf0.1 on 32 cores by default), so runtime
+  *    decisions (`ReusedExchange`/stage reuse, AQE join conversions,
+  *    skew splits, coalesced partitions) are visible. The static plans
+  *    of the other modes can both miss runtime reuse and show exchanges
+  *    AQE later removes; when auditing "does this subtree really
+  *    recompute?", this is the ground truth.
+  *
+  * Run any mode with `sbt "runMain graft.Plans <args>"`. */
 object Plans {
   val headline: Seq[String] = Seq(
     "q_p2_filter_project", "q_a1_groupsum", "q_j1_join3", "q_j2_nearest",
@@ -46,13 +64,13 @@ object Plans {
     // the lineitem scan (Catalyst can't infer it through the semi-join
     // condition) so the fact side shuffles only the late tail
     "q_tpch_q4",
-    // round 12 (re-shaped r14: GK→KLL; r15: pre-aggregated weighted
-    // arm) — the operator's medians now derive from a codegen'd
-    // (group, value)→count hash aggregate feeding kll_sketch_weighted
-    // updates, with the MAD residual pass computed from the
-    // localCheckpointed counts table (no second corpus scan); the
-    // exact-percentile branches in the same plan are the oracle's
-    // bound checks, not the operator
+    // round 12 (re-shaped r14: GK→KLL; r15: the weighted sketch arm)
+    // — the operator's medians now derive from a codegen'd
+    // (group, value)→count hash aggregate feeding the KLL aggregate's
+    // weighted updates (kll_sketch_weighted_agg), with the MAD residual
+    // pass computed from the localCheckpointed counts table (no second
+    // corpus scan); the exact-percentile branches in the same plan are
+    // the oracle's bound checks, not the operator
     "q_mad_outliers_approx",
     // round 12: DSIR — both bucket models partial-aggregate before a
     // ≤buckets-row shuffle, λ rides a BroadcastExchange into the
@@ -92,29 +110,60 @@ object Plans {
     // no probe stage either way)
     "q_mad_outliers_auto", "q_winsorize_auto", "q_equidepth_auto")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = GraftSession.local(4)
-    val mode = ExplainMode.fromString("formatted")
-    val sections = headline.map { name =>
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(mode)
-      s"## $name\n\n```\n$plan```\n"
-    }
-    val doc =
-      s"""# PLANS — physical plans of the headline queries
-         |
-         |Generated by `graft.Plans` at HEAD `${Timing.headSha()}`.
-         |Generated at sf0.001 (plan shape is scale-invariant;
-         |AQE may further coalesce/convert at runtime). Things to look for:
-         |`PushedFilters`/`ReadSchema` on scans (pushdown + pruning),
-         |`BroadcastHashJoin` on dim joins, `partial_*` aggregate modes
-         |(map-side combine), and codegen stage markers.
-         |
-         |${sections.mkString("\n")}""".stripMargin
-    Files.writeString(Paths.get(out), doc)
-    println(s"wrote $out")
-    spark.stop()
+  def main(args: Array[String]): Unit = args.toList match {
+    case "dump" :: outDir :: suffix :: names :: Nil =>
+      withSession(32) { spark =>
+        val dir = Paths.get(outDir)
+        Files.createDirectories(dir)
+        val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+        names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+          Files.writeString(dir.resolve(s"${name}_$suffix.txt"), explain(spark, name, sfDir))
+          println(s"wrote ${name}_$suffix.txt")
+        }
+      }
+    case "final" :: name :: rest if rest.size <= 1 =>
+      withSession(32) { spark =>
+        val df = SparkEntry.queries(name)(spark, rest.headOption.getOrElse("/root/testdata/sf0.1"))
+        // drive THIS dataset's own QueryExecution: a write (or .rdd /
+        // .foreach, which plan a separate rddQueryExecution) would leave
+        // the printed AdaptiveSparkPlan at isFinalPlan=false. collect()
+        // is the one action sharing the QueryExecution — fine for a
+        // diagnostic probe (mind the driver heap on corpus-sized outputs).
+        val n = df.collect().length
+        println(s"== AQE-finalized plan: $name ($n rows) ==")
+        println(df.queryExecution.executedPlan.toString)
+      }
+    case rest if rest.size <= 2 && !rest.headOption.exists(Set("dump", "final")) =>
+      val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
+      val out = rest.lift(1).getOrElse("PLANS.md")
+      withSession(4) { spark =>
+        val sections = headline.map { name =>
+          s"## $name\n\n```\n${explain(spark, name, sfDir)}```\n"
+        }
+        val doc =
+          s"""# PLANS — physical plans of the headline queries
+             |
+             |Generated by `graft.Plans` at HEAD `${Timing.headSha()}`.
+             |Generated at sf0.001 (plan shape is scale-invariant;
+             |AQE may further coalesce/convert at runtime). Things to look for:
+             |`PushedFilters`/`ReadSchema` on scans (pushdown + pruning),
+             |`BroadcastHashJoin` on dim joins, `partial_*` aggregate modes
+             |(map-side combine), and codegen stage markers.
+             |
+             |${sections.mkString("\n")}""".stripMargin
+        Files.writeString(Paths.get(out), doc)
+        println(s"wrote $out")
+      }
+    case _ => sys.error("usage: Plans [sfDir] [out] | Plans dump <outDir> <suffix> " +
+      "<q1,q2,...> | Plans final <query> [sfDir]")
+  }
+
+  private def explain(spark: SparkSession, name: String, sfDir: String): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(ExplainMode.fromString("formatted"))
+
+  private def withSession(cores: Int)(body: SparkSession => Unit): Unit = {
+    val spark = GraftSession.local(cores)
+    try body(spark) finally spark.stop()
   }
 }

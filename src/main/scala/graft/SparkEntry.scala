@@ -41,6 +41,50 @@ object SparkEntry {
       .withColumn("v", when(col("event_type") === "error", lit(null).cast("double"))
         .otherwise(col("value")))
 
+  /** The band check of the winsorize sketch twins: the per-flag p05/p95
+    * bounds `w` carries must land within ±1% rank of exact (oracle
+    * asserts TRUE), and n_escaped proves the clamp invariant (no output
+    * value outside [_lo,_hi]) holds whichever arm produced the bounds —
+    * an exact 0, not a tolerance. */
+  private def winsorizeBands(li: DataFrame, w: DataFrame): DataFrame = {
+    val ex = li.groupBy("l_returnflag").agg(
+      expr("percentile(l_extendedprice, array(0.04, 0.06, 0.94, 0.96))").as("e"))
+    w.groupBy("l_returnflag").agg(
+        count(lit(1)).as("n"),
+        min("_lo").as("_alo"), min("_hi").as("_ahi"),
+        sum(when(col("l_extendedprice_w") < col("_lo")
+          || col("l_extendedprice_w") > col("_hi"), 1L).otherwise(0L)).as("n_escaped"))
+      .join(ex, "l_returnflag")
+      .select(col("l_returnflag"), col("n"), col("n_escaped"),
+        (col("_alo") >= col("e")(0) && col("_alo") <= col("e")(1)).as("lo_ok"),
+        (col("_ahi") >= col("e")(2) && col("_ahi") <= col("e")(3)).as("hi_ok"))
+      .orderBy("l_returnflag")
+  }
+
+  /** The band check of the MAD sketch twins: the per-flag median `mad`
+    * carries must land within ±1% rank of the exact median, and its MAD
+    * within ±1% rank of the exact median of the residuals AROUND THE
+    * APPROX MEDIAN — the sketch's own input distribution (r12 ADVICE: a
+    * band from exact-median residuals would flake on data where the two
+    * medians differ); both asserted TRUE, n is the exact row count. */
+  private def madBands(li: DataFrame, mad: DataFrame): DataFrame = {
+    val ap = mad.groupBy("l_returnflag").agg(
+      count(lit(1)).as("n"),
+      min("_med").as("_amed"), min("_mad").as("_amad"))
+    val exMed = li.groupBy("l_returnflag").agg(
+      expr("percentile(l_quantity, array(0.49, 0.51))").as("em"))
+    val adev = li.join(ap.select("l_returnflag", "_amed"), "l_returnflag")
+      .withColumn("_adev", abs(col("l_quantity") - col("_amed")))
+      .groupBy("l_returnflag")
+      .agg(expr("percentile(_adev, array(0.49, 0.51))").as("ad"))
+    ap.join(exMed, "l_returnflag")
+      .join(adev, "l_returnflag")
+      .select(col("l_returnflag"), col("n"),
+        (col("_amed") >= col("em")(0) && col("_amed") <= col("em")(1)).as("med_ok"),
+        (col("_amad") >= col("ad")(0) && col("_amad") <= col("ad")(1)).as("mad_ok"))
+      .orderBy("l_returnflag")
+  }
+
   private val eventsPrepSql =
     "SELECT event_id, user_id, event_type, value, CAST(floor(epoch(ts)) AS BIGINT) AS s, " +
       "CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v FROM events"
@@ -181,29 +225,13 @@ object SparkEntry {
         .orderBy("l_returnflag")
     }),
 
-    // A10-approx: winsorize with KLL-sketch bounds (the 100 TB arm of
-    // the winsorize dispatch — see Profile.winsorize; ONE sketch per
-    // group serves both bounds). Exported as bound
-    // checks: the approx p05/p95 must land within ±1% rank of exact
-    // (oracle asserts TRUE), and n_escaped proves the clamp invariant
-    // (no output value outside [_lo,_hi]) holds regardless of which
-    // arm produced the bounds — an exact 0, not a tolerance.
+    // A10-approx: winsorize with KLL-sketch bounds (the 100 TB arm —
+    // see Profile.Arm; ONE sketch per group serves both bounds),
+    // exported as winsorizeBands' bound checks.
     "q_winsorize_approx" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
-      val w = Profile.winsorize(li, "l_extendedprice", Seq("l_returnflag"),
-        lo = 0.05, hi = 0.95, approx = true)
-      val ex = li.groupBy("l_returnflag").agg(
-        expr("percentile(l_extendedprice, array(0.04, 0.06, 0.94, 0.96))").as("e"))
-      w.groupBy("l_returnflag").agg(
-          count(lit(1)).as("n"),
-          min("_lo").as("_alo"), min("_hi").as("_ahi"),
-          sum(when(col("l_extendedprice_w") < col("_lo")
-            || col("l_extendedprice_w") > col("_hi"), 1L).otherwise(0L)).as("n_escaped"))
-        .join(ex, "l_returnflag")
-        .select(col("l_returnflag"), col("n"), col("n_escaped"),
-          (col("_alo") >= col("e")(0) && col("_alo") <= col("e")(1)).as("lo_ok"),
-          (col("_ahi") >= col("e")(2) && col("_ahi") <= col("e")(3)).as("hi_ok"))
-        .orderBy("l_returnflag")
+      winsorizeBands(li, Profile.winsorize(li, "l_extendedprice",
+        Seq("l_returnflag"), lo = 0.05, hi = 0.95, arm = Profile.Arm.Sketch))
     }),
 
     // A10-auto: winsorize through the stats-driven dispatch on the
@@ -213,20 +241,9 @@ object SparkEntry {
     "q_winsorize_auto" -> ((s, dir) => {
       val li = s.table(Tables.ensureStats(s, dir, "lineitem",
         Seq("l_returnflag", "l_quantity", "l_extendedprice")))
-      val w = Profile.winsorizeAuto(li, "l_extendedprice", Seq("l_returnflag"),
-        lo = 0.05, hi = 0.95, perGroupBound = 100000L)
-      val ex = li.groupBy("l_returnflag").agg(
-        expr("percentile(l_extendedprice, array(0.04, 0.06, 0.94, 0.96))").as("e"))
-      w.groupBy("l_returnflag").agg(
-          count(lit(1)).as("n"),
-          min("_lo").as("_alo"), min("_hi").as("_ahi"),
-          sum(when(col("l_extendedprice_w") < col("_lo")
-            || col("l_extendedprice_w") > col("_hi"), 1L).otherwise(0L)).as("n_escaped"))
-        .join(ex, "l_returnflag")
-        .select(col("l_returnflag"), col("n"), col("n_escaped"),
-          (col("_alo") >= col("e")(0) && col("_alo") <= col("e")(1)).as("lo_ok"),
-          (col("_ahi") >= col("e")(2) && col("_ahi") <= col("e")(3)).as("hi_ok"))
-        .orderBy("l_returnflag")
+      winsorizeBands(li, Profile.winsorize(li, "l_extendedprice",
+        Seq("l_returnflag"), lo = 0.05, hi = 0.95,
+        arm = Profile.Arm.Auto(perGroupBound = 100000L)))
     }),
 
     // A12: per-group robust (median/MAD) outlier fences on the
@@ -305,51 +322,28 @@ object SparkEntry {
     }),
 
     // A12-approx: MAD fences from the KLL quantile sketch (the 100 TB
-    // arm of the madOutliers dispatch — exact per-group medians buffer
-    // each group's values; the sketch partial-merges map-side; KLL
-    // replaced GK in r14 because GK's per-update constant made the
-    // sketch arm SLOWER than the exact arm at the x100 probe). Same
-    // bound-check contract as the other approx twins: the approx
-    // median must land within ±1% rank of the exact median, and the
-    // approx MAD within ±1% rank of the exact median of the residuals
-    // AROUND THE APPROX MEDIAN — the sketch's own input distribution
-    // (r12 ADVICE: a band from exact-median residuals would flake on
-    // data where the two medians differ); both asserted TRUE, n is
-    // the exact integer row count.
+    // arm — exact per-group medians buffer each group's values; the
+    // sketch partial-merges map-side), exported as madBands' bound
+    // checks.
     "q_mad_outliers_approx" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
-      // preAggregate: l_quantity is integer-valued (~50 distinct), so
-      // the sketch absorbs (flag, quantity) counts as weighted updates
-      // — O(values) sketch work instead of O(rows) (r15); the bound
-      // contract below verifies the same ±1% rank bands either way
-      val ap = Profile.madOutliers(li, "l_quantity", Seq("l_returnflag"),
-        k = 1.5, approx = true, preAggregate = true)
-        .groupBy("l_returnflag").agg(
-          count(lit(1)).as("n"),
-          min("_med").as("_amed"), min("_mad").as("_amad"))
-      val exMed = li.groupBy("l_returnflag").agg(
-        expr("percentile(l_quantity, array(0.49, 0.51))").as("em"))
-      val adev = li.join(ap.select("l_returnflag", "_amed"), "l_returnflag")
-        .withColumn("_adev", abs(col("l_quantity") - col("_amed")))
-        .groupBy("l_returnflag")
-        .agg(expr("percentile(_adev, array(0.49, 0.51))").as("ad"))
-      ap.join(exMed, "l_returnflag")
-        .join(adev, "l_returnflag")
-        .select(col("l_returnflag"), col("n"),
-          (col("_amed") >= col("em")(0) && col("_amed") <= col("em")(1)).as("med_ok"),
-          (col("_amad") >= col("ad")(0) && col("_amad") <= col("ad")(1)).as("mad_ok"))
-        .orderBy("l_returnflag")
+      // l_quantity is integer-valued (~50 distinct), so the weighted
+      // arm absorbs (flag, quantity) counts as weighted updates —
+      // O(values) sketch work instead of O(rows) (r15); the bands are
+      // the same either way
+      madBands(li, Profile.madOutliers(li, "l_quantity", Seq("l_returnflag"),
+        k = 1.5, arm = Profile.Arm.WeightedSketch))
     }),
 
     // A12-auto: the DISPATCHED face on the stats-bearing catalog
     // table (r16 — before this the CBO zero-job dispatch paths never
     // fired outside test fixtures because the contract corpus was raw
     // parquet with no column stats). Tables.ensureStats ANALYZEs
-    // lineitem once per session; madOutliersAuto then picks its arm
+    // lineitem once per session; Arm.Auto then picks the arm
     // from plan statistics alone: at sf0.01 rowCount ≤ the bound →
     // exact arm; at sf0.1+ the distinct-product lower bound proves a
-    // hot group → KLL arm, and lowCardinality(l_quantity) flips the
-    // weighted pre-aggregation on — all with zero probe jobs
+    // hot group → KLL arm, and lowCardinality(l_quantity) picks the
+    // weighted sketch — all with zero probe jobs
     // (ScaleOpsSpec asserts the job count on this very table). The
     // export is the same rank-band contract as the _approx twin, which
     // holds under EITHER arm (the exact arm's median sits inside its
@@ -357,23 +351,8 @@ object SparkEntry {
     "q_mad_outliers_auto" -> ((s, dir) => {
       val li = s.table(Tables.ensureStats(s, dir, "lineitem",
         Seq("l_returnflag", "l_quantity", "l_extendedprice")))
-      val ap = Profile.madOutliersAuto(li, "l_quantity", Seq("l_returnflag"),
-        k = 1.5, perGroupBound = 100000L)
-        .groupBy("l_returnflag").agg(
-          count(lit(1)).as("n"),
-          min("_med").as("_amed"), min("_mad").as("_amad"))
-      val exMed = li.groupBy("l_returnflag").agg(
-        expr("percentile(l_quantity, array(0.49, 0.51))").as("em"))
-      val adev = li.join(ap.select("l_returnflag", "_amed"), "l_returnflag")
-        .withColumn("_adev", abs(col("l_quantity") - col("_amed")))
-        .groupBy("l_returnflag")
-        .agg(expr("percentile(_adev, array(0.49, 0.51))").as("ad"))
-      ap.join(exMed, "l_returnflag")
-        .join(adev, "l_returnflag")
-        .select(col("l_returnflag"), col("n"),
-          (col("_amed") >= col("em")(0) && col("_amed") <= col("em")(1)).as("med_ok"),
-          (col("_amad") >= col("ad")(0) && col("_amad") <= col("ad")(1)).as("mad_ok"))
-        .orderBy("l_returnflag")
+      madBands(li, Profile.madOutliers(li, "l_quantity", Seq("l_returnflag"),
+        k = 1.5, arm = Profile.Arm.Auto(perGroupBound = 100000L)))
     }),
 
     // A11: per-group feature scaling (z-score + min-max). The raw
@@ -1532,8 +1511,8 @@ object SparkEntry {
     "q_equidepth_auto" -> ((s, dir) => {
       val li = s.table(Tables.ensureStats(s, dir, "lineitem",
         Seq("l_returnflag", "l_quantity", "l_extendedprice")))
-      val ed = Profile.equidepthAuto(li, "l_quantity", bins = 4,
-        perGroupBound = 100000L)
+      val ed = Profile.equidepth(li, "l_quantity", bins = 4,
+        arm = Profile.Arm.Auto(perGroupBound = 100000L))
       ed.crossJoin(broadcast(ed.agg(sum("n").as("_tot"))))
         .select(col("bin"),
           (abs(col("n").cast("double") / col("_tot").cast("double") - 0.25)

@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * side of the ratio artifact.
   */
 object StressSmoke {
-  import graft.operators.{Dedup, Similarity}
+  import graft.operators.{Dedup, Profile, Similarity}
 
   /** Queries with a linear-or-better scale design, spanning BOTH
     * halves of the engine: the LLM-ops families (dedup/text/
@@ -178,36 +178,12 @@ object StressSmoke {
   private val overrides: Map[String, (SparkSession, String) => DataFrame] = Map(
     // raw sketch arms (probe-only names — see stressQueries note): the
     // operator passes without the oracle's exact-percentile bound
-    // verification that the registered *_approx twins must also run
-    "q_mad_sketch_raw" -> ((s, dir) => {
-      graft.operators.Profile.madOutliers(Tables(s, dir, "lineitem"),
-        "l_quantity", Seq("l_returnflag"), k = 1.5, approx = true,
-        preAggregate = true)
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("is_outlier"), 1L).otherwise(0L)).as("n_outliers"),
-          min("_med").as("med"), min("_mad").as("mad_val"))
-        .orderBy("l_returnflag")
-    }),
-    // the PLAIN sketch arm (approx without the weighted pre-
-    // aggregation) as its own committed probe row (r17 — VERDICT r16
-    // item 2): with q_mad_outliers (exact) and q_mad_sketch_raw
-    // (preAgg sketch) this completes the three-arm MAD family in ONE
-    // artifact, so COVERAGE's arm-comparison narrative cites committed
-    // interleaved-median numbers instead of a one-off paired run. The
-    // registered q_mad_outliers_approx twin is NOT this measurement:
-    // its x100 cost is dominated by the oracle's exact-percentile
-    // bound-verification legs, which a production run never executes.
-    "q_mad_plain_raw" -> ((s, dir) => {
-      graft.operators.Profile.madOutliers(Tables(s, dir, "lineitem"),
-        "l_quantity", Seq("l_returnflag"), k = 1.5, approx = true,
-        preAggregate = false)
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("is_outlier"), 1L).otherwise(0L)).as("n_outliers"),
-          min("_med").as("med"), min("_mad").as("mad_val"))
-        .orderBy("l_returnflag")
-    }),
+    // verification that the registered *_approx twins must also run.
+    // q_mad_plain_raw is the PLAIN sketch arm (r17 — VERDICT r16 item
+    // 2): with q_mad_outliers (exact) and q_mad_sketch_raw (weighted
+    // sketch) it completes the three-arm MAD family in ONE artifact.
+    "q_mad_sketch_raw" -> madRaw(Profile.Arm.WeightedSketch),
+    "q_mad_plain_raw" -> madRaw(Profile.Arm.Sketch),
     "q_dsir_sketch_raw" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
       val scored = graft.operators.Sampling.dsirWeights(docs, "doc_id", "text",
@@ -448,6 +424,16 @@ object StressSmoke {
         .write.mode("overwrite").parquet(s"$work/$dim.parquet")
   }
 
+  /** A raw MAD probe: the operator on `arm` and a per-flag summary. */
+  private def madRaw(arm: Profile.Arm): (SparkSession, String) => DataFrame =
+    (s, dir) => Profile.madOutliers(Tables(s, dir, "lineitem"),
+        "l_quantity", Seq("l_returnflag"), k = 1.5, arm = arm)
+      .groupBy("l_returnflag")
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("is_outlier"), 1L).otherwise(0L)).as("n_outliers"),
+        min("_med").as("med"), min("_mad").as("mad_val"))
+      .orderBy("l_returnflag")
+
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_sf1shape"
@@ -473,7 +459,7 @@ object StressSmoke {
     // a partial run without grepping logs — a crashed run's survivors
     // must never min-merge into the round artifact as if they were clean.
     // BOTH failure paths feed it: construction errors (the catch) AND
-    // per-rep runtime errors, which medianNoopWrite swallows into its
+    // per-rep runtime errors, which sampleNoopWrite swallows into its
     // `ok` flag — dropping the flag would let an error's near-instant
     // duration masquerade as a fast measurement (Bench checks it too).
     val failed = scala.collection.mutable.ListBuffer[String]()
@@ -488,7 +474,7 @@ object StressSmoke {
         // (q_bucket_rollup emits 10x the groups at 10x): out_rows on
         // both sides lets stress_merge derive a per-output-row ratio so
         // that distinction is in the artifact, not in prose.
-        val m = Timing.medianNoopWrite(name, fn, spark, work, timingReps,
+        val m = Timing.sampleNoopWrite(name, fn, spark, work, timingReps,
           observeRows = true)
         if (m.ok) Some(name -> (m.medianSec, m.rows))
         else { failed += name; None }

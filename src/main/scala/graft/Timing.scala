@@ -25,22 +25,19 @@ object Timing {
       if (dirty) s"$sha-dirty" else sha
     } catch { case _: Exception => "unknown" }
 
-  /** One measured query: median seconds over the reps, whether every
-    * rep succeeded, and the output cardinality (−1 unless observed). */
-  case class Measured(medianSec: Double, ok: Boolean, rows: Long)
-
-  /** Raw per-rep samples behind [[Measured]] — for callers that pool
-    * samples across batches (Bench's heavy-tail extra reps, r17) so
-    * the median is over EVERY rep taken, not a median of medians. */
+  /** One measured query: every rep's seconds, whether every rep
+    * succeeded, and the output cardinality (−1 unless observed). A
+    * caller may pool samples across batches (Bench's heavy-tail extra
+    * reps, r17), so the median is over EVERY rep taken, not a median
+    * of medians. */
   case class Sampled(times: Seq[Double], ok: Boolean, rows: Long) {
     def medianSec: Double = {
       val s = times.sorted; s(s.length / 2)
     }
-    def toMeasured: Measured = Measured(medianSec, ok, rows)
   }
 
-  /** Run `fn`'s plan through a noop write `reps` times; return the
-    * median seconds and whether every rep succeeded. A failed rep
+  /** Run `fn`'s plan through a noop write `reps` times; return every
+    * rep's seconds and whether every rep succeeded. A failed rep
     * reports its message on stderr — its (near-instant) duration would
     * otherwise masquerade as a fast success in the round artifact.
     *
@@ -51,13 +48,6 @@ object Timing {
     * once more per stress run and could fail a run whose timed reps
     * all succeeded. Both sides of a stress ratio measure with the same
     * flag, so the (tiny) metric overhead cancels. */
-  def medianNoopWrite(name: String, fn: (SparkSession, String) => DataFrame,
-                      spark: SparkSession, dir: String,
-                      reps: Int, observeRows: Boolean = false): Measured =
-    sampleNoopWrite(name, fn, spark, dir, reps, observeRows).toMeasured
-
-  /** [[medianNoopWrite]]'s body, returning every rep's duration so a
-    * caller can pool further batches before taking the median. */
   def sampleNoopWrite(name: String, fn: (SparkSession, String) => DataFrame,
                       spark: SparkSession, dir: String,
                       reps: Int, observeRows: Boolean = false): Sampled = {

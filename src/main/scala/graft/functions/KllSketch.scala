@@ -19,28 +19,41 @@ import org.apache.spark.sql.types._
   * any day range" from state rows alone — raw rows reduced once,
   * never rescanned (Karnin–Lang–Liberty 2016; DataSketches KLL).
   *
-  * Dual-mode input, mirroring hll_sketch_agg/hll_union_agg: a NUMERIC
-  * child builds a sketch from values; a BINARY child MERGES previously
-  * serialized sketches (the rollup pass over a partial table). Merge
-  * is associative; partials map-side combine like any built-in. Below
-  * `k` values a KLL sketch stores the exact set (estimates are exact);
-  * above, normalized rank error ≈ 1.65% at k=200, shrinking ~linearly
-  * in k. Deterministic for a given input MULTISET under fixed merge
-  * shape; the oracle contract therefore pins rank-band BOUNDS, not the
-  * estimate value.
+  * Three modes, one per `prettyName`:
+  *  - `kll_sketch_agg`: a NUMERIC child builds a sketch from values;
+  *  - `kll_union_agg`: a BINARY child MERGES previously serialized
+  *    sketches (the rollup pass over a partial table), mirroring
+  *    hll_sketch_agg/hll_union_agg;
+  *  - `kll_sketch_weighted_agg`: a numeric child with an integral
+  *    `weight` child (≥ 1) — `update(v, w)` equals `w` plain updates
+  *    at O(log w) level insertions, so a `(value, count)` table feeds
+  *    the sketch O(distinct values) updates instead of O(rows). Null
+  *    values and null weights are skipped alike.
+  *
+  * Merge is associative; partials map-side combine like any built-in.
+  * Every sketch has the fixed `k` = [[KllSketchAgg.K]]. Below `k`
+  * values a KLL sketch stores the exact multiset (estimates are exact
+  * order statistics); above, the normalized rank error is ≈ 1.65% at
+  * k=200, shrinking ~linearly in k. Above `k` the compaction draws
+  * from an unseeded random source, so the retained items (and the
+  * serialized bytes) may differ between runs on the same input: what
+  * stays stable is the rank-band contract, so the oracle pins rank-band
+  * BOUNDS, not the estimate value, and result digests cover only those
+  * band booleans.
   */
-case class KllSketchAgg(child: Expression, k: Int,
+case class KllSketchAgg(child: Expression, weight: Option[Expression] = None,
                         mutableAggBufferOffset: Int = 0,
                         inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[KllDoublesSketch] {
-
-  require(k >= 8 && k <= 65535, s"need 8 <= k <= 65535, got $k")
 
   // resolved only after analysis — must stay lazy (construction sees
   // an unresolved child whose dataType throws)
   private lazy val mergeMode = child.dataType == BinaryType
 
-  override def children: Seq[Expression] = Seq(child)
+  override def children: Seq[Expression] = child +: weight.toSeq
+  // plans show the weight as an argument, not as Some(...)/None
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child) ++ weight ++ Iterator(mutableAggBufferOffset, inputAggBufferOffset)
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
   // guarded on child.resolved: prettyName renders inside analysis
@@ -48,28 +61,45 @@ case class KllSketchAgg(child: Expression, k: Int,
   // (child.dataType) would throw UnresolvedException and mask the
   // real error
   override def prettyName: String =
-    if (!child.resolved) "kll_sketch_agg"
-    else if (mergeMode) "kll_union_agg" else "kll_sketch_agg"
+    if (weight.isDefined) "kll_sketch_weighted_agg"
+    else if (child.resolved && mergeMode) "kll_union_agg"
+    else "kll_sketch_agg"
 
   override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
+    KllDoublesSketch.newHeapInstance(KllSketchAgg.K)
 
   override def update(buf: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
     val v = child.eval(input)
-    if (v != null) {
-      if (mergeMode)
-        buf.merge(KllDoublesSketch.heapify(Memory.wrap(v.asInstanceOf[Array[Byte]])))
-      else v match {
-        case d: Double     => buf.update(d)
-        case f: Float      => buf.update(f.toDouble)
-        case l: Long       => buf.update(l.toDouble)
-        case i: Int        => buf.update(i.toDouble)
-        case dec: org.apache.spark.sql.types.Decimal => buf.update(dec.toDouble)
+    if (v != null) weight match {
+      case None =>
+        if (mergeMode)
+          buf.merge(KllDoublesSketch.heapify(Memory.wrap(v.asInstanceOf[Array[Byte]])))
+        else buf.update(toDouble(v))
+      case Some(w) => w.eval(input) match {
+        case null =>
+        case wl: Long => buf.update(toDouble(v), checkWeight(wl))
+        case wi: Int  => buf.update(toDouble(v), checkWeight(wi.toLong))
         case other => throw new IllegalArgumentException(
-          s"kll_sketch_agg: unsupported input ${other.getClass.getName}")
+          s"$prettyName: integral weight required, got ${other.getClass.getName}")
       }
     }
     buf
+  }
+
+  private def toDouble(v: Any): Double = v match {
+    case d: Double     => d
+    case f: Float      => f.toDouble
+    case l: Long       => l.toDouble
+    case i: Int        => i.toDouble
+    case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
+    case other => throw new IllegalArgumentException(
+      s"$prettyName: unsupported input ${other.getClass.getName}")
+  }
+
+  private def checkWeight(w: Long): Long = {
+    if (w < 1L) throw new IllegalArgumentException(
+      s"$prettyName: weight must be >= 1, got $w")
+    w
   }
 
   override def merge(buf: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
@@ -90,92 +120,22 @@ case class KllSketchAgg(child: Expression, k: Int,
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KllSketchAgg =
-    copy(child = newChildren.head)
+    copy(child = newChildren.head, weight = weight.map(_ => newChildren(1)))
 }
 
 object KllSketchAgg {
+  /** The sketch size every KLL aggregate uses: rank error ~0.5%. */
+  val K = 800
+
   /** Aggregate Column: numeric child builds, binary child merges. */
-  def apply(c: Column, k: Int): Column =
+  def apply(c: Column): Column =
     ColumnBridge.column(
-      new KllSketchAgg(ColumnBridge.expression(c), k).toAggregateExpression())
-}
+      new KllSketchAgg(ColumnBridge.expression(c)).toAggregateExpression())
 
-/** WEIGHTED KLL sketch build: `update(value, weight)` is equivalent to
-  * `weight` plain updates but costs O(log weight) level insertions
-  * (DataSketches KLL weighted update — the weight decomposes in binary
-  * across sketch levels, introducing no sampling error at insertion).
-  * This is the pre-aggregated arm for LOW-CARDINALITY value columns
-  * (integer-valued counts/quantities): a codegen'd
-  * `(group, value) → count` hash aggregate first collapses the corpus
-  * to one row per distinct value, then the sketch absorbs those counts
-  * as weights — O(distinct values) sketch updates instead of O(rows),
-  * while every rank-error bound of the plain sketch still holds.
-  * Null weights are skipped like null values; weights must be ≥ 1. */
-case class KllSketchWeightedAgg(value: Expression, weight: Expression, k: Int,
-                                mutableAggBufferOffset: Int = 0,
-                                inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] {
-
-  require(k >= 8 && k <= 65535, s"need 8 <= k <= 65535, got $k")
-
-  override def children: Seq[Expression] = Seq(value, weight)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "kll_sketch_weighted_agg"
-
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
-
-  override def update(buf: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = value.eval(input)
-    val w = weight.eval(input)
-    if (v != null && w != null) {
-      val wl = w match {
-        case l: Long => l
-        case i: Int  => i.toLong
-        case other => throw new IllegalArgumentException(
-          s"kll_sketch_weighted_agg: integral weight required, got ${other.getClass.getName}")
-      }
-      if (wl < 1L) throw new IllegalArgumentException(
-        s"kll_sketch_weighted_agg: weight must be >= 1, got $wl")
-      val vd = v match {
-        case d: Double => d
-        case f: Float  => f.toDouble
-        case l: Long   => l.toDouble
-        case i: Int    => i.toDouble
-        case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
-        case other => throw new IllegalArgumentException(
-          s"kll_sketch_weighted_agg: unsupported input ${other.getClass.getName}")
-      }
-      buf.update(vd, wl)
-    }
-    buf
-  }
-
-  override def merge(buf: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
-    buf.merge(other)
-    buf
-  }
-
-  override def eval(buf: KllDoublesSketch): Any = buf.toByteArray
-  override def serialize(buf: KllDoublesSketch): Array[Byte] = buf.toByteArray
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch =
-    KllDoublesSketch.heapify(Memory.wrap(bytes))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllSketchWeightedAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllSketchWeightedAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): KllSketchWeightedAgg =
-    copy(value = newChildren(0), weight = newChildren(1))
-}
-
-object KllSketchWeightedAgg {
-  def apply(value: Column, weight: Column, k: Int): Column =
-    ColumnBridge.column(
-      new KllSketchWeightedAgg(ColumnBridge.expression(value),
-        ColumnBridge.expression(weight), k).toAggregateExpression())
+  /** Weighted build: `value` counted `weight` (integral, ≥ 1) times. */
+  def apply(value: Column, weight: Column): Column =
+    ColumnBridge.column(new KllSketchAgg(ColumnBridge.expression(value),
+      Some(ColumnBridge.expression(weight))).toAggregateExpression())
 }
 
 /** Quantile estimate at `rank` (a [0,1] literal-ish expression) from a

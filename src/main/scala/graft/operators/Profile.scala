@@ -17,68 +17,108 @@ import org.apache.spark.sql.functions._
   */
 object Profile {
 
+  /** The percentile computation behind [[winsorize]], [[madOutliers]]
+    * and [[equidepth]]. Every arm yields the same output schema; only
+    * the bounds move, by at most the sketch's rank error. */
+  sealed trait Arm
+  object Arm {
+    /** Exact interpolated percentiles: a sort-based aggregate that
+      * buffers each group's values in one task. The oracle-matched
+      * arm. */
+    case object Exact extends Arm
+    /** The 100 TB arm: ONE KLL quantile sketch per group
+      * ([[graft.functions.KllSketchAgg]], rank error ~0.5%), which
+      * partial-aggregates map-side and shuffles only merged sketches —
+      * the sketch-for-sort swap the profile family makes with HLL
+      * (`approxDistinct`). KLL replaced the GK `approx_percentile` arm
+      * in round 14: GK's per-update constant at oracle-band accuracy
+      * made it SLOWER than the exact arm it relieves (32.0 s vs 25.8 s
+      * at the x100 probe); KLL's update is a buffered insert with
+      * amortized compaction. */
+    case object Sketch extends Arm
+    /** The sketch arm for LOW-CARDINALITY value columns (integer-valued
+      * counts and quantities): a codegen'd (group, value) → count hash
+      * aggregate collapses the corpus first, and the sketch absorbs the
+      * counts as weights — O(distinct values) sketch updates instead of
+      * O(rows), with the same rank-error bounds (and in practice exact:
+      * distinct values ≪ k keeps the sketch out of its sampling
+      * regime). On a high-cardinality column the pre-aggregation would
+      * shuffle every row for nothing. */
+    case object WeightedSketch extends Arm
+    /** The arm picked from measured size: [[Sketch]] when [[useApprox]]
+      * finds a group past `perGroupBound` rows, [[WeightedSketch]] when
+      * [[lowCardinality]] also proves the value column low-cardinality,
+      * else [[Exact]]. On a stats-bearing catalog table every decision
+      * is zero-job. */
+    final case class Auto(perGroupBound: Long = 1000000L) extends Arm
+  }
+
   /** Per-group winsorization (outlier clipping): clamp `valueCol` to
-    * its group's [`lo`, `hi`] interpolated percentiles — the standard
+    * its group's [`lo`, `hi`] percentiles — the standard
     * robust-statistics pass before training on heavy-tailed numerics.
     * Adds `<valueCol>_w` (the clamped value) plus the `_lo`/`_hi`
-    * bounds. Two-pass by necessity (exact percentiles need the full
-    * group): one aggregation for the bounds, then a join back sized by
-    * the optimizer — the bounds table has one row per group, so AQE
-    * broadcasts it whenever the group count is sane and the corpus
-    * streams without a shuffle.
-    *
-    * Exact-vs-approx dispatch: `approx = false` (default) computes
-    * exact interpolated percentiles — a sort-based aggregate whose
-    * per-group cost grows with group size; that is the oracle-matched
-    * arm. `approx = true` is the 100 TB arm: bounds come from ONE
-    * KLL quantile sketch per group ([[graft.functions.KllSketchAgg]],
-    * rank error ~0.5% at `sketchK` = 800, shrinking ~linearly in k),
-    * which partial-aggregates map-side and shuffles only merged
-    * sketches — the same sketch-for-sort swap the profile family
-    * makes with HLL (`approxDistinct`). KLL replaced the former GK
-    * `approx_percentile` arm in round 14: GK's per-update constant at
-    * oracle-band accuracy made the sketch arm SLOWER than the exact
-    * arm it relieves (32.0 s vs 25.8 s at the x100 probe); KLL's
-    * update is a cheap buffered insert with amortized compaction.
+    * bounds. Two-pass by necessity (a percentile needs the full
+    * group): one aggregation serves both bounds, then a broadcast join
+    * back ([[joinBounds]]) lets the corpus stream without a shuffle.
     * The clamped output's INVARIANT (every `<valueCol>_w` lies inside
-    * [_lo, _hi]) is independent of which arm produced the bounds; only
-    * the bounds move, by at most the sketch's rank error. */
+    * [_lo, _hi]) holds under every [[Arm]]. */
   def winsorize(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                lo: Double, hi: Double, approx: Boolean = false,
-                sketchK: Int = 800,
-                preAggregate: Boolean = false): DataFrame = {
+                lo: Double, hi: Double, arm: Arm = Arm.Exact): DataFrame = {
     require(0 <= lo && lo <= hi && hi <= 1, s"need 0 <= lo <= hi <= 1, got $lo/$hi")
-    val bounds =
-      if (approx && preAggregate)
-        // low-cardinality opt-in (r15, see [[madOutliers]]): collapse
-        // to (group, value) counts first, sketch the counts as weights
-        df.groupBy(groupCols.map(col) :+
-            col(valueCol).cast("double").as("_pv"): _*)
-          .agg(count(lit(1)).as("_pw"))
-          .groupBy(groupCols.map(col): _*)
-          .agg(graft.functions.KllSketchWeightedAgg(
-            col("_pv"), col("_pw"), sketchK).as("_sk"))
-          .select(groupCols.map(col) :+
-            graft.functions.KllQuantileEstimate(col("_sk"), lit(lo)).as("_lo") :+
-            graft.functions.KllQuantileEstimate(col("_sk"), lit(hi)).as("_hi"): _*)
-      else if (approx)
-        // one sketch build per group, BOTH bounds read from it — the
-        // two-quantile shape must never pay two aggregation passes
-        df.groupBy(groupCols.map(col): _*)
-          .agg(graft.functions.KllSketchAgg(
-            col(valueCol).cast("double"), sketchK).as("_sk"))
-          .select(groupCols.map(col) :+
-            graft.functions.KllQuantileEstimate(col("_sk"), lit(lo)).as("_lo") :+
-            graft.functions.KllQuantileEstimate(col("_sk"), lit(hi)).as("_hi"): _*)
-      else
-        // one percentile buffer per group serves both bounds
-        df.groupBy(groupCols.map(col): _*)
-          .agg(percentile(col(valueCol), array(lit(lo), lit(hi))).as("_b"))
-          .select(groupCols.map(col) :+
-            col("_b")(0).as("_lo") :+ col("_b")(1).as("_hi"): _*)
+    val (a, in, v) = prepare(df, groupCols, valueCol, arm)
+    val (t, q) = quantiles(in, groupCols, v, Seq(lo, hi), a)
+    val bounds = t.select(groupCols.map(col) :+ q(0).as("_lo") :+ q(1).as("_hi"): _*)
     joinBounds(df, bounds, groupCols)
       .withColumn(valueCol + "_w",
         least(greatest(col(valueCol), col("_lo")), col("_hi")))
+  }
+
+  /** `arm` resolved against `df`, with the input [[quantiles]] reads
+    * for it: the rows and `valueCol`, or — for the weighted sketch — the
+    * (group, value) → count table, whose value is `_pv` and whose
+    * weight is `_pw`. */
+  private def prepare(df: DataFrame, groupCols: Seq[String], valueCol: String,
+                      arm: Arm): (Arm, DataFrame, Column) = {
+    val resolved = arm match {
+      case Arm.Auto(bound) =>
+        if (!useApprox(df, groupCols, bound)) Arm.Exact
+        else if (lowCardinality(df, valueCol)) Arm.WeightedSketch
+        else Arm.Sketch
+      case other => other
+    }
+    if (resolved == Arm.WeightedSketch)
+      (resolved, df.groupBy(groupCols.map(col) :+
+        col(valueCol).cast("double").as("_pv"): _*).agg(count(lit(1)).as("_pw")),
+        col("_pv"))
+    else (resolved, df, col(valueCol))
+  }
+
+  /** The one per-group percentile site: one row per group of
+    * `groupCols`, and over those rows the array of the quantiles of
+    * `value` at `probs`. `arm` is resolved ([[prepare]]); the weighted
+    * sketch weighs each row of `in` by its `_pw`. Every arm reads all
+    * `probs` from ONE buffer or sketch per group — a multi-quantile
+    * shape must never pay one aggregation pass per quantile. The array
+    * comes back as an expression over the returned rows, not as a
+    * stored column, so that a caller's `q(i)` folds into the one
+    * estimate it reads (a stored array read twice would stay a
+    * projection of its own in the plan). */
+  private def quantiles(in: DataFrame, groupCols: Seq[String], value: Column,
+                        probs: Seq[Double], arm: Arm): (DataFrame, Column) = {
+    val groups = in.groupBy(groupCols.map(col): _*)
+    def sketched(sketch: Column) = (groups.agg(sketch.as("_sk")),
+      array(probs.map(p => graft.functions.KllQuantileEstimate(col("_sk"), lit(p))): _*))
+    arm match {
+      case Arm.Exact =>
+        // one percentile buffer per group serves every probability
+        (groups.agg((probs match {
+          case Seq(p) => array(percentile(value, lit(p)))
+          case _      => percentile(value, array(probs.map(lit): _*))
+        }).as("_b")), col("_b"))
+      case Arm.Sketch => sketched(graft.functions.KllSketchAgg(value.cast("double")))
+      case Arm.WeightedSketch => sketched(graft.functions.KllSketchAgg(value, col("_pw")))
+      case auto: Arm.Auto => throw new IllegalArgumentException(s"unresolved arm $auto")
+    }
   }
 
   /** Exact-vs-sketch dispatch from MEASURED data size (round 13 — the
@@ -228,39 +268,9 @@ object Profile {
     (proven, proven + 2 * h.height)
   }
 
-  /** [[winsorize]] with the arm picked by [[useApprox]]: exact bounds
-    * while groups are small enough to buffer, KLL-sketch bounds beyond
-    * `perGroupBound` rows per group. Same output schema either way. */
-  def winsorizeAuto(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                    lo: Double, hi: Double, sketchK: Int = 800,
-                    perGroupBound: Long = 1000000L,
-                    preAggregate: Boolean = false): DataFrame = {
-    val approx = useApprox(df, groupCols, perGroupBound)
-    winsorize(df, valueCol, groupCols, lo, hi,
-      approx = approx, sketchK = sketchK,
-      preAggregate = preAggregate || (approx && lowCardinality(df, valueCol)))
-  }
-
-  /** [[madOutliers]] with the arm picked by [[useApprox]] — the same
-    * size-driven dispatch as [[winsorizeAuto]] (and the policy behind
-    * the q_a8_percentiles / _approx twin pair). Both Auto faces also
-    * pick the sketch arm's EXECUTION STRATEGY from statistics (r15):
-    * when CBO column stats prove the value column low-cardinality
-    * ([[lowCardinality]] — zero jobs), the weighted pre-aggregated
-    * path is taken without the caller having to know the data. */
-  def madOutliersAuto(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                      k: Double = 3.0, sketchK: Int = 800,
-                      perGroupBound: Long = 1000000L,
-                      preAggregate: Boolean = false): DataFrame = {
-    val approx = useApprox(df, groupCols, perGroupBound)
-    madOutliers(df, valueCol, groupCols, k,
-      approx = approx, sketchK = sketchK,
-      preAggregate = preAggregate || (approx && lowCardinality(df, valueCol)))
-  }
-
   /** True when CBO column statistics PROVE `c` has at most `maxValues`
-    * distinct values — the zero-job evidence the Auto faces use to
-    * flip the sketch arm's weighted pre-aggregation on (the
+    * distinct values — the zero-job evidence [[Arm.Auto]] uses to
+    * pick the weighted sketch arm (the
     * (group, value) → count table stays tiny and the sketch does
     * O(values) weighted updates instead of O(rows)). Absent stats it
     * answers false: the pre-aggregation on a high-cardinality column
@@ -353,85 +363,42 @@ object Profile {
     * op (−, abs, ·k, >) is then IEEE-exact, so the outlier decision
     * itself carries no rounding haze.
     *
-    * `approx = true` swaps both medians for the KLL quantile sketch
-    * ([[graft.functions.KllSketchAgg]], rank error ~0.5% at `sketchK`
-    * = 800) — the 100 TB arm, same dispatch as [[winsorize]]: the
-    * exact `median` buffers each group's values to select the middle
-    * (the round-12 x100 probe reads 30.6/100 on it — sub-linear but
-    * the heaviest flat-output probe), while the sketch
-    * partial-aggregates map-side and shuffles fixed-size state per
-    * group. KLL replaced the GK `approx_percentile` arm in round 14:
-    * GK at band accuracy cost MORE per update than the exact arm's
-    * buffer-and-select (x100: 32.0 s sketch vs 25.8 s exact); KLL's
-    * O(1)-amortized update makes the sketch arm cheaper on time AND
-    * memory, which is what `useApprox` dispatches for. The exact arm
-    * stays the oracle ground truth; the fence decision still uses the
-    * same IEEE-exact ops on whichever bounds arm produced them. */
+    * The sketch arms are the 100 TB answer to the exact `median`,
+    * which buffers each group's values to select the middle (the
+    * round-12 x100 probe reads 30.6/100 on it — the heaviest
+    * flat-output probe). The fence decision uses the same IEEE-exact
+    * ops whichever [[Arm]] produced the medians.
+    *
+    * The weighted sketch arm also ELIMINATES the second corpus pass:
+    * the residual |v − med| distribution is a pure function of the
+    * (group, value, count) rows (≤ 2·|values| distinct deviations,
+    * counts carried over), so the MAD comes from the tiny counts table
+    * — two corpus scans (counts build + final fence pass) instead of
+    * three. localCheckpoint materializes that table once so the med
+    * and mad steps don't re-run the corpus aggregate — LAZILY (r16):
+    * building the DataFrame must launch no job. Checkpointing truncates
+    * lineage into executor-local storage, so a lost executor loses
+    * those blocks — accepted because the table is distinct-values-sized
+    * and recomputing it is the corpus scan this arm exists to avoid. */
   def madOutliers(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                  k: Double = 3.0, approx: Boolean = false,
-                  sketchK: Int = 800,
-                  preAggregate: Boolean = false): DataFrame = {
+                  k: Double = 3.0, arm: Arm = Arm.Exact): DataFrame = {
     require(k > 0, s"need k > 0, got $k")
-    // preAggregate (r15, sketch arm only): for LOW-CARDINALITY value
-    // columns (integer-valued counts/quantities — the very columns
-    // this operator's scaladoc recommends), collapse the corpus to a
-    // codegen'd (group, value) → count hash aggregate first and feed
-    // the counts to the sketch as WEIGHTS — O(distinct values) sketch
-    // updates instead of O(rows), same rank-error bounds, same k (and
-    // in practice EXACT: distinct values ≪ k keeps the weighted sketch
-    // out of its sampling regime at any corpus size). The caller opts
-    // in because cardinality is a data fact the schema doesn't carry
-    // (l_quantity is a physical double); on a high-cardinality column
-    // the pre-aggregation would shuffle every row and help nothing.
-    //
-    // The counts table also ELIMINATES the second corpus pass: the
-    // residual |v − med| distribution is a pure function of the
-    // (group, value, count) rows (≤ 2·|values| distinct deviations,
-    // counts carried over), so the MAD is computed from the tiny table
-    // — the corpus is scanned twice total (counts build + final fence
-    // pass) instead of the three passes the exact and plain-sketch
-    // arms pay. localCheckpoint materializes the tiny table once so
-    // the med and mad derivations don't re-run the corpus aggregate —
-    // LAZILY (r16): constructing the DataFrame must stay side-effect
-    // free (an eager checkpoint would run the full corpus aggregate
-    // at plan-build time). Tradeoff: checkpointing truncates lineage
-    // into executor-local storage, so a lost executor loses those
-    // blocks unrecoverably — accepted here because the counts table
-    // is distinct-values-sized (the preAggregate precondition) and
-    // recomputing it is the corpus scan this path exists to avoid.
-    if (approx && preAggregate) {
-      val g = groupCols.map(col)
-      val counts = df
-        .groupBy(g :+ col(valueCol).cast("double").as("_pv"): _*)
-        .agg(count(lit(1)).as("_pw"))
-        .localCheckpoint(eager = false)
-      def wmed(in: DataFrame, v: Column, out: String): DataFrame =
-        in.groupBy(g: _*).agg(graft.functions.KllQuantileEstimate(
-          graft.functions.KllSketchWeightedAgg(v, col("_pw"), sketchK),
-          lit(0.5)).as(out))
-      val medT = wmed(counts, col("_pv"), "_med")
-      val madT = wmed(
-        joinBounds(counts, medT, groupCols)
-          .withColumn("_pd", abs(col("_pv") - col("_med"))),
-        col("_pd"), "_mad")
-      val withMed = joinBounds(df, medT, groupCols)
-        .withColumn("_absdev", abs(col(valueCol) - col("_med")))
-      joinBounds(withMed, madT, groupCols)
-        .withColumn("is_outlier", col("_absdev") > lit(k) * col("_mad"))
-    } else {
-      def med(c: Column): Column =
-        if (approx) graft.functions.KllQuantileEstimate(
-          graft.functions.KllSketchAgg(c.cast("double"), sketchK), lit(0.5))
-        else median(c)
-      val medT = df.groupBy(groupCols.map(col): _*)
-        .agg(med(col(valueCol)).as("_med"))
-      val withMed = joinBounds(df, medT, groupCols)
-        .withColumn("_absdev", abs(col(valueCol) - col("_med")))
-      val mad = withMed.groupBy(groupCols.map(col): _*)
-        .agg(med(col("_absdev")).as("_mad"))
-      joinBounds(withMed, mad, groupCols)
-        .withColumn("is_outlier", col("_absdev") > lit(k) * col("_mad"))
+    val (a, prepared, v) = prepare(df, groupCols, valueCol, arm)
+    val weighted = a == Arm.WeightedSketch
+    val in = if (weighted) prepared.localCheckpoint(eager = false) else prepared
+    def med(rows: DataFrame, c: Column, out: String): DataFrame = {
+      val (t, q) = quantiles(rows, groupCols, c, Seq(0.5), a)
+      t.select(groupCols.map(col) :+ q(0).as(out): _*)
     }
+    val medT = med(in, v, "_med")
+    val withMed = joinBounds(df, medT, groupCols)
+      .withColumn("_absdev", abs(col(valueCol) - col("_med")))
+    val mad =
+      if (weighted) med(joinBounds(in, medT, groupCols)
+        .withColumn("_pd", abs(col("_pv") - col("_med"))), col("_pd"), "_mad")
+      else med(withMed, col("_absdev"), "_mad")
+    joinBounds(withMed, mad, groupCols)
+      .withColumn("is_outlier", col("_absdev") > lit(k) * col("_mad"))
   }
 
   /** Per-group second-moment statistics — sample variance/stddev of
@@ -488,60 +455,23 @@ object Profile {
     * Boundaries come from one aggregation (`bins`−1 interpolated
     * percentiles), broadcast back over the corpus as a literal array —
     * the stream assigns bins with a fold over that array, no
-    * per-row join or window. `approx = true` is the 100 TB arm: ALL
-    * `bins`−1 boundaries read from ONE KLL sketch (map-side partial
-    * merge instead of a per-group value buffer — same r14 port as
-    * [[madOutliers]]/[[winsorize]], same rank-error contract), same
-    * output shape. Note for oracle parity: boundary COMPARISONS
-    * (v > bᵢ) are only engine-exact when interpolated boundaries are
-    * (integer-valued columns — the q_a2_median argument).
-    * `preAggregate` (r15, sketch arm only): same low-cardinality
-    * opt-in as [[madOutliers]] — collapse to per-value counts first,
-    * sketch the counts as weighted updates. */
+    * per-row join or window. Every [[Arm]] yields the same output
+    * shape; [[Arm.Auto]] bounds the table size (one global group).
+    * Note for oracle parity: boundary COMPARISONS (v > bᵢ) are only
+    * engine-exact when interpolated boundaries are (integer-valued
+    * columns — the q_a2_median argument). */
   def equidepth(df: DataFrame, valueCol: String, bins: Int,
-                approx: Boolean = false, sketchK: Int = 800,
-                preAggregate: Boolean = false): DataFrame = {
+                arm: Arm = Arm.Exact): DataFrame = {
     require(bins >= 2, s"need bins >= 2, got $bins")
-    val qs = (1 until bins).map(i => i.toDouble / bins).mkString(", ")
-    val bounds =
-      if (approx && preAggregate)
-        df.groupBy(col(valueCol).cast("double").as("_pv"))
-          .agg(count(lit(1)).as("_pw"))
-          .agg(graft.functions.KllSketchWeightedAgg(
-            col("_pv"), col("_pw"), sketchK).as("_sk"))
-          .select(array((1 until bins).map(i =>
-            graft.functions.KllQuantileEstimate(
-              col("_sk"), lit(i.toDouble / bins))): _*).as("_bs"))
-      else if (approx)
-        df.agg(graft.functions.KllSketchAgg(
-            col(valueCol).cast("double"), sketchK).as("_sk"))
-          .select(array((1 until bins).map(i =>
-            graft.functions.KllQuantileEstimate(
-              col("_sk"), lit(i.toDouble / bins))): _*).as("_bs"))
-      else
-        df.agg(expr(s"percentile($valueCol, array($qs))").as("_bs"))
+    val (a, in, v) = prepare(df, Nil, valueCol, arm)
+    val (t, q) = quantiles(in, Nil, v, (1 until bins).map(_.toDouble / bins), a)
+    val bounds = t.select(q.as("_bs"))
     df.crossJoin(broadcast(bounds))
       .withColumn("bin", aggregate(col("_bs"), lit(0),
         (acc, b) => acc + when(col(valueCol) > b, 1).otherwise(0)))
       .groupBy("bin")
       .agg(count(lit(1)).as("n"),
         min(col(valueCol)).as("lo"), max(col(valueCol)).as("hi"))
-  }
-
-  /** [[equidepth]] with the arm picked by [[useApprox]] — the global
-    * (ungrouped) member of the Auto family (r16, completing
-    * [[winsorizeAuto]]/[[madOutliersAuto]]): the exact percentile
-    * buffers EVERY value in one reducer, so the bound is against the
-    * table size (one global group); the sketch arm's weighted
-    * pre-aggregation strategy comes from [[lowCardinality]] exactly as
-    * in the grouped faces. On a stats-bearing catalog table every
-    * decision is zero-job. */
-  def equidepthAuto(df: DataFrame, valueCol: String, bins: Int,
-                    sketchK: Int = 800, perGroupBound: Long = 1000000L,
-                    preAggregate: Boolean = false): DataFrame = {
-    val approx = useApprox(df, Nil, perGroupBound)
-    equidepth(df, valueCol, bins, approx = approx, sketchK = sketchK,
-      preAggregate = preAggregate || (approx && lowCardinality(df, valueCol)))
   }
 
   /** Join-key skew diagnostic: the `topK` heaviest values of `keyCol`

@@ -92,18 +92,17 @@ object Sketches {
   /** Per-slice KLL quantile partials ([[graft.functions.KllSketchAgg]])
     * — the percentile leg of the state-table family: p50/p90/p99 of
     * any rollup from persisted state rows, raw rows reduced once. */
-  def kllPartials(df: DataFrame, sliceCols: Seq[String], valCol: String,
-                  k: Int = 800): DataFrame =
+  def kllPartials(df: DataFrame, sliceCols: Seq[String], valCol: String): DataFrame =
     df.groupBy(sliceCols.map(col): _*).agg(
       count(lit(1)).as("n"),
-      graft.functions.KllSketchAgg(col(valCol), k).as("q_sketch"))
+      graft.functions.KllSketchAgg(col(valCol)).as("q_sketch"))
 
   /** Merge KLL partials up to coarser `keyCols`; the sketch column
     * stays a sketch so further rollups keep merging. */
-  def kllMerge(partials: DataFrame, keyCols: Seq[String], k: Int = 800): DataFrame =
+  def kllMerge(partials: DataFrame, keyCols: Seq[String]): DataFrame =
     partials.groupBy(keyCols.map(col): _*).agg(
       sum(col("n")).as("n"),
-      graft.functions.KllSketchAgg(col("q_sketch"), k).as("q_sketch"))
+      graft.functions.KllSketchAgg(col("q_sketch")).as("q_sketch"))
 
   /** Quantile estimates at `ranks` from a (possibly merged) KLL
     * partial table: one `q<rank>` column per requested rank. */
@@ -174,7 +173,7 @@ object Sketches {
     * merged states can still intersect/diff ([[distinctOverlap]],
     * [[thetaNovelty]]). Output size ∝ |keys|, one shuffle. */
   def aggStateFull(df: DataFrame, keyCols: Seq[String], valCol: String,
-                   ndCol: String, lgK: Int = 12, kllK: Int = 800,
+                   ndCol: String, lgK: Int = 12,
                    withTheta: Boolean = true): DataFrame = {
     val base = Seq(
       count(lit(1)).as("n"),
@@ -182,8 +181,7 @@ object Sketches {
       min(col(valCol)).as("min_v"),
       max(col(valCol)).as("max_v"),
       hll_sketch_agg(col(ndCol), lgK).as("nd_sketch"),
-      graft.functions.KllSketchAgg(col(valCol).cast("double"), kllK)
-        .as("q_sketch"))
+      graft.functions.KllSketchAgg(col(valCol).cast("double")).as("q_sketch"))
     val aggs = if (withTheta)
       base :+ graft.functions.ThetaSketchAgg(col(ndCol), lgK).as("nd_theta")
     else base
@@ -195,14 +193,14 @@ object Sketches {
     * extremes lattice, every sketch unions via its binary merge mode.
     * Associative and commutative like [[mergeStates]]. */
   def mergeStatesFull(states: DataFrame, keyCols: Seq[String],
-                      lgK: Int = 12, kllK: Int = 800): DataFrame = {
+                      lgK: Int = 12): DataFrame = {
     val base = Seq(
       sum(col("n")).as("n"),
       sum(col("sum_v")).as("sum_v"),
       min(col("min_v")).as("min_v"),
       max(col("max_v")).as("max_v"),
       hll_union_agg(col("nd_sketch")).as("nd_sketch"),
-      graft.functions.KllSketchAgg(col("q_sketch"), kllK).as("q_sketch"))
+      graft.functions.KllSketchAgg(col("q_sketch")).as("q_sketch"))
     val aggs = if (states.columns.contains("nd_theta"))
       base :+ graft.functions.ThetaSketchAgg(col("nd_theta"), lgK).as("nd_theta")
     else base
@@ -213,11 +211,11 @@ object Sketches {
     * nightly fold, as [[updateState]] is for the HLL-only shape. */
   def updateStateFull(state: DataFrame, batch: DataFrame,
                       keyCols: Seq[String], valCol: String, ndCol: String,
-                      lgK: Int = 12, kllK: Int = 800): DataFrame =
+                      lgK: Int = 12): DataFrame =
     mergeStatesFull(
       state.unionByName(aggStateFull(batch, keyCols, valCol, ndCol, lgK,
-        kllK, withTheta = state.columns.contains("nd_theta"))),
-      keyCols, lgK, kllK)
+        withTheta = state.columns.contains("nd_theta"))),
+      keyCols, lgK)
 
   /** Render a FULL state table: decimal sum to double, HLL to its
     * distinct estimate, KLL to one `q<rank>` column per requested

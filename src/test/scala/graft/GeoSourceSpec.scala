@@ -260,9 +260,10 @@ class GeoSourceSpec extends SparkSpec {
     assert(e1.getMessage.contains("no_existe") && e1.getMessage.contains("hoja_real"))
     val bad = s"${dir.getPath}/not_a.shp"
     Files.write(Paths.get(bad), "definitely not a shapefile".getBytes)
-    val e2 = intercept[Exception] {
+    val e2 = QuietLogs("org.apache.spark.executor.Executor",
+        "org.apache.spark.scheduler.TaskSetManager")(intercept[Exception] {
       spark.read.format("shp").load(bad).collect()
-    }
+    })
     assert(e2.getMessage.toLowerCase.contains("shapefile") ||
       Option(e2.getCause).exists(_.getMessage.toLowerCase.contains("shapefile")))
   }

@@ -967,7 +967,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("Profile.madOutliers approx arm ≡ exact arm where the sketch is exact (n < k)") {
-    // sketchK 800 >> n: the KLL sketch retains every value, so the
+    // k = 800 >> n: the KLL sketch retains every value, so the
     // approx arm must reproduce the exact arm's fences and decisions
     // bit-for-bit on this data — the dispatch equivalence check (the
     // 100 TB arm diverges only by bounded sketch error at scale)
@@ -980,7 +980,8 @@ class OperatorSpec extends SparkSpec {
     val exactFlags = Profile.madOutliers(df, "x", Seq("grp"), k = 3.0)
       .select("grp", "x", "is_outlier").orderBy("grp", "x")
       .collect().map(_.toString).toSeq
-    val approxFlags = Profile.madOutliers(df, "x", Seq("grp"), k = 3.0, approx = true)
+    val approxFlags = Profile.madOutliers(df, "x", Seq("grp"), k = 3.0,
+      arm = Profile.Arm.Sketch)
       .select("grp", "x", "is_outlier").orderBy("grp", "x")
       .collect().map(_.toString).toSeq
     assert(approxFlags === exactFlags)
@@ -1209,9 +1210,10 @@ class OperatorSpec extends SparkSpec {
     val offGrid = Seq(("a", 0L, 1.0), ("a", 15L, 9.0), ("a", 20L, 2.0)).toDF("g", "t", "v")
     val lenient = Temporal.densify(offGrid, Seq("g"), "t", step = 10L)
     assert(lenient.filter(col("v") === 9.0).count() === 0)
-    val e = intercept[Exception] {
+    val e = QuietLogs("org.apache.spark.executor.Executor",
+        "org.apache.spark.scheduler.TaskSetManager")(intercept[Exception] {
       Temporal.densify(offGrid, Seq("g"), "t", step = 10L, strict = true).collect()
-    }
+    })
     assert(e.getMessage.contains("off-grid") ||
       Option(e.getCause).exists(_.getMessage.contains("off-grid")), e.toString)
     // on-grid input: strict output is identical to the default

@@ -469,8 +469,8 @@ class ScaleOpsSpec extends SparkSpec {
       df.select("l_orderkey", "l_linenumber", "l_quantity",
           "_med", "_mad", "is_outlier")
         .collect().map(_.toString).sorted.toSeq
-    val viaAuto = rows(Profile.madOutliersAuto(li, "l_quantity",
-      Seq("l_returnflag"), k = 1.5, perGroupBound = bound))
+    val viaAuto = rows(Profile.madOutliers(li, "l_quantity",
+      Seq("l_returnflag"), k = 1.5, arm = Profile.Arm.Auto(bound)))
     val viaExact = rows(Profile.madOutliers(li, "l_quantity",
       Seq("l_returnflag"), k = 1.5))
     assert(viaAuto === viaExact)
@@ -478,14 +478,14 @@ class ScaleOpsSpec extends SparkSpec {
     // carries the KLL sketch aggregate (the r14 port — GK's per-update
     // constant made the sketch arm slower than exact), and builds the
     // sketch ONCE (both winsorize bounds read the same agg output)
-    val bigPlan = Profile.winsorizeAuto(x10, "l_extendedprice",
-      Seq("l_returnflag"), lo = 0.05, hi = 0.95, perGroupBound = bound)
+    val bigPlan = Profile.winsorize(x10, "l_extendedprice",
+      Seq("l_returnflag"), lo = 0.05, hi = 0.95, arm = Profile.Arm.Auto(bound))
       .queryExecution.optimizedPlan.toString
     assert(bigPlan.contains("kll_sketch_agg"), bigPlan.take(1500))
     assert("kll_sketch_agg".r.findAllIn(bigPlan).size === 1, bigPlan.take(1500))
     assert(!bigPlan.contains("percentile_approx"), bigPlan.take(1500))
-    val smallPlan = Profile.winsorizeAuto(li, "l_extendedprice",
-      Seq("l_returnflag"), lo = 0.05, hi = 0.95, perGroupBound = bound)
+    val smallPlan = Profile.winsorize(li, "l_extendedprice",
+      Seq("l_returnflag"), lo = 0.05, hi = 0.95, arm = Profile.Arm.Auto(bound))
       .queryExecution.optimizedPlan.toString
     assert(!smallPlan.contains("kll_sketch_agg"), smallPlan.take(1500))
   }
@@ -627,8 +627,8 @@ class ScaleOpsSpec extends SparkSpec {
       // the Auto face then flips the weighted path on by itself (the
       // arm's construction is allowed to run its counts checkpoint —
       // that is the operator working, not the dispatch probing)
-      val autoPlan = Profile.madOutliersAuto(t, "j", Seq("k"),
-          k = 1.5, perGroupBound = 10000L)
+      val autoPlan = Profile.madOutliers(t, "j", Seq("k"),
+          k = 1.5, arm = Profile.Arm.Auto(10000L))
         .queryExecution.optimizedPlan.toString
       assert(autoPlan.contains("kll_sketch_weighted_agg"), autoPlan.take(1200))
     } finally {
@@ -664,19 +664,19 @@ class ScaleOpsSpec extends SparkSpec {
       s"contract-corpus stats dispatch ran ${jobs() - before} jobs")
     // and the Auto face composes both: sketch arm + weighted preAgg,
     // picked from stats alone on the benched table
-    val autoPlan = Profile.madOutliersAuto(t, "l_quantity", Seq("l_returnflag"),
-        k = 1.5, perGroupBound = 2000L)
+    val autoPlan = Profile.madOutliers(t, "l_quantity", Seq("l_returnflag"),
+        k = 1.5, arm = Profile.Arm.Auto(2000L))
       .queryExecution.optimizedPlan.toString
     assert(autoPlan.contains("kll_sketch_weighted_agg"), autoPlan.take(1200))
     // the ungrouped face dispatches on table size and picks the same
     // weighted strategy (r16 — the Auto family's third member)
-    val edPlan = Profile.equidepthAuto(t, "l_quantity", bins = 4,
-        perGroupBound = 2000L)
+    val edPlan = Profile.equidepth(t, "l_quantity", bins = 4,
+        arm = Profile.Arm.Auto(2000L))
       .queryExecution.optimizedPlan.toString
     assert(edPlan.contains("kll_sketch_weighted_agg"), edPlan.take(1200))
     // and under a bound the table can't exceed, the exact arm
-    assert(!Profile.equidepthAuto(t, "l_quantity", bins = 4,
-        perGroupBound = 100000L)
+    assert(!Profile.equidepth(t, "l_quantity", bins = 4,
+        arm = Profile.Arm.Auto(100000L))
       .queryExecution.optimizedPlan.toString.contains("kll_sketch"))
     // a second call reuses the session's catalog entry (no re-ANALYZE)
     assert(Tables.ensureStats(spark, "/root/testdata/sf0.01", "lineitem",

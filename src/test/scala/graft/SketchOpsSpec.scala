@@ -23,7 +23,7 @@ class SketchOpsSpec extends SparkSpec {
     // at a size far under k the KLL arm retains every value: its
     // order-statistic boundaries (2, 4, 6) differ from the exact
     // interpolated ones (2.75, 4.5, 6.25) but induce the same bins
-    val approx = Profile.equidepth(df, "v", bins = 4, approx = true)
+    val approx = Profile.equidepth(df, "v", bins = 4, arm = Profile.Arm.Sketch)
       .orderBy("bin").as[(Int, Long, Double, Double)].collect()
     assert(approx.toSeq === got.toSeq)
   }
@@ -161,7 +161,7 @@ class SketchOpsSpec extends SparkSpec {
   }
 
   test("weighted KLL build equals the plain sketch's answers on the same multiset") {
-    import graft.functions.{KllQuantileEstimate, KllSketchAgg, KllSketchWeightedAgg}
+    import graft.functions.{KllQuantileEstimate, KllSketchAgg}
     // multiset: value i (1..50) appears i·10 times (12,750 rows). The
     // weighted arm sees ONE row per value with its count as weight —
     // 50 retained items at k=800, so binary weight decomposition makes
@@ -176,9 +176,9 @@ class SketchOpsSpec extends SparkSpec {
     }
     val wdf = counts.toDF("v", "w")
     val got = wdf.agg(
-        KllQuantileEstimate(KllSketchWeightedAgg(col("v"), col("w"), 800),
+        KllQuantileEstimate(KllSketchAgg(col("v"), col("w")),
           lit(0.5)).as("q50"),
-        KllQuantileEstimate(KllSketchWeightedAgg(col("v"), col("w"), 800),
+        KllQuantileEstimate(KllSketchAgg(col("v"), col("w")),
           lit(0.9)).as("q90"))
       .as[(Double, Double)].collect().head
     assert(got._1 === exactAtRank(0.5), s"weighted median ${got._1}")
@@ -189,18 +189,19 @@ class SketchOpsSpec extends SparkSpec {
       Seq((None, Some(99999L)), (Some(9999.0), None)))
       .toDF("v", "w")
     val gotN = withNulls.agg(
-        KllQuantileEstimate(KllSketchWeightedAgg(col("v"), col("w"), 800),
+        KllQuantileEstimate(KllSketchAgg(col("v"), col("w")),
           lit(0.5)))
       .as[Double].collect().head
     assert(gotN === exactAtRank(0.5), s"null-skipping weighted median $gotN")
     // weight < 1 is a caller bug and must surface as the operator's
     // own named error, not an opaque SketchesArgumentException from
     // deep inside an executor task
-    val badEx = intercept[Throwable] {
+    val badEx = QuietLogs("org.apache.spark.executor.Executor",
+        "org.apache.spark.scheduler.TaskSetManager")(intercept[Throwable] {
       Seq((1.0, 0L)).toDF("v", "w")
-        .agg(KllQuantileEstimate(KllSketchWeightedAgg(col("v"), col("w"), 800),
+        .agg(KllQuantileEstimate(KllSketchAgg(col("v"), col("w")),
           lit(0.5))).collect()
-    }
+    })
     val msgs = Iterator.iterate(badEx)(_.getCause).takeWhile(_ != null)
       .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
     assert(msgs.contains("kll_sketch_weighted_agg") && msgs.contains(">= 1"), msgs)
@@ -208,10 +209,52 @@ class SketchOpsSpec extends SparkSpec {
     // identically after a binary-mode merge (the map-side-combine path)
     val merged = wdf.repartition(7, col("v"))
       .groupBy(pmod(col("v").cast("int"), lit(3)).as("shard"))
-      .agg(KllSketchWeightedAgg(col("v"), col("w"), 800).as("sk"))
-      .agg(KllQuantileEstimate(KllSketchAgg(col("sk"), 800), lit(0.5)))
+      .agg(KllSketchAgg(col("v"), col("w")).as("sk"))
+      .agg(KllQuantileEstimate(KllSketchAgg(col("sk")), lit(0.5)))
       .as[Double].collect().head
     assert(merged === exactAtRank(0.5), s"merged weighted median $merged")
+  }
+
+  test("KLL unit weights: all-ones build is byte-identical, (value, count) build answers exact ranks") {
+    import graft.functions.KllSketchAgg
+    import org.apache.datasketches.kll.KllDoublesSketch
+    import org.apache.datasketches.memory.Memory
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    // rows: a value, a unit weight and a count, each possibly null; few
+    // distinct values, so duplicates are the rule. At most 100 rows of
+    // counts ≤ 50 keep every build under k retained items (a weight
+    // occupies one item per set bit), where KLL is exact — above k its
+    // compaction draws from an unseeded random source, so no byte
+    // identity holds there.
+    val rowsGen = Gen.choose(0, 100).flatMap(Gen.listOfN(_, Gen.zip(
+      Gen.option(Gen.choose(-10, 10).map(_.toDouble)),
+      Gen.option(Gen.const(1L)),
+      Gen.option(Gen.choose(1L, 50L)))))
+    val ranks = Seq(0.05, 0.25, 0.5, 0.75, 0.95)
+    def sketch(bytes: Array[Byte]) = KllDoublesSketch.heapify(Memory.wrap(bytes))
+    val prop = Prop.forAllNoShrink(rowsGen, Gen.choose(1, 4)) { (rows, parts) =>
+      val got = rows.toDF("v", "one", "n").repartition(parts).agg(
+          KllSketchAgg(when(col("one").isNotNull, col("v"))).as("plain"),
+          KllSketchAgg(col("v"), col("one")).as("ones"),
+          KllSketchAgg(col("v"), col("n")).as("counted"))
+        .as[(Array[Byte], Array[Byte], Array[Byte])].collect().head
+      // the expanded multiset and its INCLUSIVE order statistic: the
+      // smallest value whose rank reaches p (DataSketches rounds p·N to
+      // 7 decimals on small N before the ceiling)
+      val expanded = rows.collect { case (Some(v), _, Some(n)) => Seq.fill(n.toInt)(v) }
+        .flatten.sorted
+      def exact(p: Double) =
+        expanded(math.ceil(math.round(p * expanded.size * 1e7) / 1e7).toInt - 1)
+      val counted = sketch(got._3)
+      val answers = if (counted.isEmpty) Nil else ranks.map(counted.getQuantile)
+      Prop(got._1.sameElements(got._2)) :| s"unit weights change the bytes over $parts partitions" &&
+        Prop(answers == (if (expanded.isEmpty) Nil else ranks.map(exact))) :|
+          s"weighted ranks $answers over ${expanded.size} expanded values"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(20)
+      .withInitialSeed(Seed(20261020L)).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("madOutliers/winsorize preAggregate arm holds the oracle band contracts") {
@@ -221,7 +264,7 @@ class SketchOpsSpec extends SparkSpec {
     // bands the registered *_approx twins pin (and the plan must
     // actually run the weighted aggregate, not silently fall back)
     val mad = Profile.madOutliers(li, "l_quantity", Seq("l_returnflag"),
-      k = 1.5, approx = true, preAggregate = true)
+      k = 1.5, arm = Profile.Arm.WeightedSketch)
     assert(mad.queryExecution.optimizedPlan.toString
       .contains("kll_sketch_weighted_agg"))
     val exMed = li.groupBy("l_returnflag").agg(
@@ -233,7 +276,7 @@ class SketchOpsSpec extends SparkSpec {
       .as[Boolean].collect()
     assert(medChecks.forall(identity), medChecks.mkString(","))
     val w = Profile.winsorize(li, "l_quantity", Seq("l_returnflag"),
-      lo = 0.05, hi = 0.95, approx = true, preAggregate = true)
+      lo = 0.05, hi = 0.95, arm = Profile.Arm.WeightedSketch)
     assert(w.queryExecution.optimizedPlan.toString
       .contains("kll_sketch_weighted_agg"))
     val exB = li.groupBy("l_returnflag").agg(
@@ -343,7 +386,7 @@ class SketchOpsSpec extends SparkSpec {
 
   test("sketch agg prettyName survives an unresolved child (r13 ADVICE)") {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    assert(graft.functions.KllSketchAgg(UnresolvedAttribute("x"), 800)
+    assert(graft.functions.KllSketchAgg(UnresolvedAttribute("x"))
       .prettyName === "kll_sketch_agg")
     assert(graft.functions.ThetaSketchAgg(UnresolvedAttribute("x"), 12)
       .prettyName === "theta_sketch_agg")
@@ -408,19 +451,19 @@ class SketchOpsSpec extends SparkSpec {
     // error (±1% of N per boundary → ±2% per bin, doubled for slack)
     val n = 40000
     val df = (1 to n).map(_.toDouble).toDF("v")
-    val got = Profile.equidepth(df, "v", bins = 4, approx = true)
+    val got = Profile.equidepth(df, "v", bins = 4, arm = Profile.Arm.Sketch)
       .orderBy("bin").as[(Int, Long, Double, Double)].collect()
     assert(got.map(_._1).toSeq === Seq(0, 1, 2, 3))
     assert(got.map(_._2).sum === n.toLong)
     got.foreach { case (b, cnt, _, _) =>
       assert(math.abs(cnt - n / 4) <= n * 0.04, s"bin $b holds $cnt of $n")
     }
-    // preAggregate arm (r15): same contract on a DUPLICATE-heavy column
+    // weighted sketch arm (r15): same contract on a DUPLICATE-heavy column
     // (each of 400 values appears 100×) — the weighted sketch holds the
     // per-value counts exactly, so bins balance within the same bands
     val dup = (1 to n).map(i => (i % 400).toDouble).toDF("v")
-    val gotW = Profile.equidepth(dup, "v", bins = 4, approx = true,
-      preAggregate = true)
+    val gotW = Profile.equidepth(dup, "v", bins = 4,
+      arm = Profile.Arm.WeightedSketch)
       .orderBy("bin").as[(Int, Long, Double, Double)].collect()
     assert(gotW.map(_._2).sum === n.toLong)
     gotW.foreach { case (b, cnt, _, _) =>

@@ -63,12 +63,9 @@ bench() { # $1 out
   # heavy-tail rep boost (r17): queries with base median > 1.5 s get 7
   # pooled reps — the >1.5 s tail carried the r16 interleaved p90
   # spread of 0.635 (prev-head Bench predates the env and ignores it)
-  # BENCH_SIDE routed to /tmp during the campaign: the default repo-root
-  # copy would dirty the tree after the first run and poison every later
-  # run's head_sha stamp (the merge tools reject sha mismatches); the
-  # committed BENCH_SIDE.json is copied from the fresh run at the end
+  # the committed BENCH_SIDE.json is copied from the fresh run at the end
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_OUT=$1 \
-    SPARK_GRAFT_BENCH_SIDE=$1.side SPARK_GRAFT_BENCH_HEAVY_REPS=7 \
+    SPARK_GRAFT_BENCH_HEAVY_REPS=7 \
     java $JOPTS $COMMON -cp "$CP" graft.Bench \
     >> /tmp/r${R}_bench_stdout.log 2>> /tmp/r${R}_bench_stderr.log
   log "bench done rc=$? out=$1"
