@@ -138,7 +138,7 @@ object Plans {
       val out = rest.lift(1).getOrElse("PLANS.md")
       withSession(4) { spark =>
         val sections = headline.map { name =>
-          s"## $name\n\n```\n${explain(spark, name, sfDir)}```\n"
+          s"## $name\n\n```\n${stable(explain(spark, name, sfDir))}```\n"
         }
         val doc =
           s"""# PLANS — physical plans of the headline queries
@@ -161,6 +161,23 @@ object Plans {
   private def explain(spark: SparkSession, name: String, sfDir: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution
       .explainString(ExplainMode.fromString("formatted"))
+
+  /** `plan` with its run-specific tokens made stable, so two runs on
+    * one commit write the same PLANS.md: expression, plan and RDD ids
+    * renumbered in first-seen order (a `#n` still links an attribute
+    * to the operator that produced it), and lambda hashes, the DPP
+    * layout fingerprint and call-site line numbers dropped. */
+  private[graft] def stable(plan: String): String = {
+    val fixed = Seq(
+      """\$\$Lambda\$[^\s,)\]]*""" -> """\$\$Lambda""",
+      """graft_dpp_[0-9a-f]+""" -> "graft_dpp_<fp>",
+      """(\.scala):\d+""" -> "$1"
+    ).foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
+    Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(RDD\[)(\d+)""").foldLeft(fixed) { (s, re) =>
+      val ids = scala.collection.mutable.HashMap.empty[String, Int]
+      re.r.replaceAllIn(s, m => m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size))
+    }
+  }
 
   private def withSession(cores: Int)(body: SparkSession => Unit): Unit = {
     val spark = GraftSession.local(cores)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Timing.{arr, obj, str}
+
 /** One-order-of-magnitude scale probe: replicate the sf0.1 tables ~10×
   * with deterministic perturbation, then run the stress pack under a
   * cluster-like `spark.sql.shuffle.partitions=200` and report
@@ -38,7 +40,9 @@ import org.apache.spark.sql.functions._
   * Usage: StressSmoke [srcSfDir] [workDir]; generation is skipped if
   * workDir already holds the scaled tables. Run with
   * SPARK_GRAFT_STRESS_REPLICAS=1 for the same-methodology 1× baseline
-  * side of the ratio artifact.
+  * side of the ratio artifact. The artifact goes to
+  * SPARK_GRAFT_BENCH_OUT (default /tmp/graft_stress.json) and
+  * SPARK_GRAFT_ONLY=q_a,q_b runs a subset.
   */
 object StressSmoke {
   import graft.operators.{Dedup, Profile, Similarity}
@@ -438,13 +442,10 @@ object StressSmoke {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_sf1shape"
     val reps = sys.env.getOrElse("SPARK_GRAFT_STRESS_REPLICAS", "10").toInt
-    val timingReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // cluster-like shuffle width by default: validates that nothing
-    // depends on the bench's cozy 32 partitions. Overridable so the
-    // grower-geometry A/B (r16 VERDICT item 6) can re-measure the same
-    // queries at the bench width and separate fixed per-stage task
-    // overhead from actual scan/shuffle growth.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_STRESS_SHUFFLE", "200").toInt
+    // cluster-like shuffle width: validates that nothing depends on the
+    // bench's cozy 32 partitions (COVERAGE.md's x10 grower audit
+    // measured what the width costs the sub-second queries)
+    val shuffleParts = 200
     val spark = GraftSession.local(32, shuffleParts)
     if (!new java.io.File(s"$work/lineitem.parquet").exists()) {
       val t0 = System.nanoTime()
@@ -452,50 +453,35 @@ object StressSmoke {
       println(f"generated ${reps}x tables in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     spark.range(1000000).selectExpr("sum(id)").collect() // session warmup
-    val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY")
-      .map(_.split(",").toSet).getOrElse(stressQueries.toSet)
-    // a query that throws is recorded, not fatal: the JSON carries a
-    // "failed" array so downstream tooling (stress_merge.py) can reject
-    // a partial run without grepping logs — a crashed run's survivors
-    // must never min-merge into the round artifact as if they were clean.
-    // BOTH failure paths feed it: construction errors (the catch) AND
-    // per-rep runtime errors, which sampleNoopWrite swallows into its
-    // `ok` flag — dropping the flag would let an error's near-instant
-    // duration masquerade as a fast measurement (Bench checks it too).
-    val failed = scala.collection.mutable.ListBuffer[String]()
-    val results = stressQueries.filter(only).flatMap { name =>
-      val fn = overrides.getOrElse(name, SparkEntry.queries(name))
-      try {
-        // out_rows rides on the timed writes themselves (Observation
-        // over the noop sink) — no post-hoc fn(...).count() that would
-        // re-execute every query once more per run and could fail a
-        // query whose timed reps all succeeded. A ratio ≫ replicas is
-        // only a scale-killer when the OUTPUT did not also grow
-        // (q_bucket_rollup emits 10x the groups at 10x): out_rows on
-        // both sides lets stress_merge derive a per-output-row ratio so
-        // that distinction is in the artifact, not in prose.
-        val m = Timing.sampleNoopWrite(name, fn, spark, work, timingReps,
-          observeRows = true)
-        if (m.ok) Some(name -> (m.medianSec, m.rows))
-        else { failed += name; None }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"$name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          failed += name
-          None
-      }
+    // out_rows rides on the timed writes themselves (Observation over
+    // the noop sink). A ratio >> replicas is only a scale-killer when
+    // the OUTPUT did not also grow (q_bucket_rollup emits 10x the groups
+    // at 10x): out_rows on both sides lets stress_merge derive a
+    // per-output-row ratio, so that distinction is in the artifact. The
+    // "failed" array lets stress_merge.py reject a partial run: a
+    // crashed run's survivors must never min-merge into the round
+    // artifact as if they were clean.
+    val run = Timing.runEach(
+      stressQueries.map(n => n -> overrides.getOrElse(n, SparkEntry.queries(n))),
+      sys.env.get("SPARK_GRAFT_ONLY")) { (_, fn) =>
+      Timing.sampleNoopWrite(fn, spark, work, Timing.Reps, observeRows = true)
     }
-    val qs = results.map { case (n, (v, _)) => s"\"" + n + "\":" + v }.mkString("{", ",", "}")
-    val rs = results.map { case (n, (_, r)) => s"\"" + n + "\":" + r }.mkString("{", ",", "}")
-    val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"stress_total","value":${results.map(_._2._1).sum},"unit":"sec","queries":$qs,"out_rows":$rs,"failed":$fl,"sf":"${src}x$reps","shuffle_partitions":$shuffleParts,"head_sha":"${Timing.headSha()}"}"""
-    println(json)
-    sys.env.get("SPARK_GRAFT_STRESS_OUT").foreach { out =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    val head = Seq("metric" -> str("stress_total"),
+      "value" -> run.results.map(_._2.medianSec).sum.toString, "unit" -> str("sec"))
+    val failed = "failed" -> arr(run.failures.map(_._1))
+    val sf = "sf" -> str(s"${src}x$reps")
+    // the full JSON goes to the artifact file and one compact line to
+    // stdout, as Bench does
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_stress.json")
+    Timing.write(out, obj(head ++ Seq(
+      "queries" -> obj(run.results.map { case (n, m) => n -> m.medianSec.toString }),
+      "out_rows" -> obj(run.results.map { case (n, m) => n -> m.rows.toString }),
+      failed, sf, "shuffle_partitions" -> shuffleParts.toString,
+      "head_sha" -> str(Timing.headSha()))))
+    println(obj(head ++ Seq("n" -> run.results.size.toString, sf,
+      "queries_file" -> str(out), failed)))
     spark.stop()
     // rc mirrors the artifact's "failed" array (same rationale as Bench)
-    if (failed.nonEmpty) sys.exit(1)
+    if (run.failures.nonEmpty) sys.exit(1)
   }
 }

@@ -1,5 +1,7 @@
 package graft
-import java.nio.file.{Files, Paths}
+
+import graft.Timing.{obj, str}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,43 +9,18 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-    // Optional subset for local iteration (mirrors StressSmoke's ONLY):
-    // SPARK_GRAFT_VERIFY_ONLY=q_a,q_b runs just those queries.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only.fold(SparkEntry.queries)(ks => SparkEntry.queries.filter(kv => ks(kv._1)))
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
-      }
+    val run = Timing.runEach(SparkEntry.queries.toSeq, sys.env.get("SPARK_GRAFT_ONLY")) {
+      (name, fn) => fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Timing.write(s"$outDir/oracle_sql.json",
+      obj(SparkEntry.oracleSql.toSeq.map { case (k, v) => k -> str(v) }))
     // a query that errors before producing output must surface as a
     // recorded failure, not silently go missing from the dump (a
     // downstream correctness artifact built from the dirs alone would
     // read as a clean run) — and the exit code must agree
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
+    Timing.write(s"$outDir/verify_errors.json",
+      obj(run.failures.map { case (k, v) => k -> str(v) }))
     spark.stop()
-    if (errors.nonEmpty) sys.exit(1)
+    if (run.failures.nonEmpty) sys.exit(1)
   }
 }

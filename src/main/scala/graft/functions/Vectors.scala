@@ -64,22 +64,8 @@ object Vectors {
     }: _*)
   }
 
-  /** Composed-builtins dot (interpreter path, reference semantics). */
-  def dotComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** ‖a‖₂ */
-  def norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
-
   /** cosine(a,b) = a·b / (‖a‖‖b‖) — fused single-pass codegen
     * expression ([[CosineSim]]); same index-order accumulation as the
     * zip_with/aggregate composition it replaced. */
   def cosine(a: Column, b: Column): Column = CosineSim(a, b)
-
-  /** The composed-builtins formulation (interpreter-evaluated
-    * higher-order functions) — kept as the reference semantics the
-    * fused expression is tested against. */
-  def cosineComposed(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 }

@@ -518,7 +518,7 @@ class PlanSpec extends SparkSpec {
       .filter(col("ia") < col("ib")).limit(5000)
     val diff = pairs.select(
       graft.functions.Vectors.cosine(col("va"), col("vb")).as("fused"),
-      graft.functions.Vectors.cosineComposed(col("va"), col("vb")).as("composed"))
+      ComposedVectors.cosine(col("va"), col("vb")).as("composed"))
       .filter(col("fused") =!= col("composed")).count()
     assert(diff === 0)
   }
@@ -553,7 +553,7 @@ class PlanSpec extends SparkSpec {
     val r = ragged.select(
       graft.functions.Vectors.cosine(col("a"), col("b")).as("c"),
       graft.functions.Vectors.dot(col("a"), col("b")).as("d"),
-      graft.functions.Vectors.dotComposed(col("a"), col("b")).as("dc")).collect()(0)
+      ComposedVectors.dot(col("a"), col("b")).as("dc")).collect()(0)
     assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2), r.toString)
     // fixed-dim folds: a vector SHORTER than the declared dim throws a
     // named error on every path (the composed folds' element_at dies

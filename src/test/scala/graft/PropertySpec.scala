@@ -121,7 +121,9 @@ class PropertySpec extends SparkSpec {
     val bounds = Seq("below" -> Seq.empty,
       "above" -> Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1"))
-    try for (aqe <- Seq(true, false); (layout, lc) <- layouts; (bound, bc) <- bounds) {
+    // SQLConf warns on every set that minPartitionNum is deprecated
+    try QuietLogs("org.apache.spark.sql.internal.SQLConf")(
+        for (aqe <- Seq(true, false); (layout, lc) <- layouts; (bound, bc) <- bounds) {
       val confs = (lc ++ bc) :+ ("spark.sql.adaptive.enabled" -> aqe.toString)
       val prop = Prop.forAllNoShrink(rowsGen, keysGen, inputGen) { case (rows, keys, (parts, shape)) =>
         withConfs(confs: _*) {
@@ -142,7 +144,7 @@ class PropertySpec extends SparkSpec {
       val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(8)
         .withInitialSeed(Seed(20261019L)).withWorkers(1), prop)
       assert(res.passed, s"aqe=$aqe $layout bound $bound: ${res.status}")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+    }) finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
   test("hammingPairs64 banding finds EXACTLY the brute-force pair set") {

@@ -305,7 +305,7 @@ class ScaleOpsSpec extends SparkSpec {
       .filter(col("ia") < col("ib")).limit(2000)
     val diff = pairs.select(
       graft.functions.Vectors.dot(col("va"), col("vb")).as("fused"),
-      graft.functions.Vectors.dotComposed(col("va"), col("vb")).as("composed"))
+      ComposedVectors.dot(col("va"), col("vb")).as("composed"))
       .filter(col("fused") =!= col("composed")).count()
     assert(diff === 0)
     val sql = spark.sql(

@@ -9,6 +9,10 @@ import org.apache.spark.sql.streaming.Trigger
   * synchronously) as through the batch engine. */
 class StreamingSpec extends SparkSpec {
 
+  /** Logs "terminated with error" and the stack trace when a stream
+    * fails; the guard cases below fail theirs on purpose. */
+  private val StreamFailure = "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution"
+
   test("windowedAgg: streaming result == batch result on the events table") {
     val batch = StreamingOps.windowedAgg(Tables(spark, sf, "events"))
       .agg(sum("n"), count(lit(1))).collect()(0)
@@ -380,9 +384,9 @@ class StreamingSpec extends SparkSpec {
       in2.toDF().toDF("doc_id", "text"), "doc_id", "text",
       ledgerDir, tmp.resolve("ckpt2").toString, emit = _ => ())
     in2.addData((3L, "gamma"))
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+    val e = QuietLogs(StreamFailure)(intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q2.processAllAvailable()
-    }
+    })
     q2.stop()
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else String.valueOf(t.getMessage) +: messages(t.getCause)
@@ -605,9 +609,9 @@ class StreamingSpec extends SparkSpec {
       in.toDF().toDF("key", "v", "u"), Seq("key"), "v", "u",
       stateDir, tmp.resolve("ckpt").toString, emit = _ => ())
     in.addData(("b", 3.0, 3L))
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+    val e = QuietLogs(StreamFailure)(intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q2.processAllAvailable()
-    }
+    })
     q2.stop()
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else String.valueOf(t.getMessage) +: messages(t.getCause)
@@ -640,9 +644,9 @@ class StreamingSpec extends SparkSpec {
       in.toDF().toDF("key", "v", "u"), Seq("key"), "v", "u",
       stateDir, tmp.resolve("ckpt").toString, emit = _ => ())
     in.addData(("b", 3.0, 3L))
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+    val e = QuietLogs(StreamFailure)(intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q2.processAllAvailable()
-    }
+    })
     q2.stop()
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else String.valueOf(t.getMessage) +: messages(t.getCause)
@@ -684,9 +688,9 @@ class StreamingSpec extends SparkSpec {
     in.addData((1L, "alpha"), (2L, "beta"));  q.processAllAvailable()
     in.addData((3L, "alpha"), (4L, "gamma")); q.processAllAvailable()
     in.addData((5L, "delta"))
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+    QuietLogs(StreamFailure)(intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.processAllAvailable()
-    }
+    })
     q.stop()
     // batch 2's own ledger dir was written before the crash — the
     // exact window under test
@@ -728,9 +732,9 @@ class StreamingSpec extends SparkSpec {
       in2.toDF().toDF("key", "v", "u"), Seq("key"), "v", "u",
       stateDir, tmp.resolve("ckpt2").toString, emit = _ => ())
     in2.addData(("b", 3.0, 3L))
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+    val e = QuietLogs(StreamFailure)(intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q2.processAllAvailable()
-    }
+    })
     q2.stop()
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else String.valueOf(t.getMessage) +: messages(t.getCause)

@@ -10,7 +10,7 @@ each input run's own total is preserved in "runs" for the contention
 record.
 
 Rejects: unparseable files, subset runs (metric "subset_total" /
-an "only" field — a SPARK_GRAFT_BENCH_ONLY run is not a full bench),
+an "only" field — a SPARK_GRAFT_ONLY run is not a full bench),
 runs with a non-empty "failures" array, and runs whose query sets
 disagree (a partial run min-merged into a full one would understate
 the total).

@@ -36,7 +36,10 @@ JOPTS=$(for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do \
   echo --add-opens java.base/$p=ALL-UNNAMED; done)
 COMMON="-Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx32g"
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+# src/main/resources carries log4j2.properties (WARN on stderr) and the
+# DataSourceRegister services file; `sbt compile` does not copy it
+# into target/, so without it every main logs at Spark's INFO default
+CP="target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*"
 # x100 spot-probe set: the prior round's probe list + that round's new
 # scale-relevant queries (keep ratios comparable round over round)
 PROBES="q_a8_percentiles,q_bucket_join,q_bucket_rollup,q_decontaminate_semantic,q_dedup_cluster_apply,q_dedup_lines,q_dedup_minhash,q_dedup_minhash_inc,q_domain_shift,q_dpp_dayslice,q_dpp_fullscan,q_dsir_select,q_dsir_select_approx,q_dsir_sketch_raw,q_er_match,q_f_json,q_interval_join,q_j2_nearest,q_kmeans,q_kmeans_large,q_lm_score,q_mad_outliers,q_mad_outliers_approx,q_mad_sketch_raw,q_mad_plain_raw,q_mm_neardup,q_quality_gate,q_sample_mixture,q_sample_temp,q_session_window,q_shuffle_order,q_span_dedup,q_text_stats,q_tpch_q1,q_tpch_q12,q_tpch_q4,q_hll_rollup,q_agg_incremental,q_theta_overlap,q_key_skew,q_join_size,q_equidepth,q_text_pmi,q_kll_rollup,q_dedup_keep_best,q_split_leakfree,q_split_contamination,q_agg_state_full,q_theta_novelty,q_join_size_bigint,q_join_size_str,q_mad_outliers_auto,q_winsorize_auto,q_equidepth_auto"
@@ -46,37 +49,33 @@ log() { echo "$(date -u +%H:%M:%S) $1" >> "$LOG"; }
 
 stress() { # $1 replicas  $2 workdir  $3 out  $4 only(optional)
   log "stress start replicas=$1 out=$3"
-  if [ -n "${4:-}" ]; then
-    SPARK_GRAFT_STRESS_ONLY="$4" SPARK_GRAFT_STRESS_REPLICAS=$1 SPARK_GRAFT_STRESS_OUT=$3 \
-      java $JOPTS $COMMON -cp "$CP" graft.StressSmoke /root/testdata/sf0.1 "$2" \
-      >> /tmp/r${R}_stress_stdout.log 2>> /tmp/r${R}_stress_stderr.log
-  else
-    SPARK_GRAFT_STRESS_REPLICAS=$1 SPARK_GRAFT_STRESS_OUT=$3 \
-      java $JOPTS $COMMON -cp "$CP" graft.StressSmoke /root/testdata/sf0.1 "$2" \
-      >> /tmp/r${R}_stress_stdout.log 2>> /tmp/r${R}_stress_stderr.log
-  fi
+  SPARK_GRAFT_ONLY="${4:-}" SPARK_GRAFT_STRESS_REPLICAS=$1 SPARK_GRAFT_BENCH_OUT=$3 \
+    java $JOPTS $COMMON -cp "$CP" graft.StressSmoke /root/testdata/sf0.1 "$2" \
+    >> /tmp/r${R}_stress_stdout.log 2>> /tmp/r${R}_stress_stderr.log
   log "stress done rc=$? out=$3"
 }
 
 bench() { # $1 out
   log "bench start out=$1"
-  # heavy-tail rep boost (r17): queries with base median > 1.5 s get 7
-  # pooled reps — the >1.5 s tail carried the r16 interleaved p90
-  # spread of 0.635 (prev-head Bench predates the env and ignores it)
+  # the sampling policy is Timing's constants: 3 reps, and a query
+  # whose median exceeds 1.5 s topped up to 7 pooled reps
   # the committed BENCH_SIDE.json is copied from the fresh run at the end
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_OUT=$1 \
-    SPARK_GRAFT_BENCH_HEAVY_REPS=7 \
     java $JOPTS $COMMON -cp "$CP" graft.Bench \
     >> /tmp/r${R}_bench_stdout.log 2>> /tmp/r${R}_bench_stderr.log
   log "bench done rc=$? out=$1"
 }
 
 benchPrev() { # $1 out — PRIOR-round-head bench from the detached
-  # worktree, cwd inside it so Timing.headSha stamps the prior sha
+  # worktree, cwd inside it so Timing.headSha stamps the prior sha.
+  # Heads before the shared contract runner read their top-up from
+  # SPARK_GRAFT_BENCH_HEAVY_REPS (default: no top-up); passing 7 keeps
+  # the A/B's sampling the same on both sides
   log "bench(prev $PREV_SHA) start out=$1"
   (cd "$PREV_WT" && \
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_OUT=$1 \
-    java $JOPTS $COMMON -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench) \
+    SPARK_GRAFT_BENCH_HEAVY_REPS=7 \
+    java $JOPTS $COMMON -cp "$CP" graft.Bench) \
     >> /tmp/r${R}_bench_stdout.log 2>> /tmp/r${R}_bench_stderr.log
   log "bench(prev) done rc=$? out=$1"
 }
