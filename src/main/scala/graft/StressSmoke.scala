@@ -470,8 +470,6 @@ object StressSmoke {
       "value" -> run.results.map(_._2.medianSec).sum.toString, "unit" -> str("sec"))
     val failed = "failed" -> arr(run.failures.map(_._1))
     val sf = "sf" -> str(s"${src}x$reps")
-    // the full JSON goes to the artifact file and one compact line to
-    // stdout, as Bench does
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_stress.json")
     Timing.write(out, obj(head ++ Seq(
       "queries" -> obj(run.results.map { case (n, m) => n -> m.medianSec.toString }),
